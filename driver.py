@@ -194,7 +194,8 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
             f.write(json.dumps(df.schema.jsonValue()))
         print(json.dumps({"snapshot_id": snap.snapshot_id, **summary}))
     elif args.cmd == "decode":
-        from pyspark.sql import functions as F
+        import datetime
+
         from pyspark.sql.types import StructType
 
         from parquet2csv_spark.operators import decode_table
@@ -225,31 +226,18 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
         # --decode-job-id.
         job_chunks = os.path.join(args.chunks, "chunks")
         if os.path.isdir(job_chunks):
-            from parquet2csv_spark.plans.lineage import EncodeJob
+            from parquet2csv_spark.plans.lineage import EncodeJob, generations
 
-            try:
-                lineage = spark.read.option("mergeSchema", True).parquet(
-                    os.path.join(args.chunks, "lineage")
-                )
-            except Exception:
-                # a run that crashed before its first lineage append leaves
-                # chunks/ without lineage/ — route into the clean error
-                # path below instead of a raw AnalysisException
-                lineage = spark.createDataFrame(
-                    [], "snapshot_id string, job_id string, status string, "
-                        "committed_at timestamp"
-                )
-            done = lineage.filter(F.col("status") == "done")
-            if args.snapshot_id:
-                done = done.filter(F.col("snapshot_id") == args.snapshot_id)
-            if args.decode_job_id:
-                done = done.filter(F.col("job_id") == args.decode_job_id)
-            latest = (
-                done.orderBy(F.col("committed_at").desc())
-                .select("snapshot_id", "job_id")
-                .first()
-            )
-            if latest is None:
+            # one bounded read, one row per generation; a run that crashed
+            # before its first lineage append leaves chunks/ without
+            # lineage/ — no generations, the clean error path below
+            done = [
+                g for g in generations(spark, args.chunks)
+                if g["status"] == "done"
+                and (not args.snapshot_id or g["snapshot_id"] == args.snapshot_id)
+                and (not args.decode_job_id or g["job_id"] == args.decode_job_id)
+            ]
+            if not done:
                 print(json.dumps({
                     "error": "no committed lineage matches the requested "
                              "snapshot-id/job-id in this out_dir",
@@ -257,6 +245,9 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
                     "job_id": args.decode_job_id,
                 }))
                 return 3
+            latest = max(
+                done, key=lambda g: g["committed_at"] or datetime.datetime.min
+            )
             job = EncodeJob(
                 spark, args.chunks,
                 snapshot_id=latest["snapshot_id"], job_id=latest["job_id"],

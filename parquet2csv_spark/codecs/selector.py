@@ -239,7 +239,13 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None, profile: str | None 
     # large blobs: measure every candidate on the same contiguous prefix
     # (big enough for the transport's real match window) and compare the
     # measured sizes directly — fixed payloads (symbol table, dict) are
-    # negligible at this sample size, so no extrapolation is needed
+    # negligible at this sample size, so no extrapolation is needed.
+    # Representativeness trade-off: a contiguous prefix keeps the long
+    # cross-row matches the transport's window sees, which the stride
+    # sample (scattered rows) cannot; but on a chunk whose content shifts
+    # along its length (sorted or clustered data) the prefix can
+    # misrepresent the rest and pick a larger codec. That costs size only,
+    # never correctness: every spec decodes exactly.
     approx_bytes = st.avg_len * st.n
     if approx_bytes >= _LARGE_BLOB_BYTES:
         filled_all = arr.fill_null("") if arr.null_count else arr

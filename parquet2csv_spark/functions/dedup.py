@@ -195,7 +195,15 @@ def ngram_jaccard_on_pairs(
     (~6 exchanges, and the shingle explode itself evaluated 3×); this is
     one aggregation plus two joins against the SAME aggregated subtree
     (the second exchange is plan-reused). Counts are identical integers,
-    so round(jaccard, 6) is bit-identical."""
+    so round(jaccard, 6) is bit-identical.
+
+    Precondition: ``sh`` holds DISTINCT (key, shingle) rows, as
+    :func:`shingles` emits them. Set sizes come from ``collect_set``, so a
+    caller passing duplicate rows gets set semantics, not the multiset
+    counts the exploded-join form used. Memory: each key's whole shingle
+    set is gathered into ONE row (and joined in twice per pair), so
+    per-row memory grows with the largest document's distinct-shingle
+    count — cap document length upstream for very large documents."""
     sets = sh.groupBy("key").agg(F.collect_set("shingle").alias("_sset"))
     sa = sets.alias("sa")
     sb = sets.alias("sb")

@@ -20,6 +20,23 @@ Iceberg's atomic append is the production drop-in):
      so ``chunks()`` reads exactly one committed run per group — the
      min(run_id) semi-join below — and decode equality, not byte identity,
      is the contract (verified in tests).
+
+Resume state is read once per run. A driver-side Hadoop ``FileSystem``
+probe of ``<out>/lineage`` comes first and launches no Spark job: with no
+lineage yet, a fresh encode plans no lineage read at all. Otherwise one
+bounded aggregate — one row per (snapshot, job, status, params)
+generation, never one per group — is collected, and every resume check
+(digest migration, params mismatch, legacy params) is evaluated on those
+rows in the driver. The done-groups anti-join is always planned and reads
+lineage lazily, when the chunk write runs: with no lineage the done set is
+an empty local relation, which the optimizer's empty-relation propagation
+drops from the join, so a fresh encode still runs no lineage job.
+
+Fail-loud rule: lineage counts as empty in exactly two cases — the dir is
+missing, or it holds only ``_``/``.``-prefixed entries (e.g. a crashed
+append's ``_temporary/``). Any other read error (a corrupt or unreadable
+lineage file) raises: treating it as "nothing committed" would re-encode
+every group as a second generation into the same out_dir.
 """
 
 from __future__ import annotations
@@ -27,9 +44,11 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.encode import (
+    CHUNKS_DDL,
     DEFAULT_CHUNK_BYTES,
     DEFAULT_CHUNK_ROWS,
     encode_salted,
@@ -42,6 +61,50 @@ LINEAGE_DDL = (
     "wall_ms bigint, codecs string, status string, committed_at timestamp, "
     "params string"
 )
+
+
+def _stored_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage files under ``out_dir``, or None when the lineage counts
+    as empty under the fail-loud rule (module docstring). The probe is
+    driver-side Hadoop ``FileSystem`` calls only: URI-safe, no Spark job.
+    The explicit schema reads a dir mixing pre-params and post-params
+    files with ``params`` null for the old rows, and skips the
+    footer-sampling job schema inference would run."""
+    path = f"{out_dir.rstrip('/')}/lineage"
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(hpath) or all(
+        st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(hpath)
+    ):
+        return None
+    return spark.read.schema(LINEAGE_DDL).parquet(path)
+
+
+def _empty(spark: SparkSession, ddl: str) -> DataFrame:
+    """A zero-row DataFrame over an empty local relation: zero partitions,
+    so reads of it launch no tasks (``createDataFrame`` of an empty list
+    would be a Python RDD over ``defaultParallelism`` partitions)."""
+    return spark.range(1).where(F.lit(False)).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(ddl).fields
+    ])
+
+
+def generations(spark: SparkSession, out_dir: str) -> list[Row]:
+    """One row per (snapshot_id, job_id, status, params) generation in
+    ``out_dir``'s lineage, with its latest ``committed_at``. Bounded by
+    the number of generations, never by the number of groups. With no
+    lineage it plans no query at all: even an empty one costs a cold
+    session seconds of planning."""
+    lineage = _stored_lineage(spark, out_dir)
+    if lineage is None:
+        return []
+    return (
+        lineage.groupBy("snapshot_id", "job_id", "status", "params")
+        .agg(F.max("committed_at").alias("committed_at"))
+        .collect()
+    )
 
 
 class EncodeJob:
@@ -97,15 +160,10 @@ class EncodeJob:
     # ------------------------------------------------------------ lineage io
 
     def lineage(self) -> DataFrame:
-        try:
-            # mergeSchema: a lineage dir mixing pre-params and post-params
-            # files must not drop the params column depending on which
-            # file's footer Spark happens to sample
-            return self.spark.read.option("mergeSchema", True).parquet(
-                f"{self.out_dir}/lineage"
-            )
-        except Exception:
-            return self.spark.createDataFrame([], LINEAGE_DDL)
+        """Empty only under the fail-loud rule: an unreadable lineage file
+        raises when the read runs."""
+        stored = _stored_lineage(self.spark, self.out_dir)
+        return _empty(self.spark, LINEAGE_DDL) if stored is None else stored
 
     def done_groups(self) -> DataFrame:
         return (
@@ -121,42 +179,68 @@ class EncodeJob:
 
     # --------------------------------------------------------------- running
 
-    def _check_digest_migration(self) -> None:
-        """Refuse to resume across a manifest-digest format change.
+    def _check_resume(self, gens: list[Row]) -> None:
+        """Evaluate every resume check on the per-generation rows, in order.
 
-        The catalog embeds a version in every snapshot id (catalog.py
-        DIGEST_VERSION). When the current id carries the current version but
-        this job_id's lineage holds rows whose ids don't, those rows were
-        committed under an older digest format: the SAME unchanged input now
-        hashes to a DIFFERENT id, so a silent resume would see zero done
-        groups and re-encode every group into this out_dir — a second
-        generation under identical group keys. Fail with a migration message
-        instead. (Hand-assigned snapshot ids skip the check.)
+        1. Digest migration. The catalog embeds a version in every snapshot
+           id (catalog.py DIGEST_VERSION). When the current id carries the
+           current version but this job_id's lineage holds done rows whose
+           ids don't, those rows were committed under an older digest
+           format: the SAME unchanged input now hashes to a DIFFERENT id,
+           so a silent resume would see zero done groups and re-encode
+           every group into this out_dir — a second generation under
+           identical group keys. Hand-assigned snapshot ids skip the check.
+        2. Params mismatch: a different group_factor/chunk_bytes salts into
+           different group keys (see ``__init__``).
+        3. Legacy params: rows written before params tracking carry no
+           record of their salting config; defaults have changed since
+           (group_factor 2 → 1), so silently resuming would re-encode those
+           groups under NEW salted keys while chunks() still returns the
+           old committed groups → duplicate rows. The caller must assert
+           the legacy params match the current ones to proceed.
         """
         from ..sources.catalog import DIGEST_VERSION
 
         prefix = f"{DIGEST_VERSION}-"
-        if not self.snapshot_id.startswith(prefix):
-            return
-        stale = (
-            self.lineage()
-            .filter(
-                (F.col("job_id") == self.job_id)
-                & (F.col("status") == "done")
-                & ~F.col("snapshot_id").startswith(prefix)
+        if self.snapshot_id.startswith(prefix):
+            stale = sorted(
+                g["snapshot_id"] for g in gens
+                if g["job_id"] == self.job_id and g["status"] == "done"
+                and g["snapshot_id"] is not None
+                and not g["snapshot_id"].startswith(prefix)
             )
-            .select("snapshot_id")
-            .limit(1)
-            .collect()
+            if stale:
+                raise RuntimeError(
+                    f"lineage for job_id={self.job_id!r} contains snapshot ids in a "
+                    f"pre-{DIGEST_VERSION} manifest-digest format (e.g. "
+                    f"{stale[0]!r}); the digest inputs have changed "
+                    f"since, so resume state for this out_dir cannot be trusted — "
+                    f"encode into a new out_dir (or new job_id), or decode the old "
+                    f"generation with the tooling that wrote it"
+                )
+        prior = [
+            g for g in gens
+            if g["snapshot_id"] == self.snapshot_id and g["job_id"] == self.job_id
+        ]
+        mismatched = sorted(
+            g["params"] for g in prior
+            if g["params"] is not None and g["params"] != self.params
         )
-        if stale:
+        if mismatched:
             raise RuntimeError(
-                f"lineage for job_id={self.job_id!r} contains snapshot ids in a "
-                f"pre-{DIGEST_VERSION} manifest-digest format (e.g. "
-                f"{stale[0]['snapshot_id']!r}); the digest inputs have changed "
-                f"since, so resume state for this out_dir cannot be trusted — "
-                f"encode into a new out_dir (or new job_id), or decode the old "
-                f"generation with the tooling that wrote it"
+                f"lineage for (snapshot={self.snapshot_id}, job={self.job_id}) "
+                f"was committed with different salting/chunking params "
+                f"({mismatched[0]!r} != {self.params!r}) — resume "
+                f"would duplicate groups; use a new job_id or the original params"
+            )
+        legacy = any(g["params"] is None for g in prior)
+        if legacy and self.legacy_params != self.params:
+            raise RuntimeError(
+                f"lineage for (snapshot={self.snapshot_id}, job={self.job_id}) "
+                f"contains rows without recorded salting/chunking params — "
+                f"cannot prove a resume is duplicate-free. Pass "
+                f"legacy_params={self.params!r} (the params string the "
+                f"original run used) to resume, or use a new job_id"
             )
 
     def run(self, df: DataFrame, only_groups_like: str | None = None) -> dict:
@@ -169,40 +253,7 @@ class EncodeJob:
         """
         run_id = uuid.uuid4().hex[:12]
         t0 = time.time()
-        self._check_digest_migration()
-        prior = self.lineage().filter(
-            (F.col("snapshot_id") == self.snapshot_id)
-            & (F.col("job_id") == self.job_id)
-        )
-        if "params" in prior.columns:
-            mismatched = prior.filter(
-                F.col("params").isNotNull() & (F.col("params") != self.params)
-            ).limit(1).collect()
-            if mismatched:
-                raise RuntimeError(
-                    f"lineage for (snapshot={self.snapshot_id}, job={self.job_id}) "
-                    f"was committed with different salting/chunking params "
-                    f"({mismatched[0]['params']!r} != {self.params!r}) — resume "
-                    f"would duplicate groups; use a new job_id or the original params"
-                )
-            legacy = prior.filter(F.col("params").isNull()).limit(1).collect()
-        else:
-            # the whole column is absent → every prior row predates params
-            legacy = prior.limit(1).collect()
-        if legacy and self.legacy_params != self.params:
-            # rows written before params tracking carry no record of their
-            # salting config; defaults have changed since (group_factor
-            # 2 → 1), so silently resuming would re-encode those groups
-            # under NEW salted keys while chunks() still returns the old
-            # committed groups → duplicate rows. Caller must assert the
-            # legacy params match the current ones to proceed.
-            raise RuntimeError(
-                f"lineage for (snapshot={self.snapshot_id}, job={self.job_id}) "
-                f"contains rows without recorded salting/chunking params — "
-                f"cannot prove a resume is duplicate-free. Pass "
-                f"legacy_params={self.params!r} (the params string the "
-                f"original run used) to resume, or use a new job_id"
-            )
+        self._check_resume(generations(self.spark, self.out_dir))
         salted = salt_groups(
             df, self.group_cols, self.order_cols, self.chunk_bytes,
             self.group_factor,
@@ -216,7 +267,9 @@ class EncodeJob:
         chunks.write.mode("append").parquet(f"{self.out_dir}/chunks/run={run_id}")
 
         # commit: lineage rows derived FROM the persisted chunk files
-        written = self.spark.read.parquet(f"{self.out_dir}/chunks/run={run_id}")
+        written = self.spark.read.schema(CHUNKS_DDL).parquet(
+            f"{self.out_dir}/chunks/run={run_id}"
+        )
         stats = written.groupBy("group_key").agg(
             F.count("*").alias("n_chunks"),
             F.sum("n_rows").alias("n_rows"),
@@ -287,8 +340,6 @@ class EncodeJob:
         every frame payload — a full-data shuffle at 100 TB — and could
         still splice coexisting generations; plan-asserted gone.)
         """
-        from ..operators.encode import CHUNKS_DDL
-
         # explicit schema with `run string`: without it Spark's partition
         # TYPE INFERENCE parses the run=<12-hex> dir name, and an all-digit
         # hex id (~1 in 280 runs, e.g. run=012345678901 or 12e345678901)

@@ -76,7 +76,10 @@ def _slice_assignments(
         spark.sparkContext.defaultParallelism, _MAX_SLICES_PER_FILE
     )
     total = _file_rows(path)
-    n = max(1, min(n, total or 1, -(-(total or 1) // max(min_rows, 1))))
+    if total == 0:
+        # one empty slice: the scan still yields its (empty) typed result
+        return [(path, 0, 0)]
+    n = max(1, min(n, total, -(-total // max(min_rows, 1))))
     per = -(-total // n)  # ceil
     return [
         (path, start, min(per, total - start))

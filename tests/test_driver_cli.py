@@ -114,6 +114,15 @@ def test_cli_decode_pins_one_generation(spark, tmp_path, capsys):
                         "--decode-job-id", "missing"]) == 3
     capsys.readouterr()
 
+    # chunks/ without lineage/ (a run that crashed before its first lineage
+    # append) has no committed generation: the same loud usage error
+    import shutil
+
+    shutil.rmtree(f"{out}/lineage")
+    assert driver.main(stop_session=False, argv=["--cpus", "4", "decode", "--chunks", out,
+                        "--schema-json", f"{out}/schema.json", "--out", str(tmp_path / "nolin")]) == 3
+    assert "no committed lineage" in capsys.readouterr().out
+
 
 def test_cli_decode_filter_selective(spark, tmp_path, capsys):
     """--filter pushes predicates through the zone maps (selective decode

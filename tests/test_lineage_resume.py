@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import contextlib
+import os
+import re
+import shutil
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -247,3 +253,103 @@ def test_chunks_survive_numeric_looking_run_ids(spark, corpus, tmp_path_factory)
     got = EncodeJob(spark, out, snapshot_id="snapN", chunk_rows=1024, chunk_bytes=1 << 20).chunks()
     assert got.count() > 0
     assert multiset_diff(corpus, decode_table(got, CORPUS_DDL)).count() == 0
+
+
+# ------------------------------------------------- control-plane job budget
+
+@contextlib.contextmanager
+def _job_group(spark, name):
+    """Run the body under a test-owned Spark job group and collect its
+    jobs as ``(job_id, [stage call sites])`` in submission order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    jobs: list = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        for j in sorted(st.getJobIdsForGroup(name)):
+            stages = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+            jobs.append((j, [s.name if s else "" for s in stages],
+                         sum(s.numTasks for s in stages if s)))
+
+
+def test_fresh_encode_runs_no_lineage_job_before_its_scan(spark, corpus, tmp_path_factory):
+    """A fresh out dir has no lineage: the resume state is one driver-side
+    FileSystem probe, so the first job of the run is the encode itself and
+    no lineage.py job precedes it; the whole run stays within 13 jobs."""
+    out = str(tmp_path_factory.mktemp("budget_job"))
+    job = EncodeJob(spark, out, snapshot_id="snapB", chunk_rows=1024, chunk_bytes=1 << 20)
+    with _job_group(spark, "test-fresh-encode-budget") as jobs:
+        r = job.run(corpus)
+    assert r["rows"] == N_ROWS
+    assert jobs, "the encode ran no Spark job at all"
+
+    def is_lineage(site):
+        return any("plans/lineage.py" in s for s in site[1])
+
+    assert not is_lineage(jobs[0]), jobs[0]
+    assert len(jobs) <= 13, [s for _, s, _ in jobs]
+
+
+def test_missing_lineage_reads_empty_without_tasks(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("no_lineage"))
+    job = EncodeJob(spark, out, snapshot_id="snapE")
+    with _job_group(spark, "test-missing-lineage") as jobs:
+        rows = job.lineage().collect()
+        gens = job.lineage().groupBy("snapshot_id", "job_id").count().collect()
+        done = job.done_groups().collect()
+    assert rows == [] and gens == [] and done == []
+    assert sum(n for _, _, n in jobs) == 0, jobs
+    assert job.lineage().rdd.getNumPartitions() == 0
+    assert job.lineage().count() == 0
+
+
+def test_lineage_with_only_temporary_dir_resumes_empty(spark, corpus, tmp_path_factory):
+    """A crashed lineage append leaves ``lineage/_temporary/`` and nothing
+    else; Spark never reads ``_``-prefixed entries, so this is "nothing
+    committed" and the run encodes every group."""
+    out = str(tmp_path_factory.mktemp("tmp_only"))
+    attempt = os.path.join(out, "lineage", "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(attempt)
+    with open(os.path.join(attempt, "part-00000.snappy.parquet"), "wb") as f:
+        f.write(b"half-written")
+    job = EncodeJob(spark, out, snapshot_id="snapT", chunk_rows=1024, chunk_bytes=1 << 20)
+    r = job.run(corpus)
+    assert r["rows"] == N_ROWS
+    assert r["groups_done"] == job.done_groups().count() > 0
+    assert multiset_diff(corpus, decode_table(job.chunks(), CORPUS_DDL)).count() == 0
+
+
+def test_corrupt_lineage_file_raises_instead_of_reencoding(spark, corpus, tmp_path_factory):
+    """An unreadable lineage file is not "nothing committed": reading it
+    as empty would re-encode every group as a second generation into the
+    same out_dir. The run must fail before writing any chunk."""
+    out = str(tmp_path_factory.mktemp("corrupt_lineage"))
+    job = EncodeJob(spark, out, snapshot_id="snapC", chunk_rows=1024, chunk_bytes=1 << 20)
+    job.run(corpus)
+    shutil.rmtree(os.path.join(out, "chunks"))
+    with open(os.path.join(out, "lineage", "part-99999-corrupt.snappy.parquet"), "wb") as f:
+        f.write(b"not a parquet file at all")
+    with pytest.raises(Exception, match="part-99999-corrupt"):
+        job.run(corpus)
+    assert not os.path.exists(os.path.join(out, "chunks"))
+
+
+def test_no_read_path_builds_an_empty_python_rdd():
+    """``createDataFrame([], ...)`` is a Python RDD over defaultParallelism
+    partitions: as a control-plane read it runs tasks known to return
+    nothing. Only a schema-only writer may use it."""
+    root = Path(__file__).resolve().parent.parent
+    files = sorted((root / "parquet2csv_spark").rglob("*.py")) + [root / "driver.py"]
+    offenders = []
+    for path in files:
+        text = path.read_text()
+        for m in re.finditer(r"createDataFrame\(\s*\[\s*\]", text):
+            line_end = text.find("\n", m.end())
+            if ".write" in text[m.end():line_end]:
+                continue  # writes a schema-only file, reads nothing
+            offenders.append(f"{path.relative_to(root)}:{text.count(chr(10), 0, m.start()) + 1}")
+    assert offenders == []

@@ -148,3 +148,28 @@ def test_worth_it_false_for_directory_inputs(spark, tmp_path):
     d = str(tmp_path / "t")
     spark.range(100).write.parquet(d)
     assert worth_it(d, 32) is False
+
+
+def test_parallel_scan_zero_row_file_roundtrips(spark, tmp_path):
+    """A 0-row single-row-group file passes the worth_it gate; the slicer
+    must hand out one empty slice (not crash on a zero step) so the fused
+    encode and the plain scan both come back empty with the file's schema."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "empty.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array([], pa.int64()),
+        "name": pa.array([], pa.string()),
+        "ts": pa.array([], pa.timestamp("us")),
+    }), path)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert worth_it(path, 8)
+    src = spark.read.parquet(path)
+    chunks = parallel_scan_encode(spark, path, src.schema, chunk_rows=2048)
+    assert chunks.count() == 0
+    dec = decode_table(chunks, src.schema)
+    assert dec.schema == src.schema
+    assert dec.collect() == []
+    par = parallel_parquet_scan(spark, path, src.schema)
+    assert par.schema == src.schema
+    assert par.collect() == []
