@@ -373,18 +373,17 @@ def encode_salted(
     ``num_partitions`` controls the encode-stage task granularity: the
     explicit ``repartition(n, _gk)`` hash-partitioning satisfies the
     groupBy's distribution requirement, so there is STILL exactly one data
-    shuffle (plan-verified in tests) — with enough partitions that a hash
-    collision of several giant groups into one task doesn't set the
-    stage's tail latency (measured: effective concurrency 3.9/8 with 1
-    task per core slot, because multiple 16 MB groups landed together).
-    Default: 2 tasks per core slot — the r5 A/B (3 interleaved reps,
-    sf0.1-scale corpus, local[32]) measured 2.80 s at ×2 vs 4.02 s at ×8:
-    past ~2× the collision risk is already amortized and additional tasks
-    only add scheduler + python-worker round-trips. Salting bounds every
-    group to ~group_factor×chunk_bytes, so per-task load stays capped
-    regardless of this multiplier."""
+    shuffle (plan-verified in tests). Default: one task per slot
+    (``defaultParallelism``). Every Python task pays a fixed start-up cost
+    before its first group, so a second wave costs more than the balance it
+    buys: on a 4-core box (cold sessions, 25k-row corpus, 96 salted
+    groups; CLI encodes and noop-sink encodes) the main job took 3.2-3.9 s
+    at 4 tasks, 3.4-4.3 s at 8 and 4.5-6.1 s at 16. Salting caps every
+    group at ~``group_factor × chunk_bytes``, which bounds how uneven the
+    tasks can be. The remaining trade: at high core counts with few groups, several
+    salt-capped groups can hash into one task and set the stage's tail."""
     if num_partitions is None:
-        num_partitions = salted.sparkSession.sparkContext.defaultParallelism * 2
+        num_partitions = salted.sparkSession.sparkContext.defaultParallelism
     # sort JVM-side: groupBy(...).applyInArrow requires a within-partition
     # sort on _gk anyway; widening it to (_gk, *order_cols) rides the same
     # Tungsten sort (the required _gk ordering is its prefix — still ONE

@@ -21,11 +21,16 @@ def get_spark(cpus: int | None = None, app: str = "parquet2csv_spark") -> SparkS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        # 2× cores: the grouped encode places many salted groups per
-        # partition — finer partitions balance group-size skew across task
-        # waves (AQE still coalesces genuinely tiny stages)
+        # JVM shuffles only (aggregates, joins; AQE coalesces tiny ones):
+        # the grouped encode sizes its own exchange from defaultParallelism
         .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 16)))
-        .config("spark.default.parallelism", str(max(cpus, 8)))
+        # one task per slot: every Python Arrow stage (parallel-scan slices,
+        # grouped encode, chunk-decode splits via minPartitionNum) sizes
+        # itself from this, and each Python task pays ~0.25-0.3 s before its
+        # first batch even on a reused worker — a second wave costs that
+        # again (4-core box, warm trivial mapInArrow: 0.56 s at 4 tasks,
+        # 1.46-1.80 s at 16)
+        .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

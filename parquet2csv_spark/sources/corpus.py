@@ -235,7 +235,7 @@ def generate_corpus(spark, n_rows: int, seed: int = 42, mean_len: int = 1200, ma
             ids = batch.column("id").to_numpy()
             yield from corpus_batch(ids, spec).to_batches()
 
-    n_part = max(int(spark.conf.get("spark.default.parallelism", "32")), 8)
+    n_part = spark.sparkContext.defaultParallelism
     return spark.range(0, n_rows, numPartitions=n_part).mapInArrow(gen, CORPUS_DDL)
 
 

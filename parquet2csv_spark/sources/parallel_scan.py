@@ -28,6 +28,7 @@ Row-set semantics: the union of slices is exactly the file's rows
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -35,12 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 _ASSIGN_DDL = "path string, start bigint, n bigint"
 
-# Default cap on slices per file. Slice i must decode every page before
-# its range (no page index), so k slices cost ~k/2 full-file reads of
-# redundant CPU while wall time is floored by the LAST slice's full read
-# — past a modest k the extra parallelism only burns cores (and burst
-# credits). Measured on the 6M-row lineitem roundtrip at local[32]:
-# k=32 → 1.6-6.3 s (unstable), k=16 → 1.37-1.40 s, k=8 → 1.74-1.89 s.
+# Default cap on slices per file. The slice count k is the task-slot
+# count (``defaultParallelism``), capped here. Slice i must decode every
+# page before its range (no page index), so the k slices together read
+# (k+1)/2 files' worth of rows, while wall time is floored by the LAST
+# slice's full read — past a modest k the extra parallelism only burns
+# cores (and burst credits). Measured on the 6M-row lineitem roundtrip at
+# local[32]: k=32 → 1.6-6.3 s (unstable), k=16 → 1.37-1.40 s,
+# k=8 → 1.74-1.89 s.
 _MAX_SLICES_PER_FILE = 16
 
 
@@ -53,15 +56,21 @@ def _file_rows(path: str) -> int:
 def worth_it(path: str, parallelism: int) -> bool:
     """True when the file has materially fewer row groups than cores —
     i.e. Spark's native row-group-granular scan cannot use the cluster.
-    Conservatively False for anything that is not a single readable
-    parquet FILE (e.g. a directory of part files — those already scan in
-    parallel and belong on the native path)."""
+
+    False, without reading anything, when ``path`` is not a local regular
+    file: a directory of part files already scans in parallel, and a URI
+    belongs to Spark's own filesystem layer — both keep the native path.
+    A local file whose footer cannot be read raises, naming the path,
+    instead of silently picking the native scan."""
     import pyarrow.parquet as pq
 
-    try:
-        return pq.ParquetFile(path).metadata.num_row_groups * 2 < parallelism
-    except Exception:
+    if not os.path.isfile(path):
         return False
+    try:
+        row_groups = pq.ParquetFile(path).metadata.num_row_groups
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"cannot read the parquet footer of {path}: {e}") from e
+    return row_groups * 2 < parallelism
 
 
 def _slice_assignments(

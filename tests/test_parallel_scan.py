@@ -144,10 +144,26 @@ def test_cosine_topk_mixed_dims_match_crossjoin(spark):
 
 def test_worth_it_false_for_directory_inputs(spark, tmp_path):
     """A directory table (part files) must fall back to the native scan
-    path instead of crashing the footer probe."""
+    path instead of crashing the footer probe; so must a path that is not
+    a local file at all (missing here; a URI reads the same)."""
     d = str(tmp_path / "t")
     spark.range(100).write.parquet(d)
     assert worth_it(d, 32) is False
+    assert worth_it(str(tmp_path / "missing.parquet"), 32) is False
+
+
+def test_worth_it_raises_on_truncated_local_file(tmp_path):
+    """A local parquet file whose footer cannot be read fails loudly with
+    its path instead of silently taking the native scan."""
+    import pyarrow as pa
+
+    good = tmp_path / "good.parquet"
+    pq.write_table(pa.table({"id": pa.array(range(1000), pa.int64())}), good)
+    data = good.read_bytes()
+    bad = tmp_path / "truncated.parquet"
+    bad.write_bytes(data[: len(data) // 2])
+    with pytest.raises(ValueError, match="truncated.parquet"):
+        worth_it(str(bad), 32)
 
 
 def test_parallel_scan_zero_row_file_roundtrips(spark, tmp_path):
