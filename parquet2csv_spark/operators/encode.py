@@ -336,7 +336,7 @@ def salt_groups(
     """
     target = group_factor * chunk_bytes
     sizes = (
-        df.groupBy(*group_cols)
+        df.groupBy(*[F.col(c).alias(f"_s_{c}") for c in group_cols])
         .agg(F.sum(_size_expr(df)).alias("_gbytes"))
         .withColumn(
             "_nsalts",
@@ -344,8 +344,14 @@ def salt_groups(
         )
         .drop("_gbytes")
     )
+    # null-safe join (<=>): a NULL group value is a group of its own, as in
+    # the groupBy above; an `on=group_cols` equi-join would drop its rows.
+    # The select keeps the USING-join column order (group cols first).
+    cond = [F.col(c).eqNullSafe(F.col(f"_s_{c}")) for c in group_cols]
+    rest = [c for c in df.columns if c not in group_cols]
     return (
-        df.join(F.broadcast(sizes), on=group_cols, how="inner")
+        df.join(F.broadcast(sizes), on=cond, how="inner")
+        .select(*group_cols, *rest, "_nsalts")
         .withColumn(
             "_gk",
             F.concat_ws(

@@ -297,7 +297,9 @@ class EncodeJob:
         )
         lineage_rows.write.mode("append").parquet(f"{self.out_dir}/lineage")
         done = self.lineage().filter(
-            (F.col("snapshot_id") == self.snapshot_id) & (F.col("status") == "done")
+            (F.col("snapshot_id") == self.snapshot_id)
+            & (F.col("job_id") == self.job_id)
+            & (F.col("status") == "done")
         )
         agg = done.agg(
             F.count("*").alias("groups"),

@@ -22,6 +22,13 @@ shuffle. For files with ≥ N row groups Spark's native scan is already
 parallel — callers should use it; ``worth_it`` answers that question from
 footer metadata only.
 
+The slice source is a JVM range, ``spark.range(0, k, 1, k)``: one id per
+partition, and each task looks up its ``(path, start, n)`` slice by id in
+the encode closure. The plan is ``Range → MapInArrow``, so each task runs
+exactly one Python worker, the one that reads and encodes. A Python RDD
+of the assignments (``parallelize``) would start a second Python worker
+per task only to pickle a three-field tuple for the JVM to unpickle.
+
 Row-set semantics: the union of slices is exactly the file's rows
 (pytest-pinned), each slice yielded in file order.
 """
@@ -33,8 +40,6 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-
-_ASSIGN_DDL = "path string, start bigint, n bigint"
 
 # Default cap on slices per file. The slice count k is the task-slot
 # count (``defaultParallelism``), capped here. Slice i must decode every
@@ -96,20 +101,10 @@ def _slice_assignments(
     ]
 
 
-def _assign_df(spark: SparkSession, assignments) -> DataFrame:
-    # one assignment per partition (parallelize splits the list evenly),
-    # so every slice is its own task
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(assignments, len(assignments)),
-        _ASSIGN_DDL,
-    )
-
-
-def _read_slices(rows, names, target, batch_rows) -> Iterator[pa.RecordBatch]:
+def _read_slices(slices, names, target, batch_rows) -> Iterator[pa.RecordBatch]:
     import pyarrow.parquet as pq
 
-    for row in rows:
-        fpath, start, want = row["path"], row["start"], row["n"]
+    for fpath, start, want in slices:
         end = start + want
         pf = pq.ParquetFile(fpath)
         pos = 0
@@ -173,40 +168,14 @@ def parallel_scan_encode(
 
     def read_encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
+            slices = [assignments[i] for i in b.column(0).to_pylist()]
             yield from encode_batches(
-                _read_slices(b.to_pylist(), names, target, batch_rows),
+                _read_slices(slices, names, target, batch_rows),
                 chunk_rows,
                 chunk_bytes,
             )
 
-    return _assign_df(spark, assignments).mapInArrow(read_encode, CHUNKS_DDL)
-
-
-def parallel_parquet_scan(
-    spark: SparkSession,
-    path: str,
-    schema,
-    n_slices: int | None = None,
-    batch_rows: int = 65536,
-) -> DataFrame:
-    """Read one parquet file as an ``n_slices``-way-partitioned DataFrame
-    of exactly its rows, bypassing Spark's row-group-granular split.
-
-    ``schema`` is the Spark schema the scan must produce (normally
-    ``spark.read.parquet(path).schema`` — kept explicit so the caller's
-    decode contract and this scan can never drift apart). Arrow batches
-    are cast to the matching arrow schema when the file's physical types
-    differ only in representation (e.g. timestamp units).
-    """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
-    assignments = _slice_assignments(spark, path, n_slices)
-
-    def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            yield from _read_slices(b.to_pylist(), names, target, batch_rows)
-
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    return _assign_df(spark, assignments).mapInArrow(read, ddl)
+    # slice i is partition i: the JVM range hands each task its slice
+    # index, and the slices themselves ride in the closure
+    k = len(assignments)
+    return spark.range(0, k, 1, k).mapInArrow(read_encode, CHUNKS_DDL)

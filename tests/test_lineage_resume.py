@@ -353,3 +353,40 @@ def test_no_read_path_builds_an_empty_python_rdd():
                 continue  # writes a schema-only file, reads nothing
             offenders.append(f"{path.relative_to(root)}:{text.count(chr(10), 0, m.start()) + 1}")
     assert offenders == []
+
+
+def test_null_group_rows_survive_encode_and_decode(spark, tmp_path_factory):
+    """Rows whose group value is NULL form a group of their own: the salt
+    join must be null-safe, or they vanish between the source and the
+    committed chunks."""
+    src = generate_corpus(spark, 600, seed=5).withColumn(
+        "repo",
+        F.when(F.pmod(F.xxhash64("path", "commit"), F.lit(4)) == 0, F.lit(None))
+        .otherwise(F.col("repo")),
+    )
+    src.cache()
+    total = src.count()
+    n_null = src.filter(F.col("repo").isNull()).count()
+    assert 0 < n_null < total
+    job = EncodeJob(spark, str(tmp_path_factory.mktemp("nullgrp")),
+                    snapshot_id="snapN", chunk_rows=128, chunk_bytes=1 << 18)
+    summary = job.run(src)
+    assert summary["rows"] == total
+    dec = decode_table(job.chunks(), CORPUS_DDL)
+    assert dec.filter(F.col("repo").isNull()).count() == n_null
+    assert multiset_diff(src, dec).count() == 0
+    src.unpersist()
+
+
+def test_run_summary_counts_only_its_own_job(spark, tmp_path_factory):
+    """Two job ids committing the same snapshot into one out dir: each
+    run's summary counts its own job's groups and rows only."""
+    out = str(tmp_path_factory.mktemp("twojobs"))
+    src = generate_corpus(spark, 400, seed=9)
+    a = EncodeJob(spark, out, snapshot_id="snapJ", job_id="a", chunk_rows=256)
+    ra = a.run(src)
+    assert ra["rows"] == 400
+    one = src.orderBy("path", "commit").limit(1)
+    rb = EncodeJob(spark, out, snapshot_id="snapJ", job_id="b",
+                   chunk_rows=256).run(one)
+    assert (rb["groups_done"], rb["rows"]) == (1, 1)

@@ -2,6 +2,8 @@
 re-reader / fused read+encode source (sources.parallel_scan) and the
 vectorized cosine_topk fast path (r8 optimization round)."""
 
+import re
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +11,7 @@ from pyspark.sql import functions as F
 from parquet2csv_spark.functions import similarity as sim
 from parquet2csv_spark.operators import decode_table, encode_table
 from parquet2csv_spark.sources.parallel_scan import (
-    parallel_parquet_scan,
+    _slice_assignments,
     parallel_scan_encode,
     worth_it,
 )
@@ -33,20 +35,51 @@ def _norm_rows(df):
 def test_parallel_scan_rows_equal_native_scan(spark, table):
     path = f"{SF}/{table}.parquet"
     native = spark.read.parquet(path)
-    par = parallel_parquet_scan(spark, path, native.schema, n_slices=7)
+    total = pq.ParquetFile(path).metadata.num_rows
+    # chunk_rows floors the slice size: at total // 7 the file gives 7 slices
+    chunks = parallel_scan_encode(spark, path, native.schema,
+                                  chunk_rows=total // 7, n_slices=7)
     # every slice is its own partition; union of slices == the file
-    assert par.rdd.getNumPartitions() == 7
-    assert _norm_rows(par) == _norm_rows(native)
+    assert chunks.rdd.getNumPartitions() == 7
+    assert _norm_rows(decode_table(chunks, native.schema)) == _norm_rows(native)
 
 
 def test_parallel_scan_slices_cover_exactly(spark):
     path = f"{SF}/lineitem.parquet"
     native = spark.read.parquet(path)
     total = pq.ParquetFile(path).metadata.num_rows
-    par = parallel_parquet_scan(spark, path, native.schema, n_slices=5)
-    sizes = [len(p) for p in par.rdd.glom().collect()]
-    assert sum(sizes) == total
-    assert all(s > 0 for s in sizes)
+    slices = _slice_assignments(spark, path, 5)
+    assert len(slices) == 5
+    # contiguous, non-empty ranges from row 0 to the last row
+    assert [s for _, s, _ in slices] == \
+        [sum(n for _, _, n in slices[:i]) for i in range(5)]
+    assert all(n > 0 for _, _, n in slices)
+    assert sum(n for _, _, n in slices) == total
+    chunks = parallel_scan_encode(spark, path, native.schema, chunk_rows=4096,
+                                  n_slices=5)
+    # partition i encodes exactly slice i's rows
+    per_part = [sum(r["n_rows"] for r in p)
+                for p in chunks.select("n_rows").rdd.glom().collect()]
+    assert per_part == [n for _, _, n in slices]
+    assert decode_table(chunks, native.schema).count() == total
+
+
+def test_parallel_scan_encode_plan_is_range_then_map_in_arrow(spark):
+    """The slice source is a JVM range with one id per slice: the executed
+    plan is ``MapInArrow`` directly over ``Range (0, k, splits=k)``, with
+    no Python RDD (``ExistingRDD``) under it."""
+    path = f"{SF}/events.parquet"
+    src = spark.read.parquet(path)
+    k = len(_slice_assignments(spark, path, 6, min_rows=1024))
+    chunks = parallel_scan_encode(spark, path, src.schema, chunk_rows=1024,
+                                  n_slices=6)
+    chunks.collect()
+    plan = chunks._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert re.search(
+        rf"MapInArrow read_encode.*\n\+- (\*\(\d+\) )?"
+        rf"Range \(0, {k}, step=1, splits={k}\)", plan), plan
+    assert chunks.rdd.getNumPartitions() == k
 
 
 def test_parallel_scan_encode_roundtrips_bit_identical(spark):
@@ -169,7 +202,7 @@ def test_worth_it_raises_on_truncated_local_file(tmp_path):
 def test_parallel_scan_zero_row_file_roundtrips(spark, tmp_path):
     """A 0-row single-row-group file passes the worth_it gate; the slicer
     must hand out one empty slice (not crash on a zero step) so the fused
-    encode and the plain scan both come back empty with the file's schema."""
+    encode comes back empty and decodes with the file's schema."""
     import pyarrow as pa
 
     path = str(tmp_path / "empty.parquet")
@@ -186,6 +219,3 @@ def test_parallel_scan_zero_row_file_roundtrips(spark, tmp_path):
     dec = decode_table(chunks, src.schema)
     assert dec.schema == src.schema
     assert dec.collect() == []
-    par = parallel_parquet_scan(spark, path, src.schema)
-    assert par.schema == src.schema
-    assert par.collect() == []

@@ -3,7 +3,9 @@ slices, grouped encode, chunk decode) runs as ``defaultParallelism`` tasks,
 and ``defaultParallelism`` is the session's task-slot count.
 
 Each Python task pays a fixed start-up cost before its first batch, so a
-stage sized above the slot count runs a second wave of that cost."""
+stage sized above the slot count runs a second wave of that cost. For the
+same reason no engine stage is rooted on a Python RDD: each of its tasks
+would start one more Python worker than the stage has Arrow operators."""
 
 from __future__ import annotations
 
@@ -91,7 +93,7 @@ def test_slices_follow_default_parallelism(spark, tmp_path):
 
 
 # Engine code that sizes a Python stage: the modules below must take the
-# slot count as it is, never scaled or floored.
+# slot count as it is, never scaled or floored, and build no Python RDD.
 _STAGE_SIZING = ["parquet2csv_spark/operators", "parquet2csv_spark/sources",
                  "parquet2csv_spark/plans", "driver.py"]
 
@@ -137,11 +139,40 @@ def test_scaled_slot_count_detector():
     assert _scaled_slot_counts("n = sc.defaultParallelism") == []
 
 
-def test_no_stage_sizing_scales_default_parallelism():
+def _engine_offenders(detector) -> dict[str, list[int]]:
     found = {}
     for path in _stage_sizing_sources():
         with open(path) as f:
-            lines = _scaled_slot_counts(f.read())
+            lines = detector(f.read())
         if lines:
             found[os.path.relpath(path, ROOT)] = lines
+    return found
+
+
+def test_no_stage_sizing_scales_default_parallelism():
+    found = _engine_offenders(_scaled_slot_counts)
+    assert not found, found
+
+
+def _parallelize_calls(source: str) -> list[int]:
+    """Line numbers of ``<anything>.parallelize(...)`` calls: a Python RDD
+    source runs a Python worker per task before the stage's own Arrow
+    operator does any work."""
+    return [
+        node.lineno for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parallelize"
+    ]
+
+
+def test_parallelize_detector():
+    assert _parallelize_calls("rdd = sc.parallelize(xs, 4)") == [1]
+    assert _parallelize_calls(
+        "df = spark.createDataFrame(\n    spark.sparkContext.parallelize(xs), ddl)") == [2]
+    assert _parallelize_calls("df = spark.range(0, k, 1, k)") == []
+    assert _parallelize_calls("parallelize = 1\nname = 'x.parallelize(y)'") == []
+
+
+def test_no_engine_code_builds_a_python_rdd_source():
+    found = _engine_offenders(_parallelize_calls)
     assert not found, found
