@@ -25,12 +25,20 @@ Resume state is read once per run. A driver-side Hadoop ``FileSystem``
 probe of ``<out>/lineage`` comes first and launches no Spark job: with no
 lineage yet, a fresh encode plans no lineage read at all. Otherwise one
 bounded aggregate — one row per (snapshot, job, status, params)
-generation, never one per group — is collected, and every resume check
-(digest migration, params mismatch, legacy params) is evaluated on those
-rows in the driver. The done-groups anti-join is always planned and reads
-lineage lazily, when the chunk write runs: with no lineage the done set is
-an empty local relation, which the optimizer's empty-relation propagation
+generation, never one per group, carrying that generation's group count
+and row/byte sums — is collected, and every resume check (digest
+migration, params mismatch, legacy params) is evaluated on those rows in
+the driver. The done-groups anti-join is always planned and reads lineage
+lazily, when the chunk write runs: with no lineage the done set is an
+empty local relation, which the optimizer's empty-relation propagation
 drops from the join, so a fresh encode still runs no lineage job.
+
+The commit is one aggregate over the run's written chunk metadata: one
+``groupBy(group_key)`` yields the counts, sums and sorted distinct codec
+tags of each group (the scan reads ``cols.codec``, never the frames), and
+its lineage append carries an ``Observation`` of the run's own totals. The
+run summary is those totals plus this (snapshot, job)'s done rows from the
+start-of-run aggregate, so nothing re-reads lineage after the commit.
 
 Fail-loud rule: lineage counts as empty in exactly two cases — the dir is
 missing, or it holds only ``_``/``.``-prefixed entries (e.g. a crashed
@@ -44,7 +52,7 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.encode import (
@@ -91,20 +99,34 @@ def _empty(spark: SparkSession, ddl: str) -> DataFrame:
     ])
 
 
-def generations(spark: SparkSession, out_dir: str) -> list[Row]:
-    """One row per (snapshot_id, job_id, status, params) generation in
-    ``out_dir``'s lineage, with its latest ``committed_at``. Bounded by
-    the number of generations, never by the number of groups. With no
-    lineage it plans no query at all: even an empty one costs a cold
-    session seconds of planning."""
-    lineage = _stored_lineage(spark, out_dir)
-    if lineage is None:
-        return []
+def _totals() -> list:
+    """Lineage-row count and row/byte sums of a set of lineage rows: a
+    generation's in ``generations``, a run's in its commit observation."""
+    return [
+        F.count(F.lit(1)).alias("groups"),
+        F.sum("n_rows").alias("rows"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+    ]
+
+
+def _generations(lineage: DataFrame) -> list[Row]:
     return (
         lineage.groupBy("snapshot_id", "job_id", "status", "params")
-        .agg(F.max("committed_at").alias("committed_at"))
+        .agg(F.max("committed_at").alias("committed_at"), *_totals())
         .collect()
     )
+
+
+def generations(spark: SparkSession, out_dir: str) -> list[Row]:
+    """One row per (snapshot_id, job_id, status, params) generation in
+    ``out_dir``'s lineage, with its latest ``committed_at``, its lineage
+    row count (``groups``) and its ``rows``/``raw_bytes``/``enc_bytes``
+    sums. Bounded by the number of generations, never by the number of
+    groups. With no lineage it plans no query at all: even an empty one
+    costs a cold session seconds of planning."""
+    lineage = _stored_lineage(spark, out_dir)
+    return [] if lineage is None else _generations(lineage)
 
 
 class EncodeJob:
@@ -165,16 +187,49 @@ class EncodeJob:
         stored = _stored_lineage(self.spark, self.out_dir)
         return _empty(self.spark, LINEAGE_DDL) if stored is None else stored
 
-    def done_groups(self) -> DataFrame:
+    def _done(self, lineage: DataFrame) -> DataFrame:
+        """This (snapshot, job)'s done rows of ``lineage``."""
+        return lineage.filter(
+            (F.col("snapshot_id") == self.snapshot_id)
+            & (F.col("job_id") == self.job_id)
+            & (F.col("status") == "done")
+        )
+
+    def done_groups(self, lineage: DataFrame | None = None) -> DataFrame:
+        """Group keys (as ``_gk``) this (snapshot, job) has committed, out
+        of ``lineage`` (default: a fresh read of the stored lineage)."""
+        if lineage is None:
+            lineage = self.lineage()
+        return self._done(lineage).select(F.col("group_key").alias("_gk")).distinct()
+
+    def _commit_rows(self, run_id: str) -> DataFrame:
+        """Run ``run_id``'s lineage rows, derived FROM its persisted chunk
+        files in one aggregate. Only the chunk metadata and each column's
+        codec tag are read, never the frames."""
+        written = self.spark.read.schema(CHUNKS_DDL).parquet(
+            f"{self.out_dir}/chunks/run={run_id}"
+        )
+        codecs = F.array_sort(F.array_distinct(F.flatten(F.collect_list("cols.codec"))))
         return (
-            self.lineage()
-            .filter(
-                (F.col("snapshot_id") == self.snapshot_id)
-                & (F.col("job_id") == self.job_id)
-                & (F.col("status") == "done")
+            written.groupBy("group_key")
+            .agg(
+                F.count("*").alias("n_chunks"),
+                F.sum("n_rows").alias("n_rows"),
+                F.sum("raw_bytes").alias("raw_bytes"),
+                F.sum("enc_bytes").alias("enc_bytes"),
+                F.sum("wall_ms").alias("wall_ms"),
+                F.array_join(codecs, ",").alias("codecs"),
             )
-            .select(F.col("group_key").alias("_gk"))
-            .distinct()
+            .select(
+                F.lit(self.snapshot_id).alias("snapshot_id"),
+                F.lit(self.job_id).alias("job_id"),
+                F.lit(run_id).alias("run_id"),
+                "group_key", "n_chunks", "n_rows", "raw_bytes", "enc_bytes",
+                "wall_ms", "codecs",
+                F.lit("done").alias("status"),
+                F.current_timestamp().alias("committed_at"),
+                F.lit(self.params).alias("params"),
+            )
         )
 
     # --------------------------------------------------------------- running
@@ -246,6 +301,13 @@ class EncodeJob:
     def run(self, df: DataFrame, only_groups_like: str | None = None) -> dict:
         """Encode all groups not yet committed. Returns driver-side summary.
 
+        The summary counts this (snapshot, job)'s done lineage rows: those
+        the start-of-run generations aggregate saw plus the ones this run
+        commits, observed on its lineage append. A concurrent committer to
+        the same (snapshot, job) between this run's start and its commit
+        is not counted. A run that commits nothing returns the earlier
+        runs' totals.
+
         ``only_groups_like``: test hook — restrict THIS run to pending
         groups whose key contains the substring, simulating a job that
         crashed after committing only part of its groups (same snapshot →
@@ -253,12 +315,17 @@ class EncodeJob:
         """
         run_id = uuid.uuid4().hex[:12]
         t0 = time.time()
-        self._check_resume(generations(self.spark, self.out_dir))
+        stored = _stored_lineage(self.spark, self.out_dir)
+        gens = [] if stored is None else _generations(stored)
+        self._check_resume(gens)
         salted = salt_groups(
             df, self.group_cols, self.order_cols, self.chunk_bytes,
             self.group_factor,
         )
-        pending = salted.join(self.done_groups(), on="_gk", how="left_anti")
+        # with no lineage the done set is an empty local relation, which the
+        # optimizer's empty-relation propagation drops from the join
+        lineage = _empty(self.spark, LINEAGE_DDL) if stored is None else stored
+        pending = salted.join(self.done_groups(lineage), on="_gk", how="left_anti")
         if only_groups_like is not None:
             pending = pending.filter(F.col("_gk").contains(only_groups_like))
         chunks = encode_salted(
@@ -266,54 +333,28 @@ class EncodeJob:
         )
         chunks.write.mode("append").parquet(f"{self.out_dir}/chunks/run={run_id}")
 
-        # commit: lineage rows derived FROM the persisted chunk files
-        written = self.spark.read.schema(CHUNKS_DDL).parquet(
-            f"{self.out_dir}/chunks/run={run_id}"
-        )
-        stats = written.groupBy("group_key").agg(
-            F.count("*").alias("n_chunks"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.sum("wall_ms").alias("wall_ms"),
-        )
-        codecs = (
-            written.select("group_key", F.explode("cols").alias("c"))
-            .groupBy("group_key")
-            .agg(F.concat_ws(",", F.sort_array(F.collect_set("c.codec"))).alias("codecs"))
-        )
-        lineage_rows = (
-            stats.join(codecs, on="group_key")
-            .select(
-                F.lit(self.snapshot_id).alias("snapshot_id"),
-                F.lit(self.job_id).alias("job_id"),
-                F.lit(run_id).alias("run_id"),
-                "group_key", "n_chunks", "n_rows", "raw_bytes", "enc_bytes",
-                "wall_ms", "codecs",
-                F.lit("done").alias("status"),
-                F.current_timestamp().alias("committed_at"),
-                F.lit(self.params).alias("params"),
-            )
-        )
-        lineage_rows.write.mode("append").parquet(f"{self.out_dir}/lineage")
-        done = self.lineage().filter(
-            (F.col("snapshot_id") == self.snapshot_id)
-            & (F.col("job_id") == self.job_id)
-            & (F.col("status") == "done")
-        )
-        agg = done.agg(
-            F.count("*").alias("groups"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        ).first()
+        # commit = lineage append
+        committed = Observation()
+        self._commit_rows(run_id).observe(committed, *_totals()).write.mode(
+            "append"
+        ).parquet(f"{self.out_dir}/lineage")
+        own = [
+            g for g in gens
+            if (g["snapshot_id"], g["job_id"], g["status"])
+            == (self.snapshot_id, self.job_id, "done")
+        ]
+        # sums over zero rows are null: a run that commits nothing
+        total = {
+            k: sum(t[k] or 0 for t in [committed.get, *own]) for k in
+            ("groups", "rows", "raw_bytes", "enc_bytes")
+        }
         return {
             "run_id": run_id,
             "wall_s": time.time() - t0,
-            "groups_done": agg["groups"],
-            "rows": agg["rows"],
-            "raw_bytes": agg["raw"],
-            "enc_bytes": agg["enc"],
+            "groups_done": total["groups"],
+            "rows": total["rows"],
+            "raw_bytes": total["raw_bytes"],
+            "enc_bytes": total["enc_bytes"],
         }
 
     # --------------------------------------------------------------- reading
@@ -352,12 +393,7 @@ class EncodeJob:
             f"{self.out_dir}/chunks"
         )
         committed = (
-            self.lineage()
-            .filter(
-                (F.col("snapshot_id") == self.snapshot_id)
-                & (F.col("job_id") == self.job_id)
-                & (F.col("status") == "done")
-            )
+            self._done(self.lineage())
             .groupBy("group_key")
             .agg(F.min("run_id").alias("run"))
         )

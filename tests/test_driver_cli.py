@@ -254,3 +254,155 @@ def test_cli_decode_stats_only(spark, tmp_path, capsys):
             "--cpus", "4", "decode", "--chunks", out,
             "--schema-json", f"{out}/schema.json", "--filter", "id >= 250"])
     capsys.readouterr()
+
+
+# ------------------------------------------------------ Python worker warm-up
+
+_PYTHON_OPS = ("MapInArrow", "FlatMapGroupsInArrow", "ArrowEvalPython",
+               "BatchEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+
+
+def _group_jobs(spark, group):
+    """``(job id, task count, executed plan)`` of every job in ``group``,
+    read once the listener bus has caught up."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = {}
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    while execs.hasNext():
+        ex = execs.next()
+        ids = ex.jobs().keys().iterator()
+        while ids.hasNext():
+            plans[int(ids.next())] = ex.physicalPlanDescription()
+    st = sc.statusTracker()
+    out = []
+    for j in sorted(st.getJobIdsForGroup(group)):
+        stages = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+        out.append((j, sum(s.numTasks for s in stages if s), plans.get(j, "")))
+    return out
+
+
+def _cli_in_group(spark, group, argv):
+    """Run ``driver.main`` under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return driver.main(stop_session=False, argv=["--cpus", "4", *argv])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _warm_up_jobs(jobs):
+    """The warm-up's signature: a 1-task MapInArrow over a 1-row range."""
+    return [(j, n, plan) for j, n, plan in jobs if n == 1 and "MapInArrow" in plan
+            and "Range (0, 1, step=1, splits=Some(1))" in plan]
+
+
+def test_arrow_commands_run_one_warm_up_job_in_the_callers_group(
+        spark, tmp_path, capsys, monkeypatch):
+    """encode, decode and verify each start the Python worker daemon with
+    exactly one 1-task MapInArrow job in the caller's job group when their
+    SparkContext has not been warmed, and join it before ``main`` returns:
+    no job is left running. A later command in a warmed context runs none."""
+    threads = []
+    start = driver._start_warm_up
+
+    def recording_start(s):
+        threads.append(start(s))
+        return threads[-1]
+
+    monkeypatch.setattr(driver, "_start_warm_up", recording_start)
+    monkeypatch.setattr(driver, "_WARMED", set())
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, f"repo{i % 3}", f"path/{i:03d}.py", f"c{i:04d}") for i in range(90)],
+        "id long, repo string, path string, commit string",
+    ).write.parquet(src)
+    out = str(tmp_path / "enc")
+    commands = {
+        "encode": ["encode", "--input", src, "--out", out],
+        "decode": ["decode", "--chunks", out, "--schema-json", f"{out}/schema.json",
+                   "--out", str(tmp_path / "dec")],
+        "verify": ["verify", "--input", src, "--chunks", out],
+    }
+    sc = spark.sparkContext
+    for i, (cmd, argv) in enumerate(commands.items()):
+        driver._WARMED.clear()  # as if each command ran in a new context
+        group = f"test-warm-up-{cmd}"
+        assert _cli_in_group(spark, group, argv) == 0, cmd
+        assert len(threads) == i + 1 and not threads[-1].is_alive(), cmd
+        jobs = _group_jobs(spark, group)
+        assert len(_warm_up_jobs(jobs)) == 1, (cmd, [(j, n) for j, n, _ in jobs])
+        assert sc.statusTracker().getActiveJobsIds() == [], cmd
+
+    # the context is warm now: the same command starts no second warm-up
+    assert _cli_in_group(spark, "test-warm-up-again", commands["verify"]) == 0
+    assert threads[-1] is None
+    assert _warm_up_jobs(_group_jobs(spark, "test-warm-up-again")) == []
+    capsys.readouterr()
+
+
+def test_commands_without_arrow_stages_start_no_python_job(
+        spark, tmp_path, capsys, monkeypatch):
+    """decode --stats-only, to-json, from-json, one-row-schema and csv of
+    an input without float/double columns run no Arrow Python operator, so
+    they start no warm-up either, even in a context not yet warmed."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, f"repo{i % 2}", f"p{i:03d}") for i in range(40)],
+        "id long, repo string, path string",
+    ).write.parquet(src)
+    out = str(tmp_path / "enc")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", out,
+        "--order-cols", "path"]) == 0
+    sj = str(tmp_path / "schema.json")
+    commands = {
+        "stats-only": ["decode", "--chunks", out, "--schema-json", f"{out}/schema.json",
+                       "--stats-only"],
+        "to-json": ["to-json", "--input", src, "--out", sj],
+        "from-json": ["from-json", "--input", sj, "--out", str(tmp_path / "footer")],
+        "one-row-schema": ["one-row-schema", "--input", src, "--out", str(tmp_path / "one")],
+        "csv": ["csv", "--input", src, "--out", str(tmp_path / "csv")],
+    }
+    monkeypatch.setattr(driver, "_WARMED", set())
+    for cmd, argv in commands.items():
+        driver._WARMED.clear()  # a command that asked for a warm-up would get one
+        group = f"test-no-warm-up-{cmd}"
+        assert _cli_in_group(spark, group, argv) == 0, cmd
+        python_jobs = [j for j, _, plan in _group_jobs(spark, group)
+                       if any(op in plan for op in _PYTHON_OPS)]
+        assert python_jobs == [], cmd
+    capsys.readouterr()
+
+
+def test_failed_warm_up_warns_and_leaves_the_result_alone(
+        spark, tmp_path, capsys, caplog, monkeypatch):
+    """A warm-up that raises logs a warning naming the error; the command's
+    exit code and printed JSON are those of a run whose warm-up worked."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, f"repo{i % 2}", f"p{i:03d}", f"c{i:03d}") for i in range(60)],
+        "id long, repo string, path string, commit string",
+    ).write.parquet(src)
+    out = str(tmp_path / "enc")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", out]) == 0
+    verify = ["--cpus", "4", "verify", "--input", src, "--chunks", out]
+    capsys.readouterr()
+    rc_ok = driver.main(stop_session=False, argv=verify)
+    printed_ok = capsys.readouterr().out
+
+    def broken(_spark):
+        raise RuntimeError("warm-up exploded on purpose")
+
+    monkeypatch.setattr(driver, "_warm_python_workers", broken)
+    monkeypatch.setattr(driver, "_WARMED", set())
+    with caplog.at_level("WARNING"):
+        rc = driver.main(stop_session=False, argv=verify)
+    assert rc == rc_ok == 0
+    assert capsys.readouterr().out == printed_ok
+    warnings = [r for r in caplog.records if r.levelname == "WARNING"]
+    assert any("warm-up exploded on purpose" in r.getMessage() for r in warnings), \
+        caplog.text

@@ -17,6 +17,25 @@ from parquet2csv_spark.plans.lineage import EncodeJob
 from parquet2csv_spark.sources.corpus import CORPUS_DDL, generate_corpus
 
 N_ROWS = 6000
+_SUMMARY = ("groups_done", "rows", "raw_bytes", "enc_bytes")
+
+
+def _summary_from_lineage(job):
+    """The run summary's totals as a post-commit lineage re-read of this
+    (snapshot, job)'s done rows computes them."""
+    row = (
+        job.lineage()
+        .filter((F.col("snapshot_id") == job.snapshot_id)
+                & (F.col("job_id") == job.job_id) & (F.col("status") == "done"))
+        .agg(F.count("*").alias("groups_done"), F.sum("n_rows").alias("rows"),
+             F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"))
+        .first()
+    )
+    return row.asDict()
+
+
+def _totals(summary):
+    return {k: summary[k] for k in _SUMMARY}
 
 
 @pytest.fixture(scope="module")
@@ -33,9 +52,12 @@ def test_resume_encodes_only_missing_groups(spark, corpus, tmp_path_factory):
     # simulated crash: first run commits only groups whose key contains '0'
     r1 = job.run(corpus, only_groups_like="0")
     assert 0 < r1["groups_done"]
+    assert _totals(r1) == _summary_from_lineage(job)
 
     # second run completes the rest; first-run groups must NOT be re-encoded
     r2 = job.run(corpus)
+    assert _totals(r2) == _summary_from_lineage(job)
+    assert r2["rows"] == N_ROWS
     lin = job.lineage()
     assert lin.filter(F.col("run_id") == r2["run_id"]).join(
         lin.filter(F.col("run_id") == r1["run_id"]).select("group_key"),
@@ -279,7 +301,7 @@ def _job_group(spark, name):
 def test_fresh_encode_runs_no_lineage_job_before_its_scan(spark, corpus, tmp_path_factory):
     """A fresh out dir has no lineage: the resume state is one driver-side
     FileSystem probe, so the first job of the run is the encode itself and
-    no lineage.py job precedes it; the whole run stays within 13 jobs."""
+    no lineage.py job precedes it; the whole run stays within 6 jobs."""
     out = str(tmp_path_factory.mktemp("budget_job"))
     job = EncodeJob(spark, out, snapshot_id="snapB", chunk_rows=1024, chunk_bytes=1 << 20)
     with _job_group(spark, "test-fresh-encode-budget") as jobs:
@@ -291,7 +313,7 @@ def test_fresh_encode_runs_no_lineage_job_before_its_scan(spark, corpus, tmp_pat
         return any("plans/lineage.py" in s for s in site[1])
 
     assert not is_lineage(jobs[0]), jobs[0]
-    assert len(jobs) <= 13, [s for _, s, _ in jobs]
+    assert len(jobs) <= 6, [s for _, s, _ in jobs]
 
 
 def test_missing_lineage_reads_empty_without_tasks(spark, tmp_path_factory):
@@ -386,7 +408,74 @@ def test_run_summary_counts_only_its_own_job(spark, tmp_path_factory):
     a = EncodeJob(spark, out, snapshot_id="snapJ", job_id="a", chunk_rows=256)
     ra = a.run(src)
     assert ra["rows"] == 400
+    assert _totals(ra) == _summary_from_lineage(a)
     one = src.orderBy("path", "commit").limit(1)
-    rb = EncodeJob(spark, out, snapshot_id="snapJ", job_id="b",
-                   chunk_rows=256).run(one)
+    b = EncodeJob(spark, out, snapshot_id="snapJ", job_id="b", chunk_rows=256)
+    rb = b.run(one)
     assert (rb["groups_done"], rb["rows"]) == (1, 1)
+    assert _totals(rb) == _summary_from_lineage(b)
+
+
+def test_run_on_a_finished_out_dir_reports_the_committed_totals(spark, tmp_path_factory):
+    """A run that commits nothing (every group already done) observes null
+    sums on its empty lineage append; its summary is the earlier runs'
+    totals, not nulls."""
+    out = str(tmp_path_factory.mktemp("finished"))
+    src = generate_corpus(spark, 300, seed=11)
+    job = EncodeJob(spark, out, snapshot_id="snapF", chunk_rows=128)
+    first = job.run(src)
+    again = job.run(src)
+    assert _totals(again) == _totals(first)
+    assert first["rows"] == 300 and again["run_id"] != first["run_id"]
+    assert job.lineage().filter(F.col("run_id") == again["run_id"]).count() == 0
+
+
+def test_commit_aggregate_matches_the_stats_codecs_join(spark, tmp_path_factory):
+    """The commit's one ``groupBy(group_key)`` writes the lineage rows the
+    earlier two aggregates and their join wrote, on an input whose groups
+    pick different codec sets; its scan reads each column's codec tag and
+    never the frames."""
+    from parquet2csv_spark.operators.encode import CHUNKS_DDL
+
+    # codec choices are cached per column and 4x row-count band, so the
+    # groups differ in size as well as in content (short distinct texts,
+    # word salad, all-null strings)
+    words = ("lorem", "ipsum", "dolor", "sit", "amet", "consectetur")
+
+    def text(g, i):
+        if g == 1:
+            return " ".join(words[(i * 7 + k * k) % 6] for k in range(30))
+        return None if g == 2 else f"text {i} {'x' * (i % 37)}"
+
+    rows = [(i, f"r{g}", f"p{i:05d}", 7 if g == 0 else i * 1009, text(g, i))
+            for g, n in enumerate((700, 150, 30)) for i in range(n)]
+    src = spark.createDataFrame(rows, "id long, repo string, path string, n long, s string")
+    out = str(tmp_path_factory.mktemp("commit_agg"))
+    job = EncodeJob(spark, out, snapshot_id="snapM", order_cols=["path"])
+    run_id = job.run(src)["run_id"]
+
+    written = spark.read.schema(CHUNKS_DDL).parquet(f"{out}/chunks/run={run_id}")
+    stats = written.groupBy("group_key").agg(
+        F.count("*").alias("n_chunks"),
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.sum("wall_ms").alias("wall_ms"),
+    )
+    codecs = (
+        written.select("group_key", F.explode("cols").alias("c"))
+        .groupBy("group_key")
+        .agg(F.concat_ws(",", F.sort_array(F.collect_set("c.codec"))).alias("codecs"))
+    )
+    cols = ["group_key", "n_chunks", "n_rows", "raw_bytes", "enc_bytes", "wall_ms", "codecs"]
+    want = sorted(stats.join(codecs, on="group_key").select(*cols).collect())
+    got = sorted(job.lineage().select(*cols).collect())
+    assert got == want
+    assert len({r["codecs"] for r in got}) > 1, got
+
+    commit = job._commit_rows(run_id)
+    plan = commit._sc._jvm.PythonSQLUtils.explainString(
+        commit._jdf.queryExecution(), "formatted"
+    )
+    read = [line for line in plan.splitlines() if "ReadSchema" in line]
+    assert len(read) == 1 and "codec" in read[0] and "frame" not in read[0], read
