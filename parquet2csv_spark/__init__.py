@@ -22,3 +22,9 @@ as an idiomatic Spark engine:
 """
 
 __version__ = "0.1.0"
+
+from ._zipimport import install as _install_zipimport_guard
+
+# every Python worker that unpickles an engine UDF imports this package:
+# stop its per-task importlib.invalidate_caches() from re-parsing pyspark.zip
+_install_zipimport_guard()

@@ -25,7 +25,6 @@ reading exactly ONE committed run per group — never on byte identity.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -33,10 +32,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import alp, encode_array, foref, rle, vec
-
-# "ratio" (default, north_star optimizes compressed size) or "fast"
-# (skips symbol-table candidates on large blobs). Workers inherit the env.
-DEFAULT_PROFILE = os.environ.get("SPARK_GRAFT_CODEC_PROFILE", "ratio")
 
 _SAMPLE_VALUES = 4096       # max values sampled per chunk
 _ZLIB_TRIAL = 1 << 16       # bytes of blob used in the deflate trial
@@ -121,7 +116,7 @@ def _trial_sample(arr: pa.Array) -> pa.Array:
     return arr.take(pa.array(np.arange(0, n, step, dtype=np.int64)[:_TRIAL_VALUES]))
 
 
-def _string_candidates(st: ColumnStats, profile: str) -> list[str]:
+def _string_candidates(st: ColumnStats) -> list[str]:
     """Candidate specs in descending expected *speed* order; the trial pass
     picks the smallest, with a tolerance-based preference for earlier
     (faster) entries."""
@@ -129,7 +124,7 @@ def _string_candidates(st: ColumnStats, profile: str) -> list[str]:
     if st.ndv_ratio < 0.7:
         cands.append("rledict:plain+z" if st.run_ratio < 0.5 else "dict:plain+z")
     cands.append("plain+z")
-    if st.avg_len >= 4 and (profile == "ratio" or st.n * st.avg_len < (1 << 20)):
+    if st.avg_len >= 4:
         if st.ndv_ratio >= 0.05:  # fsst useless on a tiny dictionary
             cands.append("fsst+z")
         if 0.05 < st.ndv_ratio < 0.7:
@@ -138,19 +133,14 @@ def _string_candidates(st: ColumnStats, profile: str) -> list[str]:
     return cands
 
 
-def choose(arr: pa.Array, stats: ColumnStats | None = None, profile: str | None = None) -> str:
+def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
     """Pick a codec spec (see codecs.__init__ mini-language) for one chunk.
 
     Integers use an analytic cost model (exact sizes are computable from
     range / run stats). Strings use trial encodes of a small sample — the
     measured sizes beat any analytic model for symbol-table / deflate
     interactions — with a speed-ordered tie-break.
-
-    ``profile``: "ratio" (default — north_star optimizes compressed size)
-    or "fast" (skips symbol-table candidates on large blobs).
     """
-    if profile is None:
-        profile = DEFAULT_PROFILE
     if vec.kind_of(arr.type) == vec.KIND_LIST:
         return "list"  # element values get their own recursive selection
     st = stats or analyze(arr)
@@ -256,7 +246,7 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None, profile: str | None 
         big_sample = filled_all.slice(0, max(16, keep))
         sizes_l: list[tuple[float, str]] = []
         trial_ctx_l: dict = {}
-        for spec in _string_candidates(st, profile):
+        for spec in _string_candidates(st):
             try:
                 sizes_l.append(
                     (float(len(encode_array(big_sample, spec, trial_ctx_l, spec))), spec)
@@ -289,7 +279,7 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None, profile: str | None 
     # cost. Scoped to this choose() call (a pure function of the sample):
     # selection stays deterministic.
     trial_ctx: dict = {}
-    for spec in _string_candidates(st, profile):
+    for spec in _string_candidates(st):
         try:
             s1 = len(encode_array(sample, spec, trial_ctx, spec))
             if exact:

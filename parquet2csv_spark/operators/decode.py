@@ -19,7 +19,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, StructType
 
 from ..codecs import decode_array
 
@@ -123,12 +123,17 @@ def prune_chunks_bloom(chunks_df: DataFrame, col: str, values) -> DataFrame:
 
 def _has_bloom_field(chunks_df: DataFrame) -> bool:
     """True when the chunks table carries the (r7+) bloom field — pruning
-    must not reference a missing struct field on legacy tables."""
-    try:
-        cols_t = chunks_df.schema["cols"].dataType.elementType
-        return any(f.name == "bloom" for f in cols_t.fields)
-    except Exception:
-        return False
+    must not reference a missing struct field on legacy tables. Raises
+    ``ValueError`` when ``cols`` is missing or not an array of structs:
+    that is not a chunks table at all."""
+    if "cols" not in chunks_df.columns:
+        raise ValueError(f"not a chunks table: no 'cols' column in {chunks_df.columns}")
+    cols_t = chunks_df.schema["cols"].dataType
+    if not (isinstance(cols_t, ArrayType) and isinstance(cols_t.elementType, StructType)):
+        raise ValueError(
+            f"not a chunks table: 'cols' is {cols_t.simpleString()}, not array<struct>"
+        )
+    return "bloom" in cols_t.elementType.fieldNames()
 
 
 def _arrow_schema_for(spark_schema: StructType) -> pa.Schema:

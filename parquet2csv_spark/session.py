@@ -26,10 +26,14 @@ def get_spark(cpus: int | None = None, app: str = "parquet2csv_spark") -> SparkS
         .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 16)))
         # one task per slot: every Python Arrow stage (parallel-scan slices,
         # grouped encode, chunk-decode splits via minPartitionNum) sizes
-        # itself from this, and each Python task pays ~0.25-0.3 s before its
-        # first batch even on a reused worker — a second wave costs that
-        # again (4-core box, warm trivial mapInArrow: 0.56 s at 4 tasks,
-        # 1.46-1.80 s at 16)
+        # itself from this. Most of a reused worker's per-task cost was
+        # PySpark's per-task importlib.invalidate_caches() re-parsing
+        # pyspark.zip; the zip-importer guard (_zipimport) skips that once
+        # an engine UDF has run on the worker (4-core box, warm mapInArrow
+        # of an engine UDF, one row per task, median of 7: 4 tasks
+        # 0.38-0.43 s -> 0.17-0.20 s, 16 tasks 1.10 s -> 0.34-0.37 s).
+        # Each extra wave still costs ~0.06 s, and a freshly forked worker
+        # pays one eager re-read and its imports in its first task.
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -460,6 +460,25 @@ def test_bloom_pruning_skips_legacy_tables_without_bloom_field(spark):
     assert [r["v"] for r in got.collect()] == [42]
 
 
+def test_has_bloom_field_checks_the_cols_schema(spark):
+    """A current chunks table has the bloom field and a legacy (pre-r7)
+    one has not; a table whose ``cols`` is missing or not an array of
+    structs is not a chunks table, and the check says so instead of
+    silently skipping Bloom pruning."""
+    from parquet2csv_spark.operators.decode import _has_bloom_field
+
+    chunks = encode_table(spark.createDataFrame([("a", 1)], "path string, v bigint"))
+    assert _has_bloom_field(chunks)
+    legacy = chunks.withColumn(
+        "cols", F.expr("transform(cols, c -> struct(c.name as name, c.frame as frame))")
+    )
+    assert not _has_bloom_field(legacy)
+    with pytest.raises(ValueError, match="no 'cols' column"):
+        _has_bloom_field(chunks.drop("cols"))
+    with pytest.raises(ValueError, match="'cols' is array<string>"):
+        _has_bloom_field(chunks.withColumn("cols", F.expr("transform(cols, c -> c.name)")))
+
+
 def test_scan_stats_selectivity_preview(spark):
     """r7: ``scan_stats`` answers "how selective is this predicate" from
     chunk metadata only — kept counts match what ``_apply_filters`` keeps,

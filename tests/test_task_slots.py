@@ -176,3 +176,67 @@ def test_parallelize_detector():
 def test_no_engine_code_builds_a_python_rdd_source():
     found = _engine_offenders(_parallelize_calls)
     assert not found, found
+
+
+def test_reused_engine_worker_does_not_reparse_zip_archives(spark):
+    """A Python worker that has unpickled an engine UDF stops re-parsing
+    its zip archives (``pyspark.zip``, py4j) on each task's
+    ``importlib.invalidate_caches()``.
+
+    Each 1-task job's UDF references an engine function, so unpickling it
+    installs the stat guard. The UDF counts the directory reads of one
+    more ``importlib.invalidate_caches()``. A task whose own start-up
+    invalidation already went through the guard (its worker ran an engine
+    UDF before) must read nothing; a worker's first such task may read
+    each archive at most once."""
+    import importlib
+    import zipimport
+
+    from parquet2csv_spark import _zipimport
+    from parquet2csv_spark.operators.decode import decode_table
+
+    def count_reads(batches):
+        assert callable(decode_table)  # unpickling it imports the package
+        primed = bool(_zipimport._signatures)
+        reads: list[str] = []
+        eager_read = zipimport._read_directory
+
+        def counting_read(path):
+            reads.append(path)
+            return eager_read(path)
+
+        zipimport._read_directory = counting_read
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = eager_read
+        archives = {
+            imp.archive for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+        }
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "primed": [primed],
+            "reads": [len(reads)],
+            "distinct": [len(set(reads))],
+            "archives": [len(archives)],
+            "guarded": [hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")],
+        })
+
+    schema = "primed boolean, reads long, distinct long, archives long, guarded boolean"
+    rows = []
+    for _ in range(12):  # until a task lands on an already-guarded worker
+        rows += spark.range(0, 1, 1, 1).mapInArrow(count_reads, schema).collect()
+        if any(r.primed for r in rows):
+            break
+    if sys.version_info >= (3, 13) or not any(r.archives for r in rows):
+        assert all(r.reads == 0 for r in rows), rows
+        return  # lazy invalidation, or pyspark not imported from a zip
+    assert all(r.guarded for r in rows), rows
+    assert any(r.primed for r in rows), rows
+    for r in rows:
+        if r.primed:
+            assert r.reads == 0, rows
+        else:
+            assert r.reads == r.distinct <= r.archives, rows
