@@ -12,15 +12,19 @@ global choice, each column chunk gets the codec its own data favors
 (FSST/dict for path-like and content-like text, RLE/dict for
 low-cardinality repo/lang/commit — as the north_star prescribes).
 
-Determinism contract (weakened in round 4, by design): the sample is a
-fixed stride slice, so a single ``choose``/``encode_best`` call is
-deterministic in its inputs — the ungrouped ``encode_table`` path and the
-pinned ``encode_metrics_documents`` oracle rely on exactly that (strictly
-per-task spec cache). The grouped path (``encode_salted``) adds a
-worker-LIFETIME spec cache, so its FSST/dict choices depend on the
-task-to-worker schedule: frames are decode-exact but NOT byte-identical
-across runs. Resume correctness therefore rests on ``EncodeJob.chunks()``
-reading exactly ONE committed run per group — never on byte identity.
+Determinism contract: the sample is a fixed stride slice, so a single
+``choose``/``encode_best`` call is deterministic in its inputs. The codec
+``ctx`` (chosen specs per column and size band, FSST symbol tables) lives
+for exactly one encode task: ``encode_batches`` keeps one per call and
+``encode_salted`` one per task's copy of its closure. Frames are
+therefore a pure function of each task's sequence of chunks or groups,
+never of which worker process ran the task, so one-shot runs at the same
+slot count write byte-identical frames (the pinned
+``encode_metrics_documents`` oracle relies on this). A resume re-packs
+only the pending groups into tasks, so its frames may differ from a
+one-shot run's but decode equal; resume correctness rests on
+``EncodeJob.chunks()`` reading exactly ONE committed run per group, never
+on byte identity.
 """
 
 from __future__ import annotations

@@ -70,18 +70,25 @@ def unpack_validity(buf: bytes, n: int) -> np.ndarray:
 
 # ------------------------------------------------------------ int-like paths
 
+def ints_to_int64(arr: pa.Array) -> pa.Array:
+    """Any int-like array -> int64 Arrow array of its stored values (days
+    for date32, counts of the type's unit for date64/time/timestamp/
+    duration); nulls are kept. Arrow has no date32 -> int64 cast, so
+    date32 goes via int32."""
+    typ = arr.type
+    if pa.types.is_int64(typ):
+        return arr
+    if pa.types.is_date32(typ):
+        arr = arr.cast(pa.int32())
+    return arr.cast(pa.int64())
+
+
 def ints_to_numpy(arr: pa.Array) -> np.ndarray:
     """Any int-like/bool array -> int64 ndarray (nulls become 0)."""
-    typ = arr.type
-    if pa.types.is_boolean(typ):
+    if pa.types.is_boolean(arr.type):
         a = arr.fill_null(False) if arr.null_count else arr
         return np.asarray(a).astype(np.int64)
-    if pa.types.is_timestamp(typ) or pa.types.is_time(typ) or pa.types.is_duration(typ):
-        arr = arr.cast(pa.int64())
-    elif pa.types.is_date(typ):
-        arr = arr.cast(pa.int32()).cast(pa.int64())
-    elif not pa.types.is_int64(typ):
-        arr = arr.cast(pa.int64())
+    arr = ints_to_int64(arr)
     a = arr.fill_null(0) if arr.null_count else arr
     return a.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 

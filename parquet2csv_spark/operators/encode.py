@@ -28,15 +28,13 @@ no shuffle)::
 from __future__ import annotations
 
 import hashlib
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..codecs import raw_size, selector
-from ..codecs.vec import kind_of as vec_kind
+from ..codecs import raw_size, selector, vec
 
 CHUNKS_DDL = (
     "chunk_id string, group_key string, seq bigint, n_rows bigint, "
@@ -123,37 +121,36 @@ def split_points(tbl: pa.Table, chunk_rows: int, chunk_bytes: int) -> list[tuple
 
 
 def _zone_map(arr: pa.Array) -> dict:
-    """Per-column min/max for chunk pruning. Conservative: any doubt → None
-    (pruning keeps the chunk). Exact int64 bounds for int-like columns;
-    string bounds capped at 128 chars (a truncated prefix is a valid LOWER
-    bound; an upper bound weakened by truncation is dropped)."""
+    """Per-column min/max for chunk pruning; None disables pruning (the
+    chunk is kept). Exact int64 bounds for int-like columns, in the units
+    of :func:`codecs.vec.ints_to_int64` (date32 → days, timestamp → epoch
+    units); durations get none (Arrow has no ``min_max`` kernel for them).
+    String bounds are capped at 128 chars (a truncated prefix is a valid
+    LOWER bound; an upper bound weakened by truncation is dropped); binary
+    columns get none."""
     import pyarrow.compute as pc
 
     out = {"lo_long": None, "hi_long": None, "lo_str": None, "hi_str": None,
            "bloom": None}
     if len(arr) == 0 or arr.null_count == len(arr):
         return out
-    try:
-        kind = vec_kind(arr.type)
-        if kind == "i":
-            mm = pc.min_max(arr)
-            lo, hi = mm["min"], mm["max"]
-            out["lo_long"] = int(lo.cast(pa.int64()).as_py())
-            out["hi_long"] = int(hi.cast(pa.int64()).as_py())
-        elif kind == "s" and not (
-            pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type)
-        ):
-            mm = pc.min_max(arr)
-            lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            out["lo_str"] = lo[:128]
-            out["hi_str"] = hi if len(hi) <= 128 else None
-            # membership filter: makes ==/in point lookups selective on
-            # exactly the columns where [lo,hi] prefix ranges are widest
-            from .bloom import build_bloom
+    typ = arr.type
+    kind = vec.kind_of(typ)
+    if kind == vec.KIND_INT and not pa.types.is_duration(typ):
+        mm = pc.min_max(vec.ints_to_int64(arr))
+        out["lo_long"], out["hi_long"] = mm["min"].as_py(), mm["max"].as_py()
+    elif kind == vec.KIND_STRING and not (
+        pa.types.is_binary(typ) or pa.types.is_large_binary(typ)
+    ):
+        mm = pc.min_max(arr)
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        out["lo_str"] = lo[:128]
+        out["hi_str"] = hi if len(hi) <= 128 else None
+        # membership filter: makes ==/in point lookups selective on
+        # exactly the columns where [lo,hi] prefix ranges are widest
+        from .bloom import build_bloom
 
-            out["bloom"] = build_bloom(arr)
-    except Exception:
-        pass
+        out["bloom"] = build_bloom(arr)
     return out
 
 
@@ -203,31 +200,12 @@ def _rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, schema=CHUNKS_ARROW)
 
 
-# Worker-lifetime codec cache. A UDF closure is re-pickled PER TASK, so a
-# plain `ctx = {}` inside the builder only amortizes selector decisions and
-# FSST tables across the groups of one task. PySpark reuses python worker
-# processes across tasks (spark.python.worker.reuse), and module globals
-# survive that reuse — so caches namespaced here by a per-job id carry
-# across ALL tasks a worker runs for that encode job, while two different
-# jobs (different tables, same column names) can never cross-pollute.
-_WORKER_CACHE: dict[str, dict] = {}
-
-
-def _job_ctx(namespace: str) -> dict:
-    if len(_WORKER_CACHE) > 8:  # bound stale namespaces from prior jobs
-        for k in list(_WORKER_CACHE):
-            if k != namespace:
-                _WORKER_CACHE.pop(k, None)
-    return _WORKER_CACHE.setdefault(namespace, {})
-
-
 # ----------------------------------------------------------- ungrouped path
 
 def encode_batches(
     batches: Iterator[pa.RecordBatch],
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    specs: dict[str, str] | None = None,
 ) -> Iterator[pa.RecordBatch]:
     """The ungrouped encode kernel: stream of record batches → stream of
     chunks-table batches with content-addressed chunk ids. Shared verbatim
@@ -235,13 +213,9 @@ def encode_batches(
     read+encode source (sources.parallel_scan.parallel_scan_encode), so
     both produce byte-identical frames for identical input slices.
 
-    The codec ctx is deliberately per-call (NOT the worker-lifetime
-    _WORKER_CACHE): with a per-call cache the frames are a pure function
-    of the partition's data, which the byte-pinned engine-metrics oracle
-    depends on; a worker-lifetime cache would make codec choices and FSST
-    tables depend on which task a worker happened to run first. This path
-    has few, chunky partitions, so the amortization the grouped path
-    needs is immaterial here."""
+    One call is one task, and its codec ctx lives for the call, so the
+    frames are a pure function of the partition's batches (the contract
+    in :mod:`codecs.selector`)."""
     pending: list[pa.RecordBatch] = []
     pending_rows = 0
     pending_bytes = 0
@@ -253,7 +227,7 @@ def encode_batches(
         rows = []
         for off, ln in split_points(tbl, chunk_rows, chunk_bytes):
             piece = tbl.slice(off, ln)
-            row = encode_chunk(piece, "", "", seq, specs, ctx)
+            row = encode_chunk(piece, "", "", seq, None, ctx)
             h = hashlib.sha1()
             for c in row["cols"]:
                 h.update(c["frame"])
@@ -278,13 +252,12 @@ def encode_table(
     df: DataFrame,
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    specs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Per-partition chunked encode; no shuffle. Chunk ids are
     content-addressed (sha1 of frames) — identical data → identical ids."""
 
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from encode_batches(batches, chunk_rows, chunk_bytes, specs)
+        yield from encode_batches(batches, chunk_rows, chunk_bytes)
 
     return df.mapInArrow(enc, CHUNKS_DDL)
 
@@ -369,27 +342,24 @@ def encode_salted(
     order_cols: list[str],
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    specs: dict[str, str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Stage 2: one shuffle on ``_gk``; each group is sorted by the order
     columns, split at row/byte caps, and encoded. Chunk id =
     ``group_key:seq`` — deterministic, so re-running a group is idempotent.
 
-    ``num_partitions`` controls the encode-stage task granularity: the
-    explicit ``repartition(n, _gk)`` hash-partitioning satisfies the
-    groupBy's distribution requirement, so there is STILL exactly one data
-    shuffle (plan-verified in tests). Default: one task per slot
-    (``defaultParallelism``). Every Python task pays a fixed start-up cost
-    before its first group, so a second wave costs more than the balance it
-    buys: on a 4-core box (cold sessions, 25k-row corpus, 96 salted
-    groups; CLI encodes and noop-sink encodes) the main job took 3.2-3.9 s
-    at 4 tasks, 3.4-4.3 s at 8 and 4.5-6.1 s at 16. Salting caps every
-    group at ~``group_factor × chunk_bytes``, which bounds how uneven the
-    tasks can be. The remaining trade: at high core counts with few groups, several
-    salt-capped groups can hash into one task and set the stage's tail."""
-    if num_partitions is None:
-        num_partitions = salted.sparkSession.sparkContext.defaultParallelism
+    The encode stage runs one task per slot: the explicit
+    ``repartition(defaultParallelism, _gk)`` hash-partitioning satisfies
+    the groupBy's distribution requirement, so there is STILL exactly one
+    data shuffle (plan-verified in tests). Every Python task pays a fixed
+    start-up cost before its first group, so a second wave costs more than
+    the balance it buys: on a 4-core box (cold sessions, 25k-row corpus,
+    96 salted groups; CLI encodes and noop-sink encodes) the main job took
+    3.2-3.9 s at 4 tasks, 3.4-4.3 s at 8 and 4.5-6.1 s at 16. Salting caps
+    every group at ~``group_factor × chunk_bytes``, which bounds how uneven
+    the tasks can be. The remaining trade: at high core counts with few
+    groups, several salt-capped groups can hash into one task and set the
+    stage's tail."""
+    slots = salted.sparkSession.sparkContext.defaultParallelism
     # sort JVM-side: groupBy(...).applyInArrow requires a within-partition
     # sort on _gk anyway; widening it to (_gk, *order_cols) rides the same
     # Tungsten sort (the required _gk ordering is its prefix — still ONE
@@ -402,34 +372,25 @@ def encode_salted(
     # — chunk ids are positional (gk:seq), so the row order IS part of the
     # determinism contract, and EncodeJob folds this convention into its
     # params string (ord=nl) so mixed-convention resumes are refused.
-    salted = salted.repartition(num_partitions, "_gk").sortWithinPartitions(
+    salted = salted.repartition(slots, "_gk").sortWithinPartitions(
         F.col("_gk").asc(), *[F.col(c).asc_nulls_last() for c in order_cols]
     )
     data_cols = [c for c in salted.columns if c != "_gk"]
-
-    # worker-lifetime codec cache: selector decisions and FSST tables carry
-    # across ALL groups a python worker processes in this stage (groups of
-    # one table are near-identically distributed; stale entries are guarded
-    # by fsst.reusable() and the never-worse-than-plain fallback). The
-    # module-global _WORKER_CACHE namespace makes this survive task
-    # boundaries in reused python workers — a per-task closure dict only
-    # amortized within one task's groups. Tradeoff, accepted HERE only:
-    # frame bytes become a function of the task→worker schedule (±1% size
-    # drift run-to-run); decode bit-identity, multiset resume exactness
-    # and the chunk-count lineage oracle are all schedule-independent, and
-    # the byte-pinned metrics oracle rides encode_table, which keeps a
-    # strictly per-task cache.
-    cache_ns = uuid.uuid4().hex
+    # one codec cache per task: each task unpickles its own copy of the
+    # closure, so its groups share this dict (selector decisions and FSST
+    # tables; stale entries are guarded by fsst.reusable() and the
+    # never-worse-than-plain fallback), and its frames depend only on the
+    # task's sequence of groups (the contract in codecs.selector)
+    ctx: dict = {}
 
     def enc_group(tbl: pa.Table) -> pa.Table:
-        ctx = _job_ctx(cache_ns)
         gk = tbl["_gk"][0].as_py() if tbl.num_rows else ""
         # rows arrive ordered by order_cols (JVM sort above)
         body = tbl.select(data_cols)
         rows = []
         for seq, (off, ln) in enumerate(split_points(body, chunk_rows, chunk_bytes)):
             piece = body.slice(off, ln)
-            rows.append(encode_chunk(piece, f"{gk}:{seq:06d}", gk, seq, specs, ctx))
+            rows.append(encode_chunk(piece, f"{gk}:{seq:06d}", gk, seq, None, ctx))
         return pa.Table.from_batches([_rows_to_batch(rows)], schema=CHUNKS_ARROW)
 
     return salted.groupBy("_gk").applyInArrow(enc_group, CHUNKS_DDL)
@@ -442,13 +403,11 @@ def encode_grouped(
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     group_factor: int = 1,
-    specs: dict[str, str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Skew-safe deterministic grouped encode (the north_rule path):
     :func:`salt_groups` → :func:`encode_salted`."""
     salted = salt_groups(df, group_cols, order_cols, chunk_bytes, group_factor)
-    return encode_salted(salted, order_cols, chunk_rows, chunk_bytes, specs, num_partitions)
+    return encode_salted(salted, order_cols, chunk_rows, chunk_bytes)
 
 
 def chunk_metrics(chunks_df: DataFrame) -> DataFrame:

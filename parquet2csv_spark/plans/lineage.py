@@ -14,12 +14,12 @@ Iceberg's atomic append is the production drop-in):
      completes (write-ahead of data, commit = lineage append);
   3. a crash between (1) and (2) leaves orphan chunk files; readers join
      chunks against lineage (status='done') so orphans are invisible, and
-     the next resume re-encodes those groups multiset-exactly: re-encoded
-     frames may differ byte-for-byte run-to-run (the grouped path's
-     worker-lifetime codec cache makes spec choice schedule-dependent),
-     so ``chunks()`` reads exactly one committed run per group — the
-     min(run_id) semi-join below — and decode equality, not byte identity,
-     is the contract (verified in tests).
+     the next resume re-encodes those groups multiset-exactly. A resume
+     packs only the pending groups into its tasks, so its frames may
+     differ byte-for-byte from a one-shot run's (the contract in
+     ``codecs.selector``); ``chunks()`` therefore reads exactly one
+     committed run per group — the min(run_id) semi-join below — and
+     decode equality is the resume contract (verified in tests).
 
 Resume state is read once per run. A driver-side Hadoop ``FileSystem``
 probe of ``<out>/lineage`` comes first and launches no Spark job: with no

@@ -81,11 +81,29 @@ def test_grouped_encode_roundtrip(spark, corpus):
 
 
 def test_grouped_encode_deterministic_chunk_ids(spark, corpus):
-    a = encode_grouped(corpus, ["repo"], ["path", "commit"], chunk_rows=2048)
-    b = encode_grouped(corpus.repartition(13), ["repo"], ["path", "commit"], chunk_rows=2048)
-    ids_a = {r["chunk_id"]: r["n_rows"] for r in a.select("chunk_id", "n_rows").collect()}
-    ids_b = {r["chunk_id"]: r["n_rows"] for r in b.select("chunk_id", "n_rows").collect()}
-    assert ids_a == ids_b
+    """Chunk ids, row counts and frames do not depend on the input
+    partitioning: the exchange on ``_gk`` hands each task the same groups
+    in the same order, and each task starts with its own empty codec
+    cache. Deduplicating on the order key makes each group's order total."""
+    src = corpus.dropDuplicates(["repo", "path", "commit"]).cache()
+
+    def digests(df):
+        chunks = encode_grouped(df, ["repo"], ["path", "commit"], chunk_rows=2048)
+        cols = F.transform(
+            "cols",
+            lambda c: F.concat_ws(":", c["name"], c["codec"], F.sha2(c["frame"], 256)),
+        )
+        return {
+            r["chunk_id"]: (r["n_rows"], r["cols"])
+            for r in chunks.select("chunk_id", "n_rows", cols.alias("cols")).collect()
+        }
+
+    try:
+        a, b = digests(src), digests(src.repartition(13))
+        assert len(a) > 2
+        assert a == b
+    finally:
+        src.unpersist()
 
 
 def test_ungrouped_encode_roundtrip_generic_tables(spark):
@@ -244,10 +262,15 @@ def test_decode_table_time_filters_prune_chunks(spark):
     from pyspark.sql.types import _parse_datatype_string
 
     base = datetime.datetime(2024, 1, 1)
-    ddl = "event_id bigint, ts timestamp, d date"
+    ddl = "event_id bigint, ts timestamp, d date, ds date"
     df = spark.createDataFrame(
         [
-            (i, base + datetime.timedelta(minutes=i), (base + datetime.timedelta(days=i % 40)).date())
+            (
+                i,
+                base + datetime.timedelta(minutes=i),
+                (base + datetime.timedelta(days=i % 40)).date(),
+                (base + datetime.timedelta(days=i // 100)).date(),
+            )
             for i in range(4000)
         ],
         ddl,
@@ -278,8 +301,73 @@ def test_decode_table_time_filters_prune_chunks(spark):
         # equality on a single day
         one = decode_table(chunks, ddl, filters=[("d", "==", dcut)])
         assert one.count() == want_d.filter(F.col("d") == F.lit(dcut)).count()
+        # a date-sorted column prunes too
+        scut = (base + datetime.timedelta(days=30)).date()
+        n_kept_s = _apply_filters(chunks, schema, [("ds", ">=", scut)]).count()
+        assert n_kept_s < n_all
+        got_s = decode_table(chunks, ddl, filters=[("ds", ">=", scut)])
+        assert got_s.count() == 1000
+        assert multiset_diff(df.filter(F.col("ds") >= F.lit(scut)), got_s).count() == 0
     finally:
         chunks.unpersist()
+
+
+def test_zone_map_int_bounds_are_the_int64_view():
+    """``_zone_map`` bounds of int-like columns are the min/max of their
+    int64 view (date32 in days, timestamps in epoch units). Durations and
+    binary columns get no bounds and do not raise; nor do all-null ones."""
+    import datetime
+
+    import pyarrow as pa
+
+    from parquet2csv_spark.operators.encode import _zone_map
+
+    utc = datetime.timezone.utc
+    cases = [
+        (pa.array([5, -3, None, 7], pa.int8()), (-3, 7)),
+        (pa.array([2**31 - 1, None, -(2**31)], pa.int32()), (-(2**31), 2**31 - 1)),
+        (pa.array([None, 2**62, -(2**63)], pa.int64()), (-(2**63), 2**62)),
+        (
+            pa.array([datetime.date(2024, 3, 1), None, datetime.date(2024, 1, 1)], pa.date32()),
+            (19723, 19783),
+        ),
+        (
+            pa.array(
+                [datetime.datetime(2024, 1, 1, tzinfo=utc), datetime.datetime(1970, 1, 1, 0, 0, 0, 5, tzinfo=utc)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            (5, 1_704_067_200_000_000),
+        ),
+    ]
+    for arr, bounds in cases:
+        zm = _zone_map(arr)
+        assert (zm["lo_long"], zm["hi_long"]) == bounds, arr.type
+    for arr in (
+        pa.array([1, 2], pa.duration("us")),
+        pa.array([b"a", b"b"], pa.binary()),
+        pa.array([None, None], pa.int64()),
+        pa.array([None, None], pa.date32()),
+    ):
+        assert set(_zone_map(arr).values()) == {None}, arr.type
+
+
+def test_encode_api_has_no_spec_or_partition_knobs():
+    """The DataFrame-level encode functions take no per-column spec map and
+    no partition count (the stage runs one task per slot), and the module
+    keeps no cache that could outlive a task."""
+    import inspect
+
+    from parquet2csv_spark.operators import encode
+
+    for fn in (encode.encode_table, encode.encode_batches,
+               encode.encode_grouped, encode.encode_salted):
+        params = set(inspect.signature(fn).parameters)
+        assert not params & {"specs", "num_partitions"}, fn.__name__
+    dicts = [
+        name for name, v in vars(encode).items()
+        if isinstance(v, dict) and not name.startswith("__")
+    ]
+    assert dicts == []
 
 
 def test_epoch_long_exact_for_tz_aware_microseconds():
