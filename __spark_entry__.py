@@ -935,7 +935,7 @@ def q_stream_stateful_totals(spark, sf_dir):
 def q_stream_incremental_encode(spark, sf_dir):
     """Incremental encode (streaming/incremental.py): the documents table
     arrives as two file batches; each micro-batch runs the same grouped
-    encode + lineage commit as the batch job (one lineage snapshot per
+    encode + marker commit as the batch job (one committed snapshot per
     epoch, exactly-once via the streaming checkpoint). All committed chunks
     across both batches then decode back bit-identically — the oracle is
     simply the raw table, making this a full roundtrip proof through the

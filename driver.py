@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import json
 import logging
-import os
 import sys
 
 
@@ -33,7 +32,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--cpus", type=int, default=None, help="local[N] when not on a cluster")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    enc = sub.add_parser("encode", help="resumable grouped encode with lineage")
+    enc = sub.add_parser("encode", help="resumable grouped encode with commit markers")
     enc.add_argument("--input", required=True)
     enc.add_argument("--out", required=True)
     enc.add_argument("--job-id", default="encode")
@@ -255,7 +254,7 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
 def _run(args: argparse.Namespace, spark) -> int:
     """Dispatch one parsed command; returns its exit code."""
     if args.cmd == "encode":
-        from parquet2csv_spark.plans.lineage import EncodeJob
+        from parquet2csv_spark.plans.lineage import EncodeJob, write_text
         from parquet2csv_spark.sources.catalog import open_catalog
 
         cat = open_catalog(spark)
@@ -267,12 +266,10 @@ def _run(args: argparse.Namespace, spark) -> int:
             chunk_rows=args.chunk_rows, chunk_bytes=args.chunk_bytes,
         )
         summary = job.run(df)
-        with open(f"{args.out.rstrip('/')}/schema.json", "w") as f:
-            f.write(json.dumps(df.schema.jsonValue()))
+        write_text(spark, f"{args.out.rstrip('/')}/schema.json",
+                   json.dumps(df.schema.jsonValue()))
         print(json.dumps({"snapshot_id": snap.snapshot_id, **summary}))
     elif args.cmd == "decode":
-        import datetime
-
         from pyspark.sql.types import StructType
 
         from parquet2csv_spark.operators import decode_table
@@ -292,39 +289,35 @@ def _run(args: argparse.Namespace, spark) -> int:
             schema = StructType([by_name[c] for c in want])
         filters = _parse_cli_filters(args.filters, schema) or None
         # accept either a raw chunks dir or an EncodeJob out_dir (whose
-        # layout is <out>/chunks/run=*/ + <out>/lineage/): in the latter
-        # case decode ONLY lineage-committed chunks of ONE (snapshot_id,
-        # job_id) generation. An out_dir can legitimately hold several
-        # committed generations (several snapshots or jobs); grouped chunk
-        # ids are positional (group_key:seq, not content-addressed), so
-        # mixing generations that share group keys would splice chunks from
+        # layout is <out>/chunks/run=*/ + <out>/commits/): in the latter
+        # case decode ONLY committed chunks of ONE (snapshot_id, job_id)
+        # generation. An out_dir can legitimately hold several committed
+        # generations (several snapshots or jobs); grouped chunk ids are
+        # positional (group_key:seq, not content-addressed), so mixing
+        # generations that share group keys would splice chunks from
         # different encodes into one decode. Default: the generation with
         # the latest committed_at; pin explicitly with --snapshot-id /
-        # --decode-job-id.
-        job_chunks = os.path.join(args.chunks, "chunks")
-        if os.path.isdir(job_chunks):
-            from parquet2csv_spark.plans.lineage import EncodeJob, generations
+        # --decode-job-id. The probe and the pick are driver-side Hadoop
+        # FileSystem calls (URI-safe) and run no Spark job.
+        from parquet2csv_spark.plans.lineage import EncodeJob, generations, path_exists
 
-            # one bounded read, one row per generation; a run that crashed
-            # before its first lineage append leaves chunks/ without
-            # lineage/ — no generations, the clean error path below
+        if path_exists(spark, f"{args.chunks.rstrip('/')}/chunks"):
+            # a run that crashed before its commit marker leaves chunks/
+            # without commits/ — no generations, the clean error path below
             done = [
                 g for g in generations(spark, args.chunks)
-                if g["status"] == "done"
-                and (not args.snapshot_id or g["snapshot_id"] == args.snapshot_id)
+                if (not args.snapshot_id or g["snapshot_id"] == args.snapshot_id)
                 and (not args.decode_job_id or g["job_id"] == args.decode_job_id)
             ]
             if not done:
                 print(json.dumps({
-                    "error": "no committed lineage matches the requested "
+                    "error": "no committed run matches the requested "
                              "snapshot-id/job-id in this out_dir",
                     "snapshot_id": args.snapshot_id,
                     "job_id": args.decode_job_id,
                 }))
                 return 3
-            latest = max(
-                done, key=lambda g: g["committed_at"] or datetime.datetime.min
-            )
+            latest = max(done, key=lambda g: g["committed_at"])
             job = EncodeJob(
                 spark, args.chunks,
                 snapshot_id=latest["snapshot_id"], job_id=latest["job_id"],
@@ -357,24 +350,25 @@ def _run(args: argparse.Namespace, spark) -> int:
         from parquet2csv_spark.plans.lineage import EncodeJob
         from parquet2csv_spark.sources.catalog import open_catalog
 
-        src = spark.read.parquet(args.input)
-        # verify ONLY lineage-committed chunks: orphan chunk files left by a
-        # crashed run (later resumed) would otherwise decode as duplicates
-        # and fail bit-identity even though the committed dataset is correct
+        # verify ONLY committed chunks: orphan chunk files left by a crashed
+        # run (later resumed) would otherwise decode as duplicates and fail
+        # bit-identity even though the committed dataset is correct
         snap = open_catalog(spark).snapshot(args.input)
         job = EncodeJob(
             spark, args.chunks, snapshot_id=snap.snapshot_id, job_id=args.job_id
         )
-        chunks = job.chunks()
-        if chunks.isEmpty():
-            # fail loudly: zero committed chunks means the snapshot/job-id
-            # doesn't match the lineage (or nothing was encoded) — that is
-            # a usage error, not a data-corruption verdict
+        runs = job.runs()
+        if not runs:
+            # fail loudly: no commit marker for this snapshot/job-id (or
+            # nothing was encoded) is a usage error, not a data-corruption
+            # verdict; decided from the markers, before any Spark job
             print(json.dumps({
                 "error": "no committed chunks for this snapshot/job-id",
                 "snapshot_id": snap.snapshot_id, "job_id": args.job_id,
             }))
             return 3
+        src = spark.read.parquet(args.input)
+        chunks = job.chunks(runs)
         dec = decode_table(chunks, src.schema)
         diff = multiset_diff(src, dec).count()
         print(json.dumps({"multiset_diff": diff, "bit_identical": diff == 0}))

@@ -17,7 +17,7 @@ as an idiomatic Spark engine:
 - ``functions``  : reference formatting parity (quote/null/timestamp/uuid/
                    exact-float — ParquetToCsv.formatFieldValue), plus
                    training-data ops: dedup, similarity search, text analysis.
-- ``plans``      : lineage/checkpoint table + exact resume via anti-join.
+- ``plans``      : commit markers + exact resume via anti-join.
 - ``streaming``  : incremental encode of newly arriving files (foreachBatch).
 """
 

@@ -1,54 +1,56 @@
-"""Lineage + exact resume of partially completed encode jobs (north_star).
+"""Commit markers + exact resume of partially completed encode jobs (north_star).
 
-Every completed group emits a lineage record (input snapshot id, group key,
-chunk count/range, codecs, bytes, wall-time) to a checkpoint table. A re-run
-of the same (snapshot, job) anti-joins the pending salted groups against
-the checkpoint and encodes ONLY the missing ones — exact resume. This is
-batch state the reference has no analog for (it reprocesses whole files,
-DataLoad.java:256-304); SURVEY.md §2.2 maps it to the joins/set-ops rows.
+Every encode run writes its chunk files, then commits them with one small
+JSON marker. A re-run of the same (snapshot, job) anti-joins the pending
+salted groups against the groups its committed runs hold and encodes ONLY
+the missing ones — exact resume. This is batch state the reference has no
+analog for (it reprocesses whole files, DataLoad.java:256-304); SURVEY.md
+§2.2 maps it to the joins/set-ops rows.
+
+Layout under ``out_dir``:
+  chunks/run=<run_id>/*.parquet  — chunk rows (CHUNKS_DDL)
+  commits/<run_id>.json          — the run's commit marker: snapshot_id,
+                                   job_id, run_id, params, committed_at
+                                   and the run's totals (groups, rows,
+                                   raw_bytes, enc_bytes)
 
 Crash-consistency model (no transactional catalog needed in the sandbox;
 Iceberg's atomic append is the production drop-in):
   1. chunk files for a run are written under ``chunks/run=<run_id>/``;
-  2. lineage rows for the run are appended only AFTER the chunk write
-     completes (write-ahead of data, commit = lineage append);
-  3. a crash between (1) and (2) leaves orphan chunk files; readers join
-     chunks against lineage (status='done') so orphans are invisible, and
-     the next resume re-encodes those groups multiset-exactly. A resume
-     packs only the pending groups into its tasks, so its frames may
-     differ byte-for-byte from a one-shot run's (the contract in
-     ``codecs.selector``); ``chunks()`` therefore reads exactly one
-     committed run per group — the min(run_id) semi-join below — and
-     decode equality is the resume contract (verified in tests).
+  2. only AFTER that write returns, the driver writes the marker through
+     the Hadoop ``FileSystem``: to ``commits/_<run_id>.json`` first, then
+     renamed into place, so a reader never sees a half-written marker;
+  3. a crash between (1) and (2) leaves orphan chunk files: a run without
+     a marker is invisible to every reader, and the next run re-encodes
+     exactly its groups. A resume packs only the pending groups into its
+     tasks, so its frames may differ byte-for-byte from a one-shot run's
+     (the contract in ``codecs.selector``); ``chunks()`` therefore reads
+     exactly one committed run per group, and decode equality is the
+     resume contract (verified in tests).
 
-Resume state is read once per run. A driver-side Hadoop ``FileSystem``
-probe of ``<out>/lineage`` comes first and launches no Spark job: with no
-lineage yet, a fresh encode plans no lineage read at all. Otherwise one
-bounded aggregate — one row per (snapshot, job, status, params)
-generation, never one per group, carrying that generation's group count
-and row/byte sums — is collected, and every resume check (digest
-migration, params mismatch, legacy params) is evaluated on those rows in
-the driver. The done-groups anti-join is always planned and reads lineage
-lazily, when the chunk write runs: with no lineage the done set is an
-empty local relation, which the optimizer's empty-relation propagation
-drops from the join, so a fresh encode still runs no lineage job.
+Everything a command decides before its data job comes from the markers,
+read on the driver: O(runs) small files, no Spark job. The resume checks
+(digest migration, params mismatch) and ``generations()`` run on them. The
+done groups are the ``group_key`` column of the committed runs' chunk
+files, read lazily inside the chunk write's anti-join; with no committed
+run they are an empty local relation, which the optimizer's empty-relation
+propagation drops from the join. The run's totals come from an
+``Observation`` on the chunk write itself, so nothing is re-read after it.
 
-The commit is one aggregate over the run's written chunk metadata: one
-``groupBy(group_key)`` yields the counts, sums and sorted distinct codec
-tags of each group (the scan reads ``cols.codec``, never the frames), and
-its lineage append carries an ``Observation`` of the run's own totals. The
-run summary is those totals plus this (snapshot, job)'s done rows from the
-start-of-run aggregate, so nothing re-reads lineage after the commit.
-
-Fail-loud rule: lineage counts as empty in exactly two cases — the dir is
-missing, or it holds only ``_``/``.``-prefixed entries (e.g. a crashed
-append's ``_temporary/``). Any other read error (a corrupt or unreadable
-lineage file) raises: treating it as "nothing committed" would re-encode
-every group as a second generation into the same out_dir.
+Fail-loud rule: markers count as absent in exactly one case — the
+``commits/`` dir is missing or holds only ``_``/``.``-prefixed entries
+(a temp marker of a crashed commit, checksum files). A marker that does
+not parse raises ``ValueError`` naming the file: treating it as "not
+committed" would re-encode its groups as a second run into the same
+out_dir. An out_dir written before markers existed (a ``lineage/``
+parquet table and no ``commits/``) is refused, because its commits cannot
+be read without the tooling that wrote them.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
 import time
 import uuid
 
@@ -63,30 +65,117 @@ from ..operators.encode import (
     salt_groups,
 )
 
+# the schema of the ``lineage()`` view: one row per committed (run, group)
 LINEAGE_DDL = (
     "snapshot_id string, job_id string, run_id string, group_key string, "
     "n_chunks bigint, n_rows bigint, raw_bytes bigint, enc_bytes bigint, "
     "wall_ms bigint, codecs string, status string, committed_at timestamp, "
     "params string"
 )
+_TOTALS = ("groups", "rows", "raw_bytes", "enc_bytes")
+_MARKER_FIELDS = ("snapshot_id", "job_id", "run_id", "params", "committed_at", *_TOTALS)
 
 
-def _stored_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The lineage files under ``out_dir``, or None when the lineage counts
-    as empty under the fail-loud rule (module docstring). The probe is
-    driver-side Hadoop ``FileSystem`` calls only: URI-safe, no Spark job.
-    The explicit schema reads a dir mixing pre-params and post-params
-    files with ``params`` null for the old rows, and skips the
-    footer-sampling job schema inference would run."""
-    path = f"{out_dir.rstrip('/')}/lineage"
+# ----------------------------------------------------- Hadoop FileSystem io
+
+def _fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``: plain paths and URIs alike."""
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(hpath) or all(
-        st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(hpath)
-    ):
-        return None
-    return spark.read.schema(LINEAGE_DDL).parquet(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _fs(spark, path)
+    return fs.exists(hpath)
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write ``text`` (UTF-8) to ``path``, replacing any file there."""
+    fs, hpath = _fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+
+
+def read_text(spark: SparkSession, path: str) -> str:
+    fs, hpath = _fs(spark, path)
+    stream = fs.open(hpath)
+    try:
+        return spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+
+
+def _entries(fs, hpath) -> list:
+    """The committed entries of dir ``hpath``: all but ``_``/``.``-prefixed
+    ones (a temp marker, a crashed append's ``_temporary/``, ``.crc``
+    files). Empty when the dir is missing."""
+    if not fs.exists(hpath):
+        return []
+    return [
+        st.getPath() for st in fs.listStatus(hpath)
+        if not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
+# ------------------------------------------------------------------ markers
+
+def _parse_marker(path: str, text: str) -> dict:
+    try:
+        marker = json.loads(text)
+        missing = [k for k in _MARKER_FIELDS if k not in marker]
+        if missing:
+            raise ValueError(f"missing fields {missing}")
+        if not (all(isinstance(marker[k], str) for k in _MARKER_FIELDS[:5])
+                and all(isinstance(marker[k], int) for k in _TOTALS)):
+            raise ValueError("a field has the wrong type")
+        if f"{marker['run_id']}.json" != path.rsplit("/", 1)[-1]:
+            raise ValueError(f"run_id {marker['run_id']!r} does not match the file name")
+        marker["committed_at"] = datetime.datetime.fromisoformat(marker["committed_at"])
+        if marker["committed_at"].tzinfo is None:
+            raise ValueError("committed_at has no UTC offset")
+    except (ValueError, TypeError) as e:
+        raise ValueError(f"corrupt commit marker {path}: {e}") from e
+    return marker
+
+
+def read_markers(spark: SparkSession, out_dir: str) -> list[dict]:
+    """Every commit marker under ``out_dir``, read on the driver (module
+    docstring: fail-loud rule, pre-marker refusal)."""
+    out_dir = out_dir.rstrip("/")
+    fs, commits = _fs(spark, f"{out_dir}/commits")
+    paths = _entries(fs, commits)
+    if not paths and _entries(fs, _fs(spark, f"{out_dir}/lineage")[1]):
+        raise RuntimeError(
+            f"{out_dir} holds a lineage/ table and no commits/ markers: it was "
+            f"written by an encode that predates commit markers. Encode into a "
+            f"new out_dir, or decode it with the tooling that wrote it"
+        )
+    return [_parse_marker(p.toString(), read_text(spark, p.toString())) for p in paths]
+
+
+def generations(spark: SparkSession, out_dir: str) -> list[Row]:
+    """One row per (snapshot_id, job_id, status, params) generation in
+    ``out_dir``, with its latest ``committed_at``, its committed ``runs``
+    and the sums of their ``groups``/``rows``/``raw_bytes``/``enc_bytes``.
+    Read from the markers: no Spark job, O(runs) driver work."""
+    gens: dict[tuple, dict] = {}
+    for m in read_markers(spark, out_dir):
+        g = gens.setdefault((m["snapshot_id"], m["job_id"], m["params"]), {
+            "snapshot_id": m["snapshot_id"], "job_id": m["job_id"],
+            "status": "done", "params": m["params"],
+            "committed_at": m["committed_at"], "runs": 0,
+            **dict.fromkeys(_TOTALS, 0),
+        })
+        g["committed_at"] = max(g["committed_at"], m["committed_at"])
+        g["runs"] += 1
+        for k in _TOTALS:
+            g[k] += m[k]
+    return [Row(**g) for g in gens.values()]
 
 
 def _empty(spark: SparkSession, ddl: str) -> DataFrame:
@@ -99,42 +188,16 @@ def _empty(spark: SparkSession, ddl: str) -> DataFrame:
     ])
 
 
-def _totals() -> list:
-    """Lineage-row count and row/byte sums of a set of lineage rows: a
-    generation's in ``generations``, a run's in its commit observation."""
-    return [
-        F.count(F.lit(1)).alias("groups"),
-        F.sum("n_rows").alias("rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-    ]
-
-
-def _generations(lineage: DataFrame) -> list[Row]:
-    return (
-        lineage.groupBy("snapshot_id", "job_id", "status", "params")
-        .agg(F.max("committed_at").alias("committed_at"), *_totals())
-        .collect()
-    )
-
-
-def generations(spark: SparkSession, out_dir: str) -> list[Row]:
-    """One row per (snapshot_id, job_id, status, params) generation in
-    ``out_dir``'s lineage, with its latest ``committed_at``, its lineage
-    row count (``groups``) and its ``rows``/``raw_bytes``/``enc_bytes``
-    sums. Bounded by the number of generations, never by the number of
-    groups. With no lineage it plans no query at all: even an empty one
-    costs a cold session seconds of planning."""
-    lineage = _stored_lineage(spark, out_dir)
-    return [] if lineage is None else _generations(lineage)
-
-
 class EncodeJob:
-    """A resumable encode of one table snapshot into a chunks directory.
+    """A resumable encode of one table snapshot into an out_dir.
 
-    Layout under ``out_dir``:
+    Layout under ``out_dir`` (module docstring):
       chunks/run=<run_id>/*.parquet   — chunk rows (CHUNKS_DDL)
-      lineage/*.parquet               — LINEAGE_DDL records
+      commits/<run_id>.json           — one commit marker per run
+
+    A run is committed once its marker is in place; it is written after
+    the run's chunk files, so a run without one (a crash in between) is an
+    orphan that no reader sees and the next run re-encodes.
     """
 
     def __init__(
@@ -148,14 +211,9 @@ class EncodeJob:
         chunk_rows: int = DEFAULT_CHUNK_ROWS,
         chunk_bytes: int = DEFAULT_CHUNK_BYTES,
         group_factor: int = 1,
-        legacy_params: str | None = None,
     ):
         self.spark = spark
         self.out_dir = out_dir.rstrip("/")
-        # explicit caller assertion of the salting/chunking params a
-        # pre-params lineage dir was written with — required to resume
-        # lineage rows that predate the params column (see run())
-        self.legacy_params = legacy_params
         self.snapshot_id = snapshot_id
         self.job_id = job_id
         self.group_cols = group_cols or ["repo"]
@@ -179,39 +237,66 @@ class EncodeJob:
             f"cr={chunk_rows};cb={chunk_bytes};gf={group_factor};ord=nl"
         )
 
-    # ------------------------------------------------------------ lineage io
+    # ------------------------------------------------------------- commits
+
+    def _own(self, markers: list[dict]) -> list[dict]:
+        """This (snapshot, job)'s markers."""
+        return [
+            m for m in markers
+            if (m["snapshot_id"], m["job_id"]) == (self.snapshot_id, self.job_id)
+        ]
+
+    def runs(self) -> list[str]:
+        """The committed run ids of this (snapshot, job), sorted."""
+        markers = read_markers(self.spark, self.out_dir)
+        return sorted(m["run_id"] for m in self._own(markers))
+
+    def _read_runs(self, runs: list[str]) -> DataFrame:
+        """The chunk rows of ``runs`` with their ``run`` partition column.
+        The explicit schema types ``run`` as a string: without it Spark's
+        partition TYPE INFERENCE parses the run=<12-hex> dir name, and an
+        all-digit hex id (~1 in 280 runs, e.g. run=012345678901) becomes a
+        Long whose string form drops the leading zero (review finding r4)."""
+        base = f"{self.out_dir}/chunks"
+        return (
+            self.spark.read.schema(CHUNKS_DDL + ", run string")
+            .option("basePath", base)
+            .parquet(*[f"{base}/run={r}" for r in runs])
+        )
+
+    def _write_marker(self, marker: dict) -> None:
+        """Commit: write the marker to a ``_`` temp name, then rename it
+        into place (readers skip ``_`` names)."""
+        final = f"{self.out_dir}/commits/{marker['run_id']}.json"
+        tmp = f"{self.out_dir}/commits/_{marker['run_id']}.json"
+        write_text(self.spark, tmp, json.dumps(marker, sort_keys=True))
+        fs, src = _fs(self.spark, tmp)
+        if not fs.rename(src, _fs(self.spark, final)[1]):
+            raise OSError(f"could not commit {final}: rename from {tmp} failed")
 
     def lineage(self) -> DataFrame:
-        """Empty only under the fail-loud rule: an unreadable lineage file
-        raises when the read runs."""
-        stored = _stored_lineage(self.spark, self.out_dir)
-        return _empty(self.spark, LINEAGE_DDL) if stored is None else stored
-
-    def _done(self, lineage: DataFrame) -> DataFrame:
-        """This (snapshot, job)'s done rows of ``lineage``."""
-        return lineage.filter(
-            (F.col("snapshot_id") == self.snapshot_id)
-            & (F.col("job_id") == self.job_id)
-            & (F.col("status") == "done")
-        )
-
-    def done_groups(self, lineage: DataFrame | None = None) -> DataFrame:
-        """Group keys (as ``_gk``) this (snapshot, job) has committed, out
-        of ``lineage`` (default: a fresh read of the stored lineage)."""
-        if lineage is None:
-            lineage = self.lineage()
-        return self._done(lineage).select(F.col("group_key").alias("_gk")).distinct()
-
-    def _commit_rows(self, run_id: str) -> DataFrame:
-        """Run ``run_id``'s lineage rows, derived FROM its persisted chunk
-        files in one aggregate. Only the chunk metadata and each column's
-        codec tag are read, never the frames."""
-        written = self.spark.read.schema(CHUNKS_DDL).parquet(
-            f"{self.out_dir}/chunks/run={run_id}"
-        )
+        """A LINEAGE_DDL view of every committed run in ``out_dir``: one row
+        per (run, group), aggregated from the chunk metadata (each column's
+        codec tag, never the frames) plus the run's marker fields."""
+        markers = read_markers(self.spark, self.out_dir)
+        if not markers:
+            return _empty(self.spark, LINEAGE_DDL)
+        by_run = F.create_map(*[
+            v for m in markers for v in (
+                F.lit(m["run_id"]),
+                F.struct(
+                    F.lit(m["snapshot_id"]).alias("snapshot_id"),
+                    F.lit(m["job_id"]).alias("job_id"),
+                    F.lit(m["committed_at"].isoformat()).cast("timestamp")
+                    .alias("committed_at"),
+                    F.lit(m["params"]).alias("params"),
+                ),
+            )
+        ])
         codecs = F.array_sort(F.array_distinct(F.flatten(F.collect_list("cols.codec"))))
         return (
-            written.groupBy("group_key")
+            self._read_runs([m["run_id"] for m in markers])
+            .groupBy("run", "group_key")
             .agg(
                 F.count("*").alias("n_chunks"),
                 F.sum("n_rows").alias("n_rows"),
@@ -220,93 +305,79 @@ class EncodeJob:
                 F.sum("wall_ms").alias("wall_ms"),
                 F.array_join(codecs, ",").alias("codecs"),
             )
+            .withColumn("_m", by_run[F.col("run")])
             .select(
-                F.lit(self.snapshot_id).alias("snapshot_id"),
-                F.lit(self.job_id).alias("job_id"),
-                F.lit(run_id).alias("run_id"),
+                "_m.snapshot_id", "_m.job_id", F.col("run").alias("run_id"),
                 "group_key", "n_chunks", "n_rows", "raw_bytes", "enc_bytes",
-                "wall_ms", "codecs",
-                F.lit("done").alias("status"),
-                F.current_timestamp().alias("committed_at"),
-                F.lit(self.params).alias("params"),
+                "wall_ms", "codecs", F.lit("done").alias("status"),
+                "_m.committed_at", "_m.params",
             )
         )
 
+    def done_groups(self, markers: list[dict] | None = None) -> DataFrame:
+        """Group keys (as ``_gk``) this (snapshot, job) has committed: the
+        ``group_key`` column of its committed runs' chunk files. ``markers``
+        defaults to a fresh read of ``out_dir``'s markers."""
+        if markers is None:
+            markers = read_markers(self.spark, self.out_dir)
+        runs = [m["run_id"] for m in self._own(markers)]
+        if not runs:
+            return _empty(self.spark, "_gk string")
+        return self._read_runs(runs).select(F.col("group_key").alias("_gk")).distinct()
+
     # --------------------------------------------------------------- running
 
-    def _check_resume(self, gens: list[Row]) -> None:
-        """Evaluate every resume check on the per-generation rows, in order.
+    def _check_resume(self, markers: list[dict]) -> None:
+        """Evaluate every resume check on the markers, in order.
 
         1. Digest migration. The catalog embeds a version in every snapshot
            id (catalog.py DIGEST_VERSION). When the current id carries the
-           current version but this job_id's lineage holds done rows whose
-           ids don't, those rows were committed under an older digest
+           current version but this job_id has runs committed under ids
+           that don't, those runs were committed under an older digest
            format: the SAME unchanged input now hashes to a DIFFERENT id,
            so a silent resume would see zero done groups and re-encode
            every group into this out_dir — a second generation under
            identical group keys. Hand-assigned snapshot ids skip the check.
         2. Params mismatch: a different group_factor/chunk_bytes salts into
            different group keys (see ``__init__``).
-        3. Legacy params: rows written before params tracking carry no
-           record of their salting config; defaults have changed since
-           (group_factor 2 → 1), so silently resuming would re-encode those
-           groups under NEW salted keys while chunks() still returns the
-           old committed groups → duplicate rows. The caller must assert
-           the legacy params match the current ones to proceed.
         """
         from ..sources.catalog import DIGEST_VERSION
 
         prefix = f"{DIGEST_VERSION}-"
         if self.snapshot_id.startswith(prefix):
             stale = sorted(
-                g["snapshot_id"] for g in gens
-                if g["job_id"] == self.job_id and g["status"] == "done"
-                and g["snapshot_id"] is not None
-                and not g["snapshot_id"].startswith(prefix)
+                m["snapshot_id"] for m in markers
+                if m["job_id"] == self.job_id and not m["snapshot_id"].startswith(prefix)
             )
             if stale:
                 raise RuntimeError(
-                    f"lineage for job_id={self.job_id!r} contains snapshot ids in a "
+                    f"commits for job_id={self.job_id!r} contain snapshot ids in a "
                     f"pre-{DIGEST_VERSION} manifest-digest format (e.g. "
                     f"{stale[0]!r}); the digest inputs have changed "
                     f"since, so resume state for this out_dir cannot be trusted — "
                     f"encode into a new out_dir (or new job_id), or decode the old "
                     f"generation with the tooling that wrote it"
                 )
-        prior = [
-            g for g in gens
-            if g["snapshot_id"] == self.snapshot_id and g["job_id"] == self.job_id
-        ]
         mismatched = sorted(
-            g["params"] for g in prior
-            if g["params"] is not None and g["params"] != self.params
+            m["params"] for m in self._own(markers) if m["params"] != self.params
         )
         if mismatched:
             raise RuntimeError(
-                f"lineage for (snapshot={self.snapshot_id}, job={self.job_id}) "
-                f"was committed with different salting/chunking params "
+                f"runs of (snapshot={self.snapshot_id}, job={self.job_id}) "
+                f"were committed with different salting/chunking params "
                 f"({mismatched[0]!r} != {self.params!r}) — resume "
                 f"would duplicate groups; use a new job_id or the original params"
-            )
-        legacy = any(g["params"] is None for g in prior)
-        if legacy and self.legacy_params != self.params:
-            raise RuntimeError(
-                f"lineage for (snapshot={self.snapshot_id}, job={self.job_id}) "
-                f"contains rows without recorded salting/chunking params — "
-                f"cannot prove a resume is duplicate-free. Pass "
-                f"legacy_params={self.params!r} (the params string the "
-                f"original run used) to resume, or use a new job_id"
             )
 
     def run(self, df: DataFrame, only_groups_like: str | None = None) -> dict:
         """Encode all groups not yet committed. Returns driver-side summary.
 
-        The summary counts this (snapshot, job)'s done lineage rows: those
-        the start-of-run generations aggregate saw plus the ones this run
-        commits, observed on its lineage append. A concurrent committer to
-        the same (snapshot, job) between this run's start and its commit
-        is not counted. A run that commits nothing returns the earlier
-        runs' totals.
+        The summary adds the totals of this (snapshot, job)'s markers read
+        at the start of the run to the totals this run commits, observed on
+        its chunk write. A concurrent committer to the same (snapshot, job)
+        between this run's start and its commit is not counted. A run that
+        writes no chunk commits no marker and returns the earlier runs'
+        totals.
 
         ``only_groups_like``: test hook — restrict THIS run to pending
         groups whose key contains the substring, simulating a job that
@@ -315,39 +386,36 @@ class EncodeJob:
         """
         run_id = uuid.uuid4().hex[:12]
         t0 = time.time()
-        stored = _stored_lineage(self.spark, self.out_dir)
-        gens = [] if stored is None else _generations(stored)
-        self._check_resume(gens)
+        markers = read_markers(self.spark, self.out_dir)
+        self._check_resume(markers)
         salted = salt_groups(
             df, self.group_cols, self.order_cols, self.chunk_bytes,
             self.group_factor,
         )
-        # with no lineage the done set is an empty local relation, which the
-        # optimizer's empty-relation propagation drops from the join
-        lineage = _empty(self.spark, LINEAGE_DDL) if stored is None else stored
-        pending = salted.join(self.done_groups(lineage), on="_gk", how="left_anti")
+        pending = salted.join(self.done_groups(markers), on="_gk", how="left_anti")
         if only_groups_like is not None:
             pending = pending.filter(F.col("_gk").contains(only_groups_like))
         chunks = encode_salted(
             pending, self.order_cols, self.chunk_rows, self.chunk_bytes
         )
-        chunks.write.mode("append").parquet(f"{self.out_dir}/chunks/run={run_id}")
-
-        # commit = lineage append
-        committed = Observation()
-        self._commit_rows(run_id).observe(committed, *_totals()).write.mode(
-            "append"
-        ).parquet(f"{self.out_dir}/lineage")
-        own = [
-            g for g in gens
-            if (g["snapshot_id"], g["job_id"], g["status"])
-            == (self.snapshot_id, self.job_id, "done")
-        ]
-        # sums over zero rows are null: a run that commits nothing
-        total = {
-            k: sum(t[k] or 0 for t in [committed.get, *own]) for k in
-            ("groups", "rows", "raw_bytes", "enc_bytes")
-        }
+        written = Observation()
+        chunks.observe(
+            written,
+            F.count(F.when(F.col("seq") == 0, 1)).alias("groups"),
+            F.sum("n_rows").alias("rows"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes"),
+        ).write.mode("append").parquet(f"{self.out_dir}/chunks/run={run_id}")
+        # sums over zero rows are null
+        this_run = {k: written.get[k] or 0 for k in _TOTALS}
+        if this_run["groups"]:
+            self._write_marker({
+                "snapshot_id": self.snapshot_id, "job_id": self.job_id,
+                "run_id": run_id, "params": self.params,
+                "committed_at": datetime.datetime.now(datetime.timezone.utc).isoformat(),
+                **this_run,
+            })
+        total = {k: this_run[k] + sum(m[k] for m in self._own(markers)) for k in _TOTALS}
         return {
             "run_id": run_id,
             "wall_s": time.time() - t0,
@@ -359,44 +427,35 @@ class EncodeJob:
 
     # --------------------------------------------------------------- reading
 
-    def chunks(self) -> DataFrame:
-        """Committed chunks only, exactly one run per group.
+    def chunks(self, runs: list[str] | None = None) -> DataFrame:
+        """Committed chunks only, exactly one run per group. ``runs``
+        defaults to ``self.runs()``, this (snapshot, job)'s committed runs.
 
-        The lineage records which ``run_id`` committed each group, so the
-        valid chunk set is the semi-join of the chunks files against the
-        broadcast ``(group_key, min committed run)`` pairs of THIS
-        (snapshot, job). That single join closes every duplicate class at
-        once, with zero wide exchange of the binary frames:
+        Reading only committed runs' dirs closes two duplicate classes:
 
-        - orphan runs (crash after chunk write, before lineage append):
-          their run_id has no lineage row — excluded;
+        - orphan runs (crash after chunk write, before the marker): no
+          marker, never read;
         - another generation in the same out_dir (same group keys under a
           different snapshot/job — positional gk:seq chunk ids collide
           ACROSS generations, and a per-chunk-id winner pick could splice
-          generations with different chunk counts): its runs belong to
-          other lineage rows — excluded;
-        - a group double-committed by concurrent runs: ``min(run_id)``
-          pins one committed run per group, so a group's chunks are never
-          mixed across runs even in that race.
+          generations with different chunk counts): its runs are other
+          markers' — never read.
 
-        (An earlier version dropDuplicates'd on chunk_id, hash-exchanging
-        every frame payload — a full-data shuffle at 100 TB — and could
-        still splice coexisting generations; plan-asserted gone.)
+        With one committed run that is the whole read. With several, a
+        group double-committed by concurrent runs is pinned to its
+        ``min(run)``: a semi-join against the broadcast ``(group_key, min
+        run)`` pairs, built from those two metadata columns only, so the
+        binary frames never enter an exchange. (An earlier version
+        dropDuplicates'd on chunk_id, hash-exchanging every frame payload —
+        a full-data shuffle at 100 TB — and could still splice coexisting
+        generations; plan-asserted gone.)
         """
-        # explicit schema with `run string`: without it Spark's partition
-        # TYPE INFERENCE parses the run=<12-hex> dir name, and an all-digit
-        # hex id (~1 in 280 runs, e.g. run=012345678901 or 12e345678901)
-        # becomes a Long/Double whose string form drops the leading zero /
-        # gains an exponent — the semi-join below would then silently drop
-        # that entire committed run (review finding r4)
-        all_chunks = self.spark.read.schema(CHUNKS_DDL + ", run string").parquet(
-            f"{self.out_dir}/chunks"
-        )
-        committed = (
-            self._done(self.lineage())
-            .groupBy("group_key")
-            .agg(F.min("run_id").alias("run"))
-        )
-        return all_chunks.join(
-            F.broadcast(committed), on=["group_key", "run"], how="left_semi"
-        )
+        if runs is None:
+            runs = self.runs()
+        if not runs:
+            return _empty(self.spark, CHUNKS_DDL + ", run string")
+        chunks = self._read_runs(runs)
+        if len(runs) == 1:
+            return chunks
+        first = chunks.groupBy("group_key").agg(F.min("run").alias("run"))
+        return chunks.join(F.broadcast(first), on=["group_key", "run"], how="left_semi")

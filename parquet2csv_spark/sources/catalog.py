@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 # Manifest-digest format version, embedded in every snapshot id. Changing
 # what feeds the digest (e.g. the r3 move from whole-second to nanosecond
 # mtimes) silently changes ids for UNCHANGED directories, which would make
-# pre-upgrade lineage rows unreachable: a resume would compute a fresh
+# pre-upgrade commits unreachable: a resume would compute a fresh
 # snapshot_id, find zero done groups, and re-encode everything into the
 # same out_dir — the multi-generation layout the decode path then has to
 # disambiguate. Versioning the id lets EncodeJob.run() detect the format

@@ -4,10 +4,10 @@ The reference is strictly batch, one pass per file (SURVEY.md §2.2
 streaming row: ABSENT). The engine's resumability is batch-checkpoint
 based; this module adds the optional stretch path: a ``readStream`` over a
 corpus directory feeds ``foreachBatch``, and each micro-batch runs the same
-grouped encode + lineage commit as the batch job — so a continuously
+grouped encode + marker commit as the batch job — so a continuously
 growing table is encoded incrementally with exactly-once chunk commits
-(Spark streaming checkpoint tracks consumed files; lineage tracks
-committed groups; both survive restarts).
+(Spark streaming checkpoint tracks consumed files; commit markers track
+committed runs; both survive restarts).
 """
 
 from __future__ import annotations
@@ -31,9 +31,9 @@ def incremental_encode(
 ):
     """Start (and return) a streaming query encoding new parquet files.
 
-    Each micro-batch is encoded under snapshot id ``batch=<epoch>`` — the
-    lineage table gets one snapshot per micro-batch, so a crashed batch
-    resumes exactly like a crashed batch job. Use
+    Each micro-batch is encoded under snapshot id ``batch=<epoch>`` — each
+    committed micro-batch leaves one commit marker under that snapshot, so
+    a crashed batch resumes exactly like a crashed batch job. Use
     ``q.processAllAvailable()`` in tests to drain synchronously.
     """
     if isinstance(schema, str):

@@ -32,7 +32,7 @@ def test_cli_encode_decode_verify_roundtrip(spark, tmp_path, capsys):
     ver_line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert ver_line["bit_identical"] is True
 
-    # decode accepts the job out_dir (chunks/run=*/ + lineage/ layout)
+    # decode accepts the job out_dir (chunks/run=*/ + commits/ layout)
     dec = str(tmp_path / "dec")
     assert driver.main(stop_session=False, argv=["--cpus", "4", "decode", "--chunks", out,
                         "--schema-json", f"{out}/schema.json", "--out", dec]) in (0, None)
@@ -114,14 +114,14 @@ def test_cli_decode_pins_one_generation(spark, tmp_path, capsys):
                         "--decode-job-id", "missing"]) == 3
     capsys.readouterr()
 
-    # chunks/ without lineage/ (a run that crashed before its first lineage
-    # append) has no committed generation: the same loud usage error
+    # chunks/ without commits/ (runs that crashed before their commit
+    # markers) has no committed generation: the same loud usage error
     import shutil
 
-    shutil.rmtree(f"{out}/lineage")
+    shutil.rmtree(f"{out}/commits")
     assert driver.main(stop_session=False, argv=["--cpus", "4", "decode", "--chunks", out,
                         "--schema-json", f"{out}/schema.json", "--out", str(tmp_path / "nolin")]) == 3
-    assert "no committed lineage" in capsys.readouterr().out
+    assert "no committed run" in capsys.readouterr().out
 
 
 def test_cli_decode_filter_selective(spark, tmp_path, capsys):
@@ -254,6 +254,99 @@ def test_cli_decode_stats_only(spark, tmp_path, capsys):
             "--cpus", "4", "decode", "--chunks", out,
             "--schema-json", f"{out}/schema.json", "--filter", "id >= 250"])
     capsys.readouterr()
+
+
+def _write_src(spark, path, n=120):
+    spark.createDataFrame(
+        [(i, f"r{i % 3}", f"p/{i:03d}", f"c{i:03d}", f"body {i}") for i in range(n)],
+        "id long, repo string, path string, commit string, content string",
+    ).write.parquet(path)
+
+
+def test_cli_decode_and_verify_accept_a_uri_out_dir(spark, tmp_path, capsys):
+    """An out_dir given as a ``file://`` URI is probed through the Hadoop
+    FileSystem like a plain path: encode writes its schema.json there, and
+    decode and verify read it as an EncodeJob out_dir, not as a raw chunks
+    table."""
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    out = str(tmp_path / "enc")
+    uri = f"file://{out}"
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", uri]) == 0
+    decoded = {}
+    for name, chunks in (("plain", out), ("uri", uri)):
+        dec = str(tmp_path / f"dec_{name}")
+        assert driver.main(stop_session=False, argv=[
+            "--cpus", "4", "decode", "--chunks", chunks,
+            "--schema-json", f"{out}/schema.json", "--out", dec]) == 0
+        decoded[name] = spark.read.parquet(dec)
+        assert driver.main(stop_session=False, argv=[
+            "--cpus", "4", "verify", "--input", src, "--chunks", chunks]) == 0
+        assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["bit_identical"]
+    assert decoded["uri"].count() == 120
+    assert multiset_diff(decoded["plain"], decoded["uri"]).count() == 0
+
+
+def test_uncommitted_run_is_invisible_to_decode_and_verify(spark, tmp_path, capsys):
+    """The crash window at the CLI: chunks written, commit marker missing.
+    decode and verify see nothing committed (rc 3); the next encode
+    re-encodes that run's groups and both commands then pass."""
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    out = str(tmp_path / "enc")
+    encode = ["--cpus", "4", "encode", "--input", src, "--out", out]
+    decode = ["--cpus", "4", "decode", "--chunks", out, "--schema-json",
+              f"{out}/schema.json", "--out", str(tmp_path / "dec")]
+    verify = ["--cpus", "4", "verify", "--input", src, "--chunks", out]
+    assert driver.main(stop_session=False, argv=encode) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    os.remove(os.path.join(out, "commits", f"{first['run_id']}.json"))
+    assert driver.main(stop_session=False, argv=decode) == 3
+    assert driver.main(stop_session=False, argv=verify) == 3
+    capsys.readouterr()
+
+    assert driver.main(stop_session=False, argv=encode) == 0
+    again = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert {k: again[k] for k in ("groups_done", "rows", "raw_bytes", "enc_bytes")} == \
+        {k: first[k] for k in ("groups_done", "rows", "raw_bytes", "enc_bytes")}
+    assert driver.main(stop_session=False, argv=decode) == 0
+    assert multiset_diff(spark.read.parquet(src),
+                         spark.read.parquet(str(tmp_path / "dec"))).count() == 0
+    assert driver.main(stop_session=False, argv=verify) == 0
+    capsys.readouterr()
+
+
+def test_pre_marker_out_dir_is_refused_by_encode_decode_verify(spark, tmp_path, capsys):
+    """An out_dir written before commit markers (a lineage/ parquet table,
+    no commits/) cannot prove which runs are committed: encode, decode and
+    verify all raise a migration error instead of reading it as empty."""
+    import pytest
+
+    from parquet2csv_spark.plans.lineage import LINEAGE_DDL
+
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    out = str(tmp_path / "enc")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", out]) == 0
+    capsys.readouterr()
+    import shutil
+
+    shutil.rmtree(os.path.join(out, "commits"))
+    spark.createDataFrame(
+        [("s", "encode", "r", "g", 1, 1, 1, 1, 1, "plain", "done", None, None)],
+        LINEAGE_DDL,
+    ).write.parquet(os.path.join(out, "lineage"))
+    for argv in (
+        ["encode", "--input", src, "--out", out],
+        ["decode", "--chunks", out, "--schema-json", f"{out}/schema.json",
+         "--out", str(tmp_path / "dec")],
+        ["verify", "--input", src, "--chunks", out],
+    ):
+        with pytest.raises(RuntimeError, match="predates commit markers"):
+            driver.main(stop_session=False, argv=["--cpus", "4", *argv])
+    assert not os.path.exists(os.path.join(out, "commits"))
 
 
 # ------------------------------------------------------ Python worker warm-up
@@ -406,3 +499,28 @@ def test_failed_warm_up_warns_and_leaves_the_result_alone(
     warnings = [r for r in caplog.records if r.levelname == "WARNING"]
     assert any("warm-up exploded on purpose" in r.getMessage() for r in warnings), \
         caplog.text
+
+
+def test_decode_of_a_one_run_out_dir_runs_one_job(spark, tmp_path, capsys, monkeypatch):
+    """Picking the generation and its committed run reads only the commit
+    markers: a CLI decode of a one-run out_dir runs exactly one Spark job,
+    the decode write itself. Verify with no matching marker exits 3 before
+    any Spark job."""
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    out = str(tmp_path / "enc")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", out]) == 0
+    # a warmed context: the warm-up job is not part of the command's budget
+    monkeypatch.setattr(driver, "_WARMED", {spark.sparkContext.applicationId})
+    assert _cli_in_group(spark, "test-decode-budget", [
+        "decode", "--chunks", out, "--schema-json", f"{out}/schema.json",
+        "--out", str(tmp_path / "dec")]) == 0
+    jobs = _group_jobs(spark, "test-decode-budget")
+    assert len(jobs) == 1, [(j, n) for j, n, _ in jobs]
+    assert "MapInArrow" in jobs[0][2] and "InsertIntoHadoopFsRelationCommand" in jobs[0][2]
+
+    assert _cli_in_group(spark, "test-verify-no-marker", [
+        "verify", "--input", src, "--chunks", out, "--job-id", "nope"]) == 3
+    assert "no committed chunks" in capsys.readouterr().out
+    assert _group_jobs(spark, "test-verify-no-marker") == []

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import re
 import shutil
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from parquet2csv_spark.operators import decode_table, multiset_diff
 from parquet2csv_spark.operators.encode import salt_groups
-from parquet2csv_spark.plans.lineage import EncodeJob
+from parquet2csv_spark.plans.lineage import EncodeJob, generations
 from parquet2csv_spark.sources.corpus import CORPUS_DDL, generate_corpus
 
 N_ROWS = 6000
@@ -38,6 +39,30 @@ def _totals(summary):
     return {k: summary[k] for k in _SUMMARY}
 
 
+def _marker_path(out, run_id):
+    return os.path.join(out, "commits", f"{run_id}.json")
+
+
+def _craft_marker(out, like_run, run_id):
+    """Commit ``run_id`` with a copy of run ``like_run``'s marker, as a
+    concurrent commit of the same groups would."""
+    with open(_marker_path(out, like_run)) as f:
+        marker = json.load(f)
+    marker["run_id"] = run_id
+    with open(_marker_path(out, run_id), "w") as f:
+        json.dump(marker, f)
+
+
+def _copy_run(out, run_id, new_run_id):
+    shutil.copytree(os.path.join(out, "chunks", f"run={run_id}"),
+                    os.path.join(out, "chunks", f"run={new_run_id}"))
+
+
+def _groups_of_run(spark, out, run_id):
+    return {r["group_key"] for r in spark.read.parquet(
+        os.path.join(out, "chunks", f"run={run_id}")).select("group_key").collect()}
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     df = generate_corpus(spark, N_ROWS, seed=42)
@@ -49,15 +74,15 @@ def test_resume_encodes_only_missing_groups(spark, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job"))
     job = EncodeJob(spark, out, snapshot_id="snap1", chunk_rows=1024, chunk_bytes=1 << 20)
 
-    # simulated crash: first run commits only groups whose key contains '0'
-    r1 = job.run(corpus, only_groups_like="0")
-    assert 0 < r1["groups_done"]
+    # simulated crash: first run commits only groups whose key contains '3'
+    r1 = job.run(corpus, only_groups_like="3")
+    assert 0 < r1["groups_done"] and r1["rows"] < N_ROWS
     assert _totals(r1) == _summary_from_lineage(job)
 
     # second run completes the rest; first-run groups must NOT be re-encoded
     r2 = job.run(corpus)
     assert _totals(r2) == _summary_from_lineage(job)
-    assert r2["rows"] == N_ROWS
+    assert r2["rows"] == N_ROWS and r2["groups_done"] > r1["groups_done"]
     lin = job.lineage()
     assert lin.filter(F.col("run_id") == r2["run_id"]).join(
         lin.filter(F.col("run_id") == r1["run_id"]).select("group_key"),
@@ -150,30 +175,6 @@ def test_resume_refuses_changed_salting_params(spark, corpus, tmp_path_factory):
               chunk_bytes=1 << 20, group_factor=2).run(corpus)
 
 
-def test_resume_refuses_legacy_lineage_missing_params(spark, corpus, tmp_path_factory):
-    """Lineage rows written before params tracking (or with null params)
-    carry no record of their salting config; defaults have changed since
-    (group_factor 2→1), so a silent resume could duplicate groups. run()
-    must refuse unless the caller asserts the legacy params explicitly."""
-    out = str(tmp_path_factory.mktemp("legacy_job"))
-    job = EncodeJob(spark, out, snapshot_id="sL", chunk_rows=1024, chunk_bytes=1 << 20)
-    job.run(corpus)
-    # simulate a pre-params lineage dir: rewrite it without the column
-    legacy = spark.read.parquet(f"{out}/lineage").drop("params")
-    legacy.write.mode("overwrite").parquet(f"{out}/lineage_tmp")
-    import shutil
-    shutil.rmtree(f"{out}/lineage")
-    shutil.move(f"{out}/lineage_tmp", f"{out}/lineage")
-
-    again = EncodeJob(spark, out, snapshot_id="sL", chunk_rows=1024, chunk_bytes=1 << 20)
-    with pytest.raises(RuntimeError, match="legacy_params"):
-        again.run(corpus)
-    # explicit assertion of the original params unblocks the resume
-    ok = EncodeJob(spark, out, snapshot_id="sL", chunk_rows=1024, chunk_bytes=1 << 20,
-                   legacy_params=again.params)
-    ok.run(corpus)
-
-
 def test_chunks_dedupe_never_shuffles_frame_payloads(spark, corpus, tmp_path_factory):
     """VERDICT r3 #4: resolving double-committed chunk ids must not
     hash-exchange the binary frame payloads. Every (non-broadcast) Exchange
@@ -183,7 +184,11 @@ def test_chunks_dedupe_never_shuffles_frame_payloads(spark, corpus, tmp_path_fac
 
     out = str(tmp_path_factory.mktemp("plan_job"))
     job = EncodeJob(spark, out, snapshot_id="snapP", chunk_rows=1024, chunk_bytes=1 << 20)
-    job.run(corpus)
+    run_id = job.run(corpus)["run_id"]
+    # a second committed run of the same groups plans the (group_key, min
+    # run) semi-join; a single run is a plain scan with no exchange at all
+    _copy_run(out, run_id, "zzduplicate0")
+    _craft_marker(out, run_id, "zzduplicate0")
     df = job.chunks()
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -192,41 +197,34 @@ def test_chunks_dedupe_never_shuffles_frame_payloads(spark, corpus, tmp_path_fac
     # its input columns; broadcast exchanges are named BroadcastExchange
     blocks = re.split(r"\n(?=\(\d+\) )", plan)
     shuffles = [b for b in blocks if re.match(r"\(\d+\) Exchange\b", b)]
+    assert shuffles, plan
     for b in shuffles:
         assert "cols#" not in b, b
+    assert multiset_diff(corpus, decode_table(df, CORPUS_DDL)).count() == 0
 
 
 def test_double_committed_group_resolves_to_single_run(spark, corpus, tmp_path_factory):
     """Duplicate chunk files must never decode twice, in either class:
-    (1) an orphan run (crash after chunk write, before lineage append) has
-    no lineage row — invisible; (2) a concurrent double-commit (the same
-    groups 'done' under TWO run_ids) resolves to one committed run per
+    (1) an orphan run (crash after chunk write, before its commit marker)
+    has no marker — invisible; (2) a concurrent double-commit (the same
+    groups committed under TWO run_ids) resolves to one committed run per
     group via min(run_id). Both decode bit-identically."""
-    import os
-    import shutil
-
     out = str(tmp_path_factory.mktemp("double_job"))
     job = EncodeJob(spark, out, snapshot_id="snapD", chunk_rows=1024, chunk_bytes=1 << 20)
-    job.run(corpus)
-    chunks_dir = f"{out}/chunks"
-    runs = [d for d in os.listdir(chunks_dir) if d.startswith("run=")]
+    run_id = job.run(corpus)["run_id"]
     # deterministic encode → a re-committed generation is byte-identical;
     # simulate it by duplicating the whole run dir under a second run id
-    shutil.copytree(
-        os.path.join(chunks_dir, runs[0]),
-        os.path.join(chunks_dir, "run=zzduplicate0"),
-    )
-    # case 1: duplicate files, no lineage row — orphan, invisible
+    _copy_run(out, run_id, "zzduplicate0")
+    # case 1: duplicate files, no marker — orphan, invisible
     got = job.chunks()
     assert got.groupBy("chunk_id").count().filter("count > 1").count() == 0
     assert got.select("run").distinct().count() == 1
     assert multiset_diff(corpus, decode_table(got, CORPUS_DDL)).count() == 0
 
-    # case 2: the duplicate run ALSO commits lineage (concurrent runs) —
+    # case 2: the duplicate run ALSO commits (concurrent runs) —
     # min(run_id) pins one run per group, never mixing runs within a group
-    lin = spark.read.option("mergeSchema", True).parquet(f"{out}/lineage")
-    dup_lineage = lin.withColumn("run_id", F.lit("zzduplicate0"))
-    dup_lineage.write.mode("append").parquet(f"{out}/lineage")
+    _craft_marker(out, run_id, "zzduplicate0")
+    assert job.runs() == sorted([run_id, "zzduplicate0"])
     got2 = job.chunks()
     assert got2.groupBy("chunk_id").count().filter("count > 1").count() == 0
     assert got2.select("run").distinct().count() == 1
@@ -256,21 +254,14 @@ def test_chunks_survive_numeric_looking_run_ids(spark, corpus, tmp_path_factory)
     would parse run=012345678901 as a Long, drop the leading zero, and the
     (group_key, run) semi-join would silently exclude the whole committed
     run. chunks() must read the partition column as a string."""
-    import os
-    import shutil
-
     out = str(tmp_path_factory.mktemp("numeric_run"))
     job = EncodeJob(spark, out, snapshot_id="snapN", chunk_rows=1024, chunk_bytes=1 << 20)
-    job.run(corpus)
+    old = job.run(corpus)["run_id"]
     chunks_dir = f"{out}/chunks"
-    old = [d for d in os.listdir(chunks_dir) if d.startswith("run=")][0]
-    shutil.move(os.path.join(chunks_dir, old), os.path.join(chunks_dir, "run=012345678901"))
-    lin = spark.read.option("mergeSchema", True).parquet(f"{out}/lineage")
-    lin.withColumn("run_id", F.lit("012345678901")).write.mode("overwrite").parquet(
-        f"{out}/lineage_tmp"
-    )
-    shutil.rmtree(f"{out}/lineage")
-    shutil.move(f"{out}/lineage_tmp", f"{out}/lineage")
+    shutil.move(os.path.join(chunks_dir, f"run={old}"),
+                os.path.join(chunks_dir, "run=012345678901"))
+    _craft_marker(out, old, "012345678901")
+    os.remove(_marker_path(out, old))
 
     got = EncodeJob(spark, out, snapshot_id="snapN", chunk_rows=1024, chunk_bytes=1 << 20).chunks()
     assert got.count() > 0
@@ -282,7 +273,8 @@ def test_chunks_survive_numeric_looking_run_ids(spark, corpus, tmp_path_factory)
 @contextlib.contextmanager
 def _job_group(spark, name):
     """Run the body under a test-owned Spark job group and collect its
-    jobs as ``(job_id, [stage call sites])`` in submission order."""
+    jobs as ``(job_id, [stage names], task count, executed plan)`` in
+    submission order, read once the listener bus has caught up."""
     sc = spark.sparkContext
     sc.setJobGroup(name, name)
     jobs: list = []
@@ -291,29 +283,56 @@ def _job_group(spark, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        plans = {}
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+        while execs.hasNext():
+            ex = execs.next()
+            ids = ex.jobs().keys().iterator()
+            while ids.hasNext():
+                plans[int(ids.next())] = ex.physicalPlanDescription()
         st = sc.statusTracker()
         for j in sorted(st.getJobIdsForGroup(name)):
             stages = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
             jobs.append((j, [s.name if s else "" for s in stages],
-                         sum(s.numTasks for s in stages if s)))
+                         sum(s.numTasks for s in stages if s), plans.get(j, "")))
+
+
+def _is_chunk_write(job):
+    """Whether ``job`` belongs to the run's chunk write: the execution that
+    runs the grouped encode into a parquet insert."""
+    plan = job[3]
+    return "FlatMapGroupsInArrow" in plan and "InsertIntoHadoopFsRelationCommand" in plan
 
 
 def test_fresh_encode_runs_no_lineage_job_before_its_scan(spark, corpus, tmp_path_factory):
-    """A fresh out dir has no lineage: the resume state is one driver-side
-    FileSystem probe, so the first job of the run is the encode itself and
-    no lineage.py job precedes it; the whole run stays within 6 jobs."""
+    """A fresh out dir has no commit markers: the resume state is one
+    driver-side FileSystem probe, and the commit is a marker the driver
+    writes. Every job of the run is the chunk write's (its size pass,
+    broadcast, shuffle and write stages), at most 4, with none after it."""
     out = str(tmp_path_factory.mktemp("budget_job"))
     job = EncodeJob(spark, out, snapshot_id="snapB", chunk_rows=1024, chunk_bytes=1 << 20)
     with _job_group(spark, "test-fresh-encode-budget") as jobs:
         r = job.run(corpus)
     assert r["rows"] == N_ROWS
     assert jobs, "the encode ran no Spark job at all"
+    assert all(_is_chunk_write(j) for j in jobs), [(j, s) for j, s, _, _ in jobs]
+    assert len(jobs) <= 4, [s for _, s, _, _ in jobs]
 
-    def is_lineage(site):
-        return any("plans/lineage.py" in s for s in site[1])
 
-    assert not is_lineage(jobs[0]), jobs[0]
-    assert len(jobs) <= 6, [s for _, s, _ in jobs]
+def test_resume_encode_job_budget(spark, corpus, tmp_path_factory):
+    """A resume reads its done groups from the committed runs' chunk
+    metadata inside the chunk write's anti-join: still no job before or
+    after the chunk write, at most 6 (the fresh 4 plus the done-groups
+    aggregate and its broadcast)."""
+    out = str(tmp_path_factory.mktemp("resume_budget"))
+    job = EncodeJob(spark, out, snapshot_id="snapR", chunk_rows=1024, chunk_bytes=1 << 20)
+    job.run(corpus, only_groups_like="3")
+    with _job_group(spark, "test-resume-encode-budget") as jobs:
+        r = job.run(corpus)
+    assert r["rows"] == N_ROWS
+    assert all(_is_chunk_write(j) for j in jobs), [(j, s) for j, s, _, _ in jobs]
+    assert len(jobs) <= 6, [s for _, s, _, _ in jobs]
 
 
 def test_missing_lineage_reads_empty_without_tasks(spark, tmp_path_factory):
@@ -324,15 +343,16 @@ def test_missing_lineage_reads_empty_without_tasks(spark, tmp_path_factory):
         gens = job.lineage().groupBy("snapshot_id", "job_id").count().collect()
         done = job.done_groups().collect()
     assert rows == [] and gens == [] and done == []
-    assert sum(n for _, _, n in jobs) == 0, jobs
+    assert sum(n for _, _, n, _ in jobs) == 0, jobs
     assert job.lineage().rdd.getNumPartitions() == 0
     assert job.lineage().count() == 0
 
 
 def test_lineage_with_only_temporary_dir_resumes_empty(spark, corpus, tmp_path_factory):
-    """A crashed lineage append leaves ``lineage/_temporary/`` and nothing
-    else; Spark never reads ``_``-prefixed entries, so this is "nothing
-    committed" and the run encodes every group."""
+    """A crashed lineage append of a pre-marker encode leaves
+    ``lineage/_temporary/`` and nothing else: ``_``-prefixed entries hold
+    no commit, so the dir is not refused as a pre-marker out_dir, and the
+    run encodes every group."""
     out = str(tmp_path_factory.mktemp("tmp_only"))
     attempt = os.path.join(out, "lineage", "_temporary", "0", "_temporary", "attempt_0")
     os.makedirs(attempt)
@@ -345,19 +365,67 @@ def test_lineage_with_only_temporary_dir_resumes_empty(spark, corpus, tmp_path_f
     assert multiset_diff(corpus, decode_table(job.chunks(), CORPUS_DDL)).count() == 0
 
 
-def test_corrupt_lineage_file_raises_instead_of_reencoding(spark, corpus, tmp_path_factory):
-    """An unreadable lineage file is not "nothing committed": reading it
-    as empty would re-encode every group as a second generation into the
-    same out_dir. The run must fail before writing any chunk."""
-    out = str(tmp_path_factory.mktemp("corrupt_lineage"))
+def test_leftover_temp_marker_is_ignored(spark, corpus, tmp_path_factory):
+    """A commit that crashed before its rename leaves ``commits/_<run>.json``
+    (whole or half-written): readers skip ``_`` names, so its run stays
+    uncommitted and the next run encodes its groups."""
+    out = str(tmp_path_factory.mktemp("tmp_marker"))
+    job = EncodeJob(spark, out, snapshot_id="snapT", chunk_rows=1024, chunk_bytes=1 << 20)
+    first = job.run(corpus, only_groups_like="3")["run_id"]
+    # a whole temp marker of an orphan copy of the first run, and a torn one
+    _copy_run(out, first, "0rphan000000")
+    _craft_marker(out, first, "0rphan000000")
+    os.rename(_marker_path(out, "0rphan000000"),
+              os.path.join(out, "commits", "_0rphan000000.json"))
+    with open(os.path.join(out, "commits", "_feedface0000.json"), "w") as f:
+        f.write('{"snapshot_id": "snapT", "job_')
+    assert job.runs() == [first]
+    second = job.run(corpus)["run_id"]
+    assert job.runs() == sorted([first, second])
+    assert multiset_diff(corpus, decode_table(job.chunks(), CORPUS_DDL)).count() == 0
+
+
+def test_corrupt_marker_raises_naming_the_file(spark, corpus, tmp_path_factory):
+    """An unreadable commit marker is not "not committed": reading it that
+    way would re-encode its groups as a second run into the same out_dir.
+    Every reader raises ValueError naming the file, and a run fails before
+    writing any chunk."""
+    out = str(tmp_path_factory.mktemp("corrupt_marker"))
     job = EncodeJob(spark, out, snapshot_id="snapC", chunk_rows=1024, chunk_bytes=1 << 20)
     job.run(corpus)
     shutil.rmtree(os.path.join(out, "chunks"))
-    with open(os.path.join(out, "lineage", "part-99999-corrupt.snappy.parquet"), "wb") as f:
-        f.write(b"not a parquet file at all")
-    with pytest.raises(Exception, match="part-99999-corrupt"):
+    with open(os.path.join(out, "commits", "0badc0ffee00.json"), "w") as f:
+        f.write("not json at all")
+    with pytest.raises(ValueError, match="0badc0ffee00.json"):
         job.run(corpus)
     assert not os.path.exists(os.path.join(out, "chunks"))
+    for read in (job.runs, job.chunks, job.lineage,
+                 lambda: generations(spark, out)):
+        with pytest.raises(ValueError, match="0badc0ffee00.json"):
+            read()
+
+
+def test_uncommitted_run_is_invisible_and_reencoded_exactly(spark, corpus, tmp_path_factory):
+    """The crash window: a run whose chunks are written but whose marker is
+    not. Its chunks are invisible to every reader, and the next run
+    re-encodes exactly its groups."""
+    out = str(tmp_path_factory.mktemp("crash_window"))
+    job = EncodeJob(spark, out, snapshot_id="snapW", chunk_rows=1024, chunk_bytes=1 << 20)
+    first = job.run(corpus, only_groups_like="3")
+    lost = job.run(corpus)
+    os.remove(_marker_path(out, lost["run_id"]))
+    assert job.runs() == [first["run_id"]]
+    visible = {r["group_key"] for r in job.chunks().select("group_key").collect()}
+    assert visible == _groups_of_run(spark, out, first["run_id"])
+    assert job.lineage().filter(F.col("run_id") == lost["run_id"]).count() == 0
+    [gen] = generations(spark, out)
+    assert (gen["runs"], gen["rows"]) == (1, first["rows"])
+
+    again = job.run(corpus)
+    assert _groups_of_run(spark, out, again["run_id"]) == \
+        _groups_of_run(spark, out, lost["run_id"])
+    assert _totals(again) == _totals(lost)
+    assert multiset_diff(corpus, decode_table(job.chunks(), CORPUS_DDL)).count() == 0
 
 
 def test_no_read_path_builds_an_empty_python_rdd():
@@ -431,10 +499,10 @@ def test_run_on_a_finished_out_dir_reports_the_committed_totals(spark, tmp_path_
 
 
 def test_commit_aggregate_matches_the_stats_codecs_join(spark, tmp_path_factory):
-    """The commit's one ``groupBy(group_key)`` writes the lineage rows the
-    earlier two aggregates and their join wrote, on an input whose groups
-    pick different codec sets; its scan reads each column's codec tag and
-    never the frames."""
+    """The lineage view's one ``groupBy(run, group_key)`` over the committed
+    chunk metadata yields the rows the earlier two aggregates and their join
+    wrote, on an input whose groups pick different codec sets; its scan
+    reads each column's codec tag and never the frames."""
     from parquet2csv_spark.operators.encode import CHUNKS_DDL
 
     # codec choices are cached per column and 4x row-count band, so the
@@ -473,9 +541,9 @@ def test_commit_aggregate_matches_the_stats_codecs_join(spark, tmp_path_factory)
     assert got == want
     assert len({r["codecs"] for r in got}) > 1, got
 
-    commit = job._commit_rows(run_id)
-    plan = commit._sc._jvm.PythonSQLUtils.explainString(
-        commit._jdf.queryExecution(), "formatted"
+    view = job.lineage()
+    plan = view._sc._jvm.PythonSQLUtils.explainString(
+        view._jdf.queryExecution(), "formatted"
     )
     read = [line for line in plan.splitlines() if "ReadSchema" in line]
     assert len(read) == 1 and "codec" in read[0] and "frame" not in read[0], read
