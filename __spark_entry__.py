@@ -37,8 +37,13 @@ from parquet2csv_spark.operators import (
     multiset_diff,
 )
 from parquet2csv_spark.sources.corpus import CORPUS_DDL, generate_corpus
+from parquet2csv_spark.sources.schema_io import parquet_schema, read_parquet
 
-_T = lambda spark, sf_dir, name: spark.read.parquet(f"{sf_dir}/{name}.parquet")  # noqa: E731
+
+def _T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``name`` table, with its schema read from the file's footer on
+    the driver rather than by Spark's 1-task inference job."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _par(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -124,13 +129,16 @@ def _roundtrip(spark, sf_dir, table, cols):
         worth_it,
     )
 
-    src = _T(spark, sf_dir, table)
     path = f"{sf_dir}/{table}.parquet"
     if worth_it(path, spark.sparkContext.defaultParallelism):
-        chunks = parallel_scan_encode(spark, path, src.schema, chunk_rows=16384)
+        # the scan is pyarrow's: only the schema is needed, no DataFrame
+        schema = parquet_schema(spark, path)
+        chunks = parallel_scan_encode(spark, path, schema, chunk_rows=16384)
     else:
+        src = _T(spark, sf_dir, table)
+        schema = src.schema
         chunks = encode_table(_par(src, key=cols[0]), chunk_rows=16384)
-    return decode_table(chunks, src.schema).select(*cols)
+    return decode_table(chunks, schema).select(*cols)
 
 
 def q_roundtrip_documents(spark, sf_dir):

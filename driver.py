@@ -255,9 +255,9 @@ def _run(args: argparse.Namespace, spark) -> int:
     """Dispatch one parsed command; returns its exit code."""
     if args.cmd == "encode":
         from parquet2csv_spark.plans.lineage import EncodeJob, write_text
-        from parquet2csv_spark.sources.catalog import open_catalog
+        from parquet2csv_spark.sources.catalog import ParquetDirCatalog
 
-        cat = open_catalog(spark)
+        cat = ParquetDirCatalog(spark)
         snap = cat.snapshot(args.input)
         df = cat.read(snap)
         job = EncodeJob(
@@ -348,12 +348,13 @@ def _run(args: argparse.Namespace, spark) -> int:
     elif args.cmd == "verify":
         from parquet2csv_spark.operators import decode_table, multiset_diff
         from parquet2csv_spark.plans.lineage import EncodeJob
-        from parquet2csv_spark.sources.catalog import open_catalog
+        from parquet2csv_spark.sources.catalog import ParquetDirCatalog
 
         # verify ONLY committed chunks: orphan chunk files left by a crashed
         # run (later resumed) would otherwise decode as duplicates and fail
         # bit-identity even though the committed dataset is correct
-        snap = open_catalog(spark).snapshot(args.input)
+        cat = ParquetDirCatalog(spark)
+        snap = cat.snapshot(args.input)
         job = EncodeJob(
             spark, args.chunks, snapshot_id=snap.snapshot_id, job_id=args.job_id
         )
@@ -367,7 +368,7 @@ def _run(args: argparse.Namespace, spark) -> int:
                 "snapshot_id": snap.snapshot_id, "job_id": args.job_id,
             }))
             return 3
-        src = spark.read.parquet(args.input)
+        src = cat.read(snap)
         chunks = job.chunks(runs)
         dec = decode_table(chunks, src.schema)
         diff = multiset_diff(src, dec).count()
@@ -393,9 +394,12 @@ def _run(args: argparse.Namespace, spark) -> int:
         write_schema_only_parquet(spark, schema, args.out)
         print(json.dumps({"footer_only_parquet": args.out}))
     elif args.cmd == "one-row-schema":
-        from parquet2csv_spark.sources.schema_io import write_one_row_schema_file
+        from parquet2csv_spark.sources.schema_io import (
+            parquet_schema,
+            write_one_row_schema_file,
+        )
 
-        schema = spark.read.parquet(args.input).schema
+        schema = parquet_schema(spark, args.input)
         write_one_row_schema_file(spark, schema, args.out)
         print(json.dumps({"one_row_schema_file": args.out}))
     return 0

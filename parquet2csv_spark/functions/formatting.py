@@ -24,6 +24,8 @@ from decimal import Decimal
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from ..sources.schema_io import read_parquet
+
 # the reference's two sentinel epochs (ParquetToCsv.java:55-63): these exact
 # strings round-trip verbatim
 SENTINEL_1900_01_01_MS = -2208988800000
@@ -195,7 +197,7 @@ def parquet_to_csv(spark, in_path: str, out_dir: str, single_file: bool = False)
     with uppercased headers. Empty input → the output is DELETED, exactly
     like the reference (ParquetToCsv.java:110-113) — not left as
     header-only/empty part files."""
-    df = spark.read.parquet(in_path)
+    df = read_parquet(spark, in_path)
     fmt = format_table(df).drop("ROW_TEXT")
     if single_file:
         fmt = fmt.coalesce(1)

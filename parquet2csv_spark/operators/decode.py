@@ -19,11 +19,15 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import ArrayType, StructType
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from ..codecs import decode_array
 
-POSITION_COLS_DDL = "_group_key string, _seq bigint, _row_offset bigint"
+POSITION_FIELDS = [
+    StructField("_group_key", StringType()),
+    StructField("_seq", LongType()),
+    StructField("_row_offset", LongType()),
+]
 
 
 def prune_chunks_long(chunks_df: DataFrame, col: str, lo=None, hi=None) -> DataFrame:
@@ -290,9 +294,7 @@ def decode_table(
         schema = _parse_datatype_string(schema)
     if filters:
         chunks_df = _apply_filters(chunks_df, schema, filters)
-    out_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    if with_position:
-        out_ddl += ", " + POSITION_COLS_DDL
+    out_schema = StructType([*schema.fields, *(POSITION_FIELDS if with_position else [])])
     target = _arrow_schema_for(schema)
     names = [f.name for f in schema.fields]
 
@@ -332,7 +334,7 @@ def decode_table(
                     out_names += ["_group_key", "_seq", "_row_offset"]
                 yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    out = chunks_df.mapInArrow(dec, out_ddl)
+    out = chunks_df.mapInArrow(dec, out_schema)
     if filters:
         from pyspark.sql import functions as F
 

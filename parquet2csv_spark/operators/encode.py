@@ -33,17 +33,9 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codecs import raw_size, selector, vec
-
-CHUNKS_DDL = (
-    "chunk_id string, group_key string, seq bigint, n_rows bigint, "
-    "raw_bytes bigint, enc_bytes bigint, wall_ms bigint, "
-    "cols array<struct<name:string, codec:string, n:bigint, null_count:bigint, "
-    "raw_bytes:bigint, enc_bytes:bigint, "
-    "lo_long:bigint, hi_long:bigint, lo_str:string, hi_str:string, "
-    "bloom:array<bigint>, frame:binary>>"
-)
 
 COL_STRUCT = pa.struct(
     [
@@ -78,6 +70,9 @@ CHUNKS_ARROW = pa.schema(
         ("cols", pa.list_(COL_STRUCT)),
     ]
 )
+# the same layout as a Spark schema, derived rather than hand-synced: a
+# StructType, not a DDL string, so no operator pays a JVM DDL parse
+CHUNKS_SCHEMA = from_arrow_schema(CHUNKS_ARROW)
 
 DEFAULT_CHUNK_ROWS = 65536
 DEFAULT_CHUNK_BYTES = 8 << 20
@@ -259,7 +254,7 @@ def encode_table(
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         yield from encode_batches(batches, chunk_rows, chunk_bytes)
 
-    return df.mapInArrow(enc, CHUNKS_DDL)
+    return df.mapInArrow(enc, CHUNKS_SCHEMA)
 
 
 # ------------------------------------------------------------- grouped path
@@ -393,7 +388,7 @@ def encode_salted(
             rows.append(encode_chunk(piece, f"{gk}:{seq:06d}", gk, seq, None, ctx))
         return pa.Table.from_batches([_rows_to_batch(rows)], schema=CHUNKS_ARROW)
 
-    return salted.groupBy("_gk").applyInArrow(enc_group, CHUNKS_DDL)
+    return salted.groupBy("_gk").applyInArrow(enc_group, CHUNKS_SCHEMA)
 
 
 def encode_grouped(

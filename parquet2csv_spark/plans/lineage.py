@@ -8,7 +8,7 @@ analog for (it reprocesses whole files, DataLoad.java:256-304); SURVEY.md
 §2.2 maps it to the joins/set-ops rows.
 
 Layout under ``out_dir``:
-  chunks/run=<run_id>/*.parquet  — chunk rows (CHUNKS_DDL)
+  chunks/run=<run_id>/*.parquet  — chunk rows (CHUNKS_SCHEMA)
   commits/<run_id>.json          — the run's commit marker: snapshot_id,
                                    job_id, run_id, params, committed_at
                                    and the run's totals (groups, rows,
@@ -55,23 +55,34 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from ..operators.encode import (
-    CHUNKS_DDL,
+    CHUNKS_SCHEMA,
     DEFAULT_CHUNK_BYTES,
     DEFAULT_CHUNK_ROWS,
     encode_salted,
     salt_groups,
 )
 
+
 # the schema of the ``lineage()`` view: one row per committed (run, group)
-LINEAGE_DDL = (
-    "snapshot_id string, job_id string, run_id string, group_key string, "
-    "n_chunks bigint, n_rows bigint, raw_bytes bigint, enc_bytes bigint, "
-    "wall_ms bigint, codecs string, status string, committed_at timestamp, "
-    "params string"
-)
+LINEAGE_SCHEMA = StructType([StructField(name, t) for name, t in (
+    ("snapshot_id", StringType()), ("job_id", StringType()),
+    ("run_id", StringType()), ("group_key", StringType()),
+    ("n_chunks", LongType()), ("n_rows", LongType()),
+    ("raw_bytes", LongType()), ("enc_bytes", LongType()),
+    ("wall_ms", LongType()), ("codecs", StringType()), ("status", StringType()),
+    ("committed_at", TimestampType()), ("params", StringType()),
+)])
+# a committed run's chunk rows with their ``run`` partition column
+_RUN_CHUNKS_SCHEMA = StructType([*CHUNKS_SCHEMA.fields, StructField("run", StringType())])
 _TOTALS = ("groups", "rows", "raw_bytes", "enc_bytes")
 _MARKER_FIELDS = ("snapshot_id", "job_id", "run_id", "params", "committed_at", *_TOTALS)
 
@@ -178,13 +189,13 @@ def generations(spark: SparkSession, out_dir: str) -> list[Row]:
     return [Row(**g) for g in gens.values()]
 
 
-def _empty(spark: SparkSession, ddl: str) -> DataFrame:
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
     """A zero-row DataFrame over an empty local relation: zero partitions,
     so reads of it launch no tasks (``createDataFrame`` of an empty list
     would be a Python RDD over ``defaultParallelism`` partitions)."""
     return spark.range(1).where(F.lit(False)).select(*[
         F.lit(None).cast(f.dataType).alias(f.name)
-        for f in StructType.fromDDL(ddl).fields
+        for f in schema.fields
     ])
 
 
@@ -192,7 +203,7 @@ class EncodeJob:
     """A resumable encode of one table snapshot into an out_dir.
 
     Layout under ``out_dir`` (module docstring):
-      chunks/run=<run_id>/*.parquet   — chunk rows (CHUNKS_DDL)
+      chunks/run=<run_id>/*.parquet   — chunk rows (CHUNKS_SCHEMA)
       commits/<run_id>.json           — one commit marker per run
 
     A run is committed once its marker is in place; it is written after
@@ -259,7 +270,7 @@ class EncodeJob:
         Long whose string form drops the leading zero (review finding r4)."""
         base = f"{self.out_dir}/chunks"
         return (
-            self.spark.read.schema(CHUNKS_DDL + ", run string")
+            self.spark.read.schema(_RUN_CHUNKS_SCHEMA)
             .option("basePath", base)
             .parquet(*[f"{base}/run={r}" for r in runs])
         )
@@ -275,12 +286,12 @@ class EncodeJob:
             raise OSError(f"could not commit {final}: rename from {tmp} failed")
 
     def lineage(self) -> DataFrame:
-        """A LINEAGE_DDL view of every committed run in ``out_dir``: one row
+        """A LINEAGE_SCHEMA view of every committed run in ``out_dir``: one row
         per (run, group), aggregated from the chunk metadata (each column's
         codec tag, never the frames) plus the run's marker fields."""
         markers = read_markers(self.spark, self.out_dir)
         if not markers:
-            return _empty(self.spark, LINEAGE_DDL)
+            return _empty(self.spark, LINEAGE_SCHEMA)
         by_run = F.create_map(*[
             v for m in markers for v in (
                 F.lit(m["run_id"]),
@@ -322,7 +333,7 @@ class EncodeJob:
             markers = read_markers(self.spark, self.out_dir)
         runs = [m["run_id"] for m in self._own(markers)]
         if not runs:
-            return _empty(self.spark, "_gk string")
+            return _empty(self.spark, StructType([StructField("_gk", StringType())]))
         return self._read_runs(runs).select(F.col("group_key").alias("_gk")).distinct()
 
     # --------------------------------------------------------------- running
@@ -376,8 +387,8 @@ class EncodeJob:
         at the start of the run to the totals this run commits, observed on
         its chunk write. A concurrent committer to the same (snapshot, job)
         between this run's start and its commit is not counted. A run that
-        writes no chunk commits no marker and returns the earlier runs'
-        totals.
+        writes no chunk commits no marker, deletes its empty ``run=`` dir
+        and returns the earlier runs' totals.
 
         ``only_groups_like``: test hook — restrict THIS run to pending
         groups whose key contains the substring, simulating a job that
@@ -385,6 +396,7 @@ class EncodeJob:
         same salting → the next run picks up exactly the rest).
         """
         run_id = uuid.uuid4().hex[:12]
+        run_dir = f"{self.out_dir}/chunks/run={run_id}"
         t0 = time.time()
         markers = read_markers(self.spark, self.out_dir)
         self._check_resume(markers)
@@ -405,7 +417,7 @@ class EncodeJob:
             F.sum("n_rows").alias("rows"),
             F.sum("raw_bytes").alias("raw_bytes"),
             F.sum("enc_bytes").alias("enc_bytes"),
-        ).write.mode("append").parquet(f"{self.out_dir}/chunks/run={run_id}")
+        ).write.mode("append").parquet(run_dir)
         # sums over zero rows are null
         this_run = {k: written.get[k] or 0 for k in _TOTALS}
         if this_run["groups"]:
@@ -415,6 +427,11 @@ class EncodeJob:
                 "committed_at": datetime.datetime.now(datetime.timezone.utc).isoformat(),
                 **this_run,
             })
+        else:
+            # nothing to commit (every group already done): the write
+            # still left a dir holding an empty parquet file
+            fs, hpath = _fs(self.spark, run_dir)
+            fs.delete(hpath, True)
         total = {k: this_run[k] + sum(m[k] for m in self._own(markers)) for k in _TOTALS}
         return {
             "run_id": run_id,
@@ -453,7 +470,7 @@ class EncodeJob:
         if runs is None:
             runs = self.runs()
         if not runs:
-            return _empty(self.spark, CHUNKS_DDL + ", run string")
+            return _empty(self.spark, _RUN_CHUNKS_SCHEMA)
         chunks = self._read_runs(runs)
         if len(runs) == 1:
             return chunks

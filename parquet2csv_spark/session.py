@@ -15,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+_GIB = 1 << 30
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half the
+    physical RAM in whole GiB (at least 1g), capped at the 48g a large
+    driver host gets. In local mode the driver JVM runs every task; a fixed
+    48g default let each JVM on a 15 GB box grow past what the box holds,
+    and a test run lost its JVM with a second one running beside it."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys_bytes // 2 // _GIB))}g"
+
+
 def get_spark(cpus: int | None = None, app: str = "parquet2csv_spark") -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -41,7 +55,8 @@ def get_spark(cpus: int | None = None, app: str = "parquet2csv_spark") -> SparkS
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "268435456")
     )

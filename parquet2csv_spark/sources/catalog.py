@@ -17,6 +17,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .schema_io import parquet_schema, read_parquet
+
 # Manifest-digest format version, embedded in every snapshot id. Changing
 # what feeds the digest (e.g. the r3 move from whole-second to nanosecond
 # mtimes) silently changes ids for UNCHANGED directories, which would make
@@ -90,7 +92,7 @@ class ParquetDirCatalog:
                     f"snapshot {snap.snapshot_id} no longer matches {snap.table_path} "
                     f"(now {digest}) — input mutated since the job was planned"
                 )
-            return self.spark.read.parquet(snap.table_path)
+            return read_parquet(self.spark, snap.table_path)
         if verify:
             for rel, (size, mtime) in snap.files.items():
                 fp = snap.table_path if rel == "." else os.path.join(snap.table_path, rel)
@@ -114,11 +116,24 @@ class ParquetDirCatalog:
                 f"snapshot {snap.snapshot_id}: manifest for {snap.table_path} "
                 f"contains no .parquet data files — nothing to read"
             )
-        reader = self.spark.read
+        # the schema Spark would infer, from the footer of its first file
+        # in path order (the paths share the table's prefix), read on the
+        # driver instead of by a 1-task inference job
+        reader = self.spark.read.schema(parquet_schema(self.spark, min(data)))
         if not os.path.isfile(snap.table_path):
             # basePath must be a directory; a single-file table needs none
             reader = reader.option("basePath", snap.table_path)
         return reader.parquet(*data)
+
+
+def _iceberg_on_classpath(spark: SparkSession) -> bool:
+    """Whether the Iceberg runtime jar is loadable. ``classIsLoadable``
+    returns a boolean: a raised ``Class.forName`` error costs a Java
+    exception's conversion (0.12 s in a cold CLI-encode profile), and
+    attribute access on ``_jvm`` returns a JavaPackage stub either way."""
+    return spark._jvm.org.apache.spark.util.Utils.classIsLoadable(  # type: ignore[attr-defined]
+        "org.apache.iceberg.Table"
+    )
 
 
 class IcebergCatalog:
@@ -127,15 +142,7 @@ class IcebergCatalog:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        jvm_has_iceberg = False
-        try:
-            # Class.forName raises when absent (attribute access on _jvm
-            # returns a JavaPackage stub without error)
-            spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")  # type: ignore[attr-defined]
-            jvm_has_iceberg = True
-        except Exception:
-            pass
-        if not jvm_has_iceberg:
+        if not _iceberg_on_classpath(spark):
             raise ImportError(
                 "Iceberg runtime jar not on classpath — use ParquetDirCatalog"
             )
@@ -148,8 +155,10 @@ class IcebergCatalog:
 
 
 def open_catalog(spark: SparkSession):
-    """Iceberg when available, parquet-dir otherwise."""
-    try:
+    """Iceberg when its runtime jar is on the classpath, parquet-dir
+    otherwise. The two take different arguments (a table name and a
+    snapshot id, or a path and a ``Snapshot``), so a caller that holds a
+    path, like the CLI's ``--input``, constructs ``ParquetDirCatalog``."""
+    if _iceberg_on_classpath(spark):
         return IcebergCatalog(spark)
-    except ImportError:
-        return ParquetDirCatalog(spark)
+    return ParquetDirCatalog(spark)

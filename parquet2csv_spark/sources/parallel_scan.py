@@ -152,7 +152,7 @@ def parallel_scan_encode(
     Frames are byte-identical to ``encode_table`` over the same slices
     (both call operators.encode.encode_batches)."""
     from ..operators.encode import (
-        CHUNKS_DDL,
+        CHUNKS_SCHEMA,
         DEFAULT_CHUNK_BYTES,
         encode_batches,
     )
@@ -178,4 +178,4 @@ def parallel_scan_encode(
     # slice i is partition i: the JVM range hands each task its slice
     # index, and the slices themselves ride in the closure
     k = len(assignments)
-    return spark.range(0, k, 1, k).mapInArrow(read_encode, CHUNKS_DDL)
+    return spark.range(0, k, 1, k).mapInArrow(read_encode, CHUNKS_SCHEMA)

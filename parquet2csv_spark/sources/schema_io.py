@@ -20,7 +20,72 @@ import datetime
 import decimal
 import json
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, types as T
+
+# the JVM classes a footer read uses, by short name
+_FOOTER_CLASSES = (
+    "org.apache.hadoop.fs.Path",
+    "org.apache.parquet.hadoop.Footer",
+    "org.apache.parquet.hadoop.util.HadoopInputFile",
+    "org.apache.parquet.format.converter.ParquetMetadataConverter",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter",
+)
+
+
+def _class_handles(spark: SparkSession) -> dict:
+    """Handles on ``_FOOTER_CLASSES``, built locally: ``spark._jvm.a.b.C``
+    costs one py4j round trip per name segment, which is most of a footer
+    read's driver time."""
+    client = spark._jvm._gateway_client  # type: ignore[attr-defined]
+    return {fqn.rsplit(".", 1)[-1]: JavaClass(fqn, client) for fqn in _FOOTER_CLASSES}
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark infers for the single parquet file at ``path``,
+    from its footer; ``None`` when ``path`` is not a file."""
+    jcls = _class_handles(spark)
+    sstate = spark._jsparkSession.sessionState()
+    hconf = sstate.newHadoopConf()
+    hpath = jcls["Path"](path)
+    if not hpath.getFileSystem(hconf).isFile(hpath):
+        return None
+    footer = jcls["ParquetFooterReader"].readFooter(
+        jcls["HadoopInputFile"].fromPath(hpath, hconf),
+        jcls["ParquetMetadataConverter"].SKIP_ROW_GROUPS,
+    )
+    jschema = jcls["ParquetFileFormat"].readSchemaFromFooter(
+        jcls["Footer"](hpath, footer), jcls["ParquetToSparkSchemaConverter"](sstate.conf())
+    )
+    return T._parse_datatype_json_string(jschema.asNullable().json())
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path).schema`` infers.
+
+    For a single file it comes from one footer read on the driver, with no
+    Spark job: the footer is read without its row groups, converted with
+    Spark's own ``ParquetFileFormat.readSchemaFromFooter`` and a
+    ``ParquetToSparkSchemaConverter`` built from the session conf, and made
+    nullable as the reader does. Measured on a 4-core box: 8 ms against
+    ~90 ms for the 1-task inference job (0.03-0.05 s against 0.11-0.18 s
+    on the sf0.01 tables).
+
+    A directory or glob is left to Spark's inference: finding its first
+    file from Python costs a py4j round trip per file, which at 1000 part
+    files took 408 ms against 132 ms for ``spark.read.parquet(dir).schema``
+    (56 against 111 ms at 100 files)."""
+    schema = _footer_schema(spark, path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with a single file's schema read from
+    its footer (:func:`parquet_schema`) instead of by the inference job."""
+    schema = _footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def schema_to_json(df_or_schema) -> str:
@@ -31,9 +96,12 @@ def schema_to_json(df_or_schema) -> str:
 
 
 def export_schema_json(spark: SparkSession, parquet_path: str, out_file: str) -> str:
-    """K4 end-to-end: parquet footer → schema JSON file (footer-only read —
-    no row data is scanned, like ParquetFileReader.open().getFooter())."""
-    schema = spark.read.parquet(parquet_path).schema
+    """K4 end-to-end: parquet footer → schema JSON file. For a single file,
+    a footer-only read on the driver (:func:`parquet_schema`), like the
+    reference's ``ParquetFileReader.open().getFooter()``: no row data is
+    scanned and no Spark job runs. A directory is left to Spark's 1-task
+    inference job."""
+    schema = parquet_schema(spark, parquet_path)
     text = schema_to_json(schema)
     with open(out_file, "w") as f:
         f.write(text)

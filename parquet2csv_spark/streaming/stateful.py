@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.schema_io import parquet_schema
+
 OUTPUT_DDL = "user_id bigint, n_events bigint, total_value double, last_ts timestamp"
 STATE_DDL = "n bigint, total double, last_us bigint"
 
@@ -54,7 +56,7 @@ def running_user_totals(
     new files arrive resumes the per-user state from the checkpoint. The
     latest totals per user = the row with the highest epoch.
     """
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(spark, events_dir)
     stream = (
         spark.readStream.schema(schema)
         .parquet(events_dir)

@@ -15,6 +15,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.schema_io import parquet_schema
+
 # One-micro-batch pin for every WATERMARKED availableNow drain (ADVICE r7,
 # generalizing the VERDICT r6 #6 interval-join fix): the file source's
 # default ~1000-file admission can split a multi-file directory into
@@ -42,7 +44,7 @@ def _drain_stream(
     a temp dir that is removed after the drain. ``reader_options`` are
     applied to the file source (e.g. ``maxFilesPerTrigger`` to control
     micro-batch splitting under availableNow)."""
-    schema = spark.read.parquet(events_path).schema
+    schema = parquet_schema(spark, events_path)
     staged = None
     if os.path.isfile(events_path):
         staged = tempfile.mkdtemp(prefix="stream_src_")

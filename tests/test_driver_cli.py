@@ -323,7 +323,7 @@ def test_pre_marker_out_dir_is_refused_by_encode_decode_verify(spark, tmp_path, 
     verify all raise a migration error instead of reading it as empty."""
     import pytest
 
-    from parquet2csv_spark.plans.lineage import LINEAGE_DDL
+    from parquet2csv_spark.plans.lineage import LINEAGE_SCHEMA
 
     src = str(tmp_path / "src")
     _write_src(spark, src)
@@ -336,7 +336,7 @@ def test_pre_marker_out_dir_is_refused_by_encode_decode_verify(spark, tmp_path, 
     shutil.rmtree(os.path.join(out, "commits"))
     spark.createDataFrame(
         [("s", "encode", "r", "g", 1, 1, 1, 1, 1, "plain", "done", None, None)],
-        LINEAGE_DDL,
+        LINEAGE_SCHEMA,
     ).write.parquet(os.path.join(out, "lineage"))
     for argv in (
         ["encode", "--input", src, "--out", out],
@@ -524,3 +524,68 @@ def test_decode_of_a_one_run_out_dir_runs_one_job(spark, tmp_path, capsys, monke
         "verify", "--input", src, "--chunks", out, "--job-id", "nope"]) == 3
     assert "no committed chunks" in capsys.readouterr().out
     assert _group_jobs(spark, "test-verify-no-marker") == []
+
+
+def test_warm_cli_encode_runs_only_the_chunk_write_and_to_json_none(
+        spark, tmp_path, capsys, monkeypatch):
+    """The input's schema comes from a footer read on the driver, so in a
+    warmed context every job of a CLI encode belongs to the chunk write (at
+    most its 4), and to-json of a parquet file runs no Spark job at all."""
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    monkeypatch.setattr(driver, "_WARMED", {spark.sparkContext.applicationId})
+    assert _cli_in_group(spark, "test-encode-budget", [
+        "encode", "--input", src, "--out", str(tmp_path / "enc")]) == 0
+    jobs = _group_jobs(spark, "test-encode-budget")
+    assert jobs and len(jobs) <= 4, [(j, n) for j, n, _ in jobs]
+    assert all("FlatMapGroupsInArrow" in plan and "InsertIntoHadoopFsRelationCommand" in plan
+               for _, _, plan in jobs), [(j, n) for j, n, _ in jobs]
+
+    part = os.path.join(src, min(f for f in os.listdir(src) if f.endswith(".parquet")))
+    sj = str(tmp_path / "schema.json")
+    assert _cli_in_group(spark, "test-to-json-budget", ["to-json", "--input", part, "--out", sj]) == 0
+    assert _group_jobs(spark, "test-to-json-budget") == []
+    assert json.load(open(sj)) == spark.read.parquet(part).schema.jsonValue()
+    capsys.readouterr()
+
+
+def test_reencode_of_an_unchanged_input_leaves_one_run_dir(spark, tmp_path, capsys):
+    """A second encode of the same input commits nothing and deletes the
+    run dir its empty write left; decode and verify still pass."""
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    out = str(tmp_path / "enc")
+    for _ in range(2):
+        assert driver.main(stop_session=False, argv=[
+            "--cpus", "4", "encode", "--input", src, "--out", out]) == 0
+    runs = [d for d in os.listdir(os.path.join(out, "chunks")) if d.startswith("run=")]
+    assert len(runs) == 1, runs
+    assert len([m for m in os.listdir(os.path.join(out, "commits"))
+                if m.endswith(".json") and not m.startswith(".")]) == 1
+    dec = str(tmp_path / "dec")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "decode", "--chunks", out, "--schema-json", f"{out}/schema.json",
+        "--out", dec]) == 0
+    assert multiset_diff(spark.read.parquet(src), spark.read.parquet(dec)).count() == 0
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "verify", "--input", src, "--chunks", out]) == 0
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["bit_identical"] is True
+
+
+def test_cli_encode_and_verify_read_a_path_even_with_iceberg_loadable(
+        spark, tmp_path, capsys, monkeypatch):
+    """``--input`` is always a path: with the Iceberg jar reported loadable,
+    encode and verify still read it through the parquet-dir catalog (an
+    ``IcebergCatalog`` has no ``snapshot``)."""
+    from parquet2csv_spark.sources import catalog
+
+    monkeypatch.setattr(catalog, "_iceberg_on_classpath", lambda _spark: True)
+    assert isinstance(catalog.open_catalog(spark), catalog.IcebergCatalog)
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    out = str(tmp_path / "enc")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", out]) == 0
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "verify", "--input", src, "--chunks", out]) == 0
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["bit_identical"] is True

@@ -624,3 +624,37 @@ def test_bloom_multibyte_prefix_agreement_no_false_negative():
         for i in range(BLOOM_K):
             pos = (h1 + i * h2) % m
             assert (words[pos >> 6] >> np.uint64(pos & 63)) & np.uint64(1), v
+
+
+# the chunks layout as the hand-written DDL that described it before the
+# Spark schema was derived from CHUNKS_ARROW
+_LEGACY_CHUNKS_DDL = (
+    "chunk_id string, group_key string, seq bigint, n_rows bigint, "
+    "raw_bytes bigint, enc_bytes bigint, wall_ms bigint, "
+    "cols array<struct<name:string, codec:string, n:bigint, null_count:bigint, "
+    "raw_bytes:bigint, enc_bytes:bigint, "
+    "lo_long:bigint, hi_long:bigint, lo_str:string, hi_str:string, "
+    "bloom:array<bigint>, frame:binary>>"
+)
+
+
+def test_derived_chunks_schema_equals_the_legacy_ddl_and_reads_its_dirs(spark, tmp_path):
+    """CHUNKS_SCHEMA, derived from CHUNKS_ARROW, is the layout the DDL
+    declared; a chunks dir written under the DDL reads back with it and
+    decodes to the source."""
+    from pyspark.sql.types import StructType
+
+    from parquet2csv_spark.operators.encode import CHUNKS_SCHEMA
+
+    legacy = StructType.fromDDL(_LEGACY_CHUNKS_DDL)
+    assert CHUNKS_SCHEMA == legacy
+    src = spark.createDataFrame(
+        [(i, f"s{i % 7}", None if i % 5 else 1.5 * i) for i in range(300)],
+        "id long, s string, x double",
+    )
+    old_dir = str(tmp_path / "legacy_chunks")
+    rows = encode_table(src, chunk_rows=64).collect()
+    spark.createDataFrame(rows, legacy).write.parquet(old_dir)
+    back = spark.read.schema(CHUNKS_SCHEMA).parquet(old_dir)
+    assert back.count() == len(rows)
+    assert multiset_diff(src, decode_table(back, src.schema)).count() == 0

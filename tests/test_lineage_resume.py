@@ -503,7 +503,7 @@ def test_commit_aggregate_matches_the_stats_codecs_join(spark, tmp_path_factory)
     chunk metadata yields the rows the earlier two aggregates and their join
     wrote, on an input whose groups pick different codec sets; its scan
     reads each column's codec tag and never the frames."""
-    from parquet2csv_spark.operators.encode import CHUNKS_DDL
+    from parquet2csv_spark.operators.encode import CHUNKS_SCHEMA
 
     # codec choices are cached per column and 4x row-count band, so the
     # groups differ in size as well as in content (short distinct texts,
@@ -522,7 +522,7 @@ def test_commit_aggregate_matches_the_stats_codecs_join(spark, tmp_path_factory)
     job = EncodeJob(spark, out, snapshot_id="snapM", order_cols=["path"])
     run_id = job.run(src)["run_id"]
 
-    written = spark.read.schema(CHUNKS_DDL).parquet(f"{out}/chunks/run={run_id}")
+    written = spark.read.schema(CHUNKS_SCHEMA).parquet(f"{out}/chunks/run={run_id}")
     stats = written.groupBy("group_key").agg(
         F.count("*").alias("n_chunks"),
         F.sum("n_rows").alias("n_rows"),

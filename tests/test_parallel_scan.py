@@ -2,6 +2,7 @@
 re-reader / fused read+encode source (sources.parallel_scan) and the
 vectorized cosine_topk fast path (r8 optimization round)."""
 
+import os
 import re
 
 import pyarrow.parquet as pq
@@ -15,6 +16,7 @@ from parquet2csv_spark.sources.parallel_scan import (
     parallel_scan_encode,
     worth_it,
 )
+from parquet2csv_spark.sources.schema_io import parquet_schema
 
 SF = "/root/testdata/sf0.01"
 
@@ -219,3 +221,32 @@ def test_parallel_scan_zero_row_file_roundtrips(spark, tmp_path):
     dec = decode_table(chunks, src.schema)
     assert dec.schema == src.schema
     assert dec.collect() == []
+
+
+@pytest.mark.parametrize("table", sorted(f for f in os.listdir(SF) if f.endswith(".parquet")))
+def test_parquet_schema_equals_spark_inference(spark, table):
+    path = f"{SF}/{table}"
+    assert parquet_schema(spark, path) == spark.read.parquet(path).schema
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("table", ["lineitem", "events"])
+def test_building_a_parallel_scan_roundtrip_runs_no_job(spark, table):
+    """The parallel-scan roundtrip needs only the input's schema, read from
+    its footer: building the query launches no Spark job."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()[f"roundtrip_{table}"]
+    assert worth_it(f"{SF}/{table}.parquet", spark.sparkContext.defaultParallelism)
+    assert _jobs_in_group(spark, f"test-build-{table}", lambda: q(spark, SF)) == []

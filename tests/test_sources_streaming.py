@@ -14,6 +14,8 @@ from parquet2csv_spark.sources.catalog import ParquetDirCatalog, open_catalog
 from parquet2csv_spark.sources.corpus import CORPUS_DDL, generate_corpus
 from parquet2csv_spark.sources.schema_io import (
     export_schema_json,
+    parquet_schema,
+    read_parquet,
     schema_from_json,
     schema_to_json,
     write_one_row_schema_file,
@@ -461,3 +463,87 @@ def test_windowed_counts_multi_file_out_of_order_drain(spark, tmp_path):
     by_type = {(r["event_type"]): r["n"] for r in rows}
     # the event-time-earlier file's rows must survive the drain
     assert by_type == {"click": 2, "view": 3}
+
+
+def test_open_catalog_probes_the_classpath_without_an_exception(spark, monkeypatch):
+    """``open_catalog`` asks ``Utils.classIsLoadable``, which answers with
+    a boolean instead of a Java exception; the probe decides which catalog
+    it returns."""
+    from parquet2csv_spark.sources import catalog
+
+    assert catalog._iceberg_on_classpath(spark) is False
+    assert isinstance(open_catalog(spark), ParquetDirCatalog)
+    monkeypatch.setattr(catalog, "_iceberg_on_classpath", lambda _spark: True)
+    assert isinstance(open_catalog(spark), catalog.IcebergCatalog)
+
+
+def test_parquet_schema_matches_inference_on_spark_written_types(spark, tmp_path):
+    """timestamp_ntz, decimal, date, binary and array<float> columns, plus a
+    non-nullable one: the footer schema equals the inferred one, nullable
+    throughout as the reader makes it."""
+    import datetime
+    import decimal
+
+    d = str(tmp_path / "typed")
+    spark.createDataFrame(
+        [(1, datetime.datetime(2024, 1, 2, 3, 4, 5), decimal.Decimal("12.34"),
+          datetime.date(2024, 1, 2), b"\x00\x01", [1.5, None])],
+        T.StructType([
+            T.StructField("id", T.LongType(), False),
+            T.StructField("ts", T.TimestampNTZType()),
+            T.StructField("amount", T.DecimalType(20, 2)),
+            T.StructField("day", T.DateType()),
+            T.StructField("blob", T.BinaryType()),
+            T.StructField("vec", T.ArrayType(T.FloatType())),
+        ]),
+    ).coalesce(1).write.parquet(d)
+    (p,) = [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+    got = parquet_schema(spark, p)
+    assert got == spark.read.parquet(p).schema
+    assert got["ts"].dataType == T.TimestampNTZType() and got["id"].nullable
+
+
+def test_parquet_schema_of_a_dir_whose_parts_differ(spark, tmp_path):
+    """Without mergeSchema Spark reads the first part file in path order;
+    so does the catalog's footer read, whichever part that is."""
+    p = str(tmp_path / "mixed")
+    spark.createDataFrame([(1, "a")], "id bigint, name string").write.parquet(p)
+    spark.createDataFrame([(2.5, 7)], "score double, n int").write.mode("append").parquet(p)
+    parts = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+    assert {tuple(spark.read.parquet(os.path.join(p, f)).columns) for f in parts} == {
+        ("id", "name"), ("score", "n")}
+    assert parquet_schema(spark, p) == spark.read.parquet(p).schema
+    cat = ParquetDirCatalog(spark)
+    assert cat.read(cat.snapshot(p)).schema == spark.read.parquet(p).schema
+    for f in parts:
+        f = os.path.join(p, f)
+        assert parquet_schema(spark, f) == spark.read.parquet(f).schema
+
+
+def test_parquet_schema_keeps_partition_columns_through_the_reader(spark, tmp_path):
+    p = str(tmp_path / "parted")
+    spark.createDataFrame(
+        [(i, f"v{i}", i % 2) for i in range(6)], "id bigint, v string, k int"
+    ).write.partitionBy("k").parquet(p)
+    read = spark.read.schema(parquet_schema(spark, p)).parquet(p)
+    assert read.schema == spark.read.parquet(p).schema
+    assert read.schema.fieldNames() == ["id", "v", "k"]
+    assert read.where("k = 1").count() == 3
+    leaf = os.path.join(p, "k=1")
+    leaf = os.path.join(leaf, min(f for f in os.listdir(leaf) if f.endswith(".parquet")))
+    assert parquet_schema(spark, leaf) == spark.read.parquet(leaf).schema
+    assert read_parquet(spark, leaf).schema.fieldNames() == ["id", "v"]
+
+
+def test_parquet_schema_errors_are_the_readers(spark, tmp_path):
+    """A missing path and a dir with no data file fail as
+    ``spark.read.parquet`` does."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="nope"):
+        parquet_schema(spark, str(tmp_path / "nope"))
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    with pytest.raises(AnalysisException):
+        parquet_schema(spark, str(empty))

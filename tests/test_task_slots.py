@@ -240,3 +240,13 @@ def test_reused_engine_worker_does_not_reparse_zip_archives(spark):
             assert r.reads == 0, rows
         else:
             assert r.reads == r.distinct <= r.archives, rows
+
+
+def test_default_driver_memory_follows_physical_ram():
+    from parquet2csv_spark.session import default_driver_memory
+
+    gib = 1 << 30
+    assert default_driver_memory(15 * gib + 600 * (1 << 20)) == "7g"
+    assert default_driver_memory(512 * gib) == "48g"
+    assert default_driver_memory(gib) == "1g"
+    assert default_driver_memory().endswith("g")
