@@ -322,7 +322,7 @@ def _run(args: argparse.Namespace, spark) -> int:
                 spark, args.chunks,
                 snapshot_id=latest["snapshot_id"], job_id=latest["job_id"],
             )
-            chunks = job.chunks()
+            chunks = job.chunks(latest["runs"])
             picked = {"snapshot_id": latest["snapshot_id"], "job_id": latest["job_id"]}
         else:
             chunks = spark.read.parquet(args.chunks)

@@ -257,21 +257,16 @@ def encode_array(arr: pa.Array, spec: str,
         else:
             tag, body = T_PLAIN_FLOAT, vec.floats_to_bytes(arr)
     elif kind == vec.KIND_DECIMAL:
-        if base_spec.startswith("decint"):
-            # decimal128 values that all fit int64 (the reference's CDC
-            # decimal(30,0) SOURCE_SCN sequence is the parity case) ride
-            # the int codec suite: 16B/value raw becomes delta/FOR-packed.
-            # The frame TAG is authoritative at decode, so the not-all-fit
-            # fallback to plain is safe even mid-spec.
-            raw = np.frombuffer(vec.decimals_to_bytes(arr), dtype=np.uint64)
-            lo, hi = raw[0::2], raw[1::2].view(np.int64)
-            fits = (hi == -(lo >> np.uint64(63)).astype(np.int64)).all()
-            if fits:
-                sub = base_spec.split(":", 1)[1] if ":" in base_spec else "for"
-                itag, ibody = _enc_int(lo.view(np.int64), sub)
-                tag, body = T_DEC_INT, bytes((itag,)) + ibody
-            else:
-                tag, body = T_PLAIN_DEC, vec.decimals_to_bytes(arr)
+        # decimal128 values that all fit int64 (the reference's CDC
+        # decimal(30,0) SOURCE_SCN sequence is the parity case) ride the
+        # int codec suite: 16B/value raw becomes delta/FOR-packed. The
+        # frame TAG is authoritative at decode, so the not-all-fit fallback
+        # to plain is safe even mid-spec.
+        ints = vec.decimals_as_int64(arr) if base_spec.startswith("decint") else None
+        if ints is not None:
+            sub = base_spec.split(":", 1)[1] if ":" in base_spec else "for"
+            itag, ibody = _enc_int(ints, sub)
+            tag, body = T_DEC_INT, bytes((itag,)) + ibody
         else:
             tag, body = T_PLAIN_DEC, vec.decimals_to_bytes(arr)
     else:  # strings

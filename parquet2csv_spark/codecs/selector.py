@@ -1,10 +1,19 @@
 """Sampling-based codec auto-selection (north_star, BASELINE.json).
 
 For each column chunk the selector computes cheap statistics on a
-deterministic stride sample — cardinality, run count, value range, average
-string length, trial symbol-table / deflate ratios — then estimates the
-encoded size under each applicable codec and picks the minimum. The chosen
-codec is recorded per chunk in the chunks table (the per-chunk codec tag).
+deterministic stride sample (cardinality, run count, value range, average
+string length) and picks a codec:
+
+- ints, and decimals whose values fit int64: an analytic size model, since
+  FOR/RLE/delta sizes follow from range and run statistics;
+- floats: an ALP probe on a stride sample;
+- strings: one trial loop that encodes a sample under every candidate and
+  keeps the smallest measured size, preferring faster candidates within a
+  tolerance. Only the sample's shape depends on the chunk: a stride sample
+  for small chunks, a contiguous prefix for large blobs (see ``choose``).
+
+The chosen codec is recorded per chunk in the chunks table (the per-chunk
+codec tag).
 
 Replaces the reference's single hard-wired configuration (GZIP parquet,
 dictionary disabled — OneRowParquetSchema.java:104-110): instead of one
@@ -12,11 +21,11 @@ global choice, each column chunk gets the codec its own data favors
 (FSST/dict for path-like and content-like text, RLE/dict for
 low-cardinality repo/lang/commit — as the north_star prescribes).
 
-Determinism contract: the sample is a fixed stride slice, so a single
-``choose``/``encode_best`` call is deterministic in its inputs. The codec
-``ctx`` (chosen specs per column and size band, FSST symbol tables) lives
-for exactly one encode task: ``encode_batches`` keeps one per call and
-``encode_salted`` one per task's copy of its closure. Frames are
+Determinism contract: every sample is a fixed stride slice or prefix, so a
+single ``choose``/``encode_best`` call is deterministic in its inputs. The
+codec ``ctx`` (chosen specs per column and size band, FSST symbol tables)
+lives for exactly one encode task: ``encode_batches`` keeps one per call
+and ``encode_salted`` one per task's copy of its closure. Frames are
 therefore a pure function of each task's sequence of chunks or groups,
 never of which worker process ran the task, so one-shot runs at the same
 slot count write byte-identical frames (the pinned
@@ -37,15 +46,28 @@ import pyarrow.compute as pc
 
 from . import alp, encode_array, foref, rle, vec
 
-_SAMPLE_VALUES = 4096       # max values sampled per chunk
-_ZLIB_TRIAL = 1 << 16       # bytes of blob used in the deflate trial
-_ZLIB_KEEP = 0.9            # keep +z layer only if it saves >10%
+_SAMPLE_VALUES = 4096       # values in the statistics sample
+_TRIAL_VALUES = 512         # values in a small chunk's trial sample
+_TRIAL_BYTES = 1 << 18      # byte budget of a small chunk's trial sample
+_TIE_TOLERANCE = 1.12  # prefer a faster codec within 12% of the best size
+_Z_TRIAL_BYTES = 1 << 16    # bytes of the body used in the transport trial
+_Z_KEEP = 0.9               # keep the +z layer only if it saves >10%
+
+# Large-blob trial (r8), measured on the corpus content column: the
+# transport zstd exploits long-range redundancy that only exists in
+# samples larger than its match window, and FSST's parity-greedy parsing
+# encodes identical substrings differently at different byte parities —
+# so on a small sample `fsst+z` looks ~5-10% smaller, while on the real
+# multi-MB chunk `plain+z` is 20-24% SMALLER (p/f 0.76 at 512KB..4MB) and
+# ~10× faster to encode.
+_LARGE_BLOB_BYTES = 1 << 19      # 512 KiB — the measured crossover
+_TRIAL_BYTES_LARGE = 1 << 20     # 1 MiB trial prefix
 
 
 @dataclass
 class ColumnStats:
-    """Sampled statistics driving the codec choice (also exported to the
-    lineage/metrics table so choices are auditable)."""
+    """Statistics of one chunk's stride sample that drive the codec choice
+    (``n`` is the whole chunk's length)."""
     n: int
     kind: str
     ndv_ratio: float = 1.0
@@ -54,12 +76,29 @@ class ColumnStats:
     value_range: int = 0
 
 
-def _sample(arr: pa.Array) -> pa.Array:
+def _stride(arr: pa.Array, k: int) -> pa.Array:
+    """Deterministic stride sample of at most ``k`` values."""
     n = len(arr)
-    if n <= _SAMPLE_VALUES:
+    if n <= k:
         return arr
-    step = n // _SAMPLE_VALUES
-    return arr.take(pa.array(np.arange(0, n, step, dtype=np.int64)[:_SAMPLE_VALUES]))
+    step = n // k
+    return arr.take(pa.array(np.arange(0, n, step, dtype=np.int64)[:k]))
+
+
+def _prefix(arr: pa.Array, budget: int) -> pa.Array:
+    """Leading slice of a string-like array holding about ``budget`` bytes
+    (at least 16 values; nulls count 0). The cut comes from the lengths
+    alone: ``string_parts`` would copy the whole blob just to find it."""
+    lengths = pc.binary_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
+    keep = int(np.searchsorted(np.cumsum(lengths), budget)) + 1
+    return arr.slice(0, max(16, keep))
+
+
+def _delta_range(v: np.ndarray) -> int:
+    """Range of the wrapping int64 neighbor deltas the delta codec packs."""
+    u = v.view(np.uint64)
+    d = (u[1:] - u[:-1]).view(np.int64)
+    return int(d.max()) - int(d.min())
 
 
 def analyze(arr: pa.Array) -> ColumnStats:
@@ -68,56 +107,22 @@ def analyze(arr: pa.Array) -> ColumnStats:
     st = ColumnStats(n=n, kind=kind)
     if n == 0:
         return st
-    s = _sample(arr)
+    s = _stride(arr, _SAMPLE_VALUES)
     sn = len(s)
     if kind in (vec.KIND_INT, vec.KIND_BOOL):
         vals = vec.ints_to_numpy(s)
         st.ndv_ratio = len(np.unique(vals)) / sn
         st.run_ratio = rle.count_runs(vals) / sn
-        st.value_range = int(vals.max() - vals.min()) if sn else 0
+        st.value_range = int(vals.max() - vals.min())
     elif kind == vec.KIND_STRING:
         filled = s.fill_null("") if s.null_count else s
-        lengths, _blob = vec.string_parts(filled)
-        st.avg_len = float(lengths.mean()) if sn else 0.0
-        st.ndv_ratio = len(pc.unique(filled)) / sn
-        codes = pc.dictionary_encode(filled).indices.to_numpy(zero_copy_only=False)
+        st.avg_len = float(pc.binary_length(filled).to_numpy(zero_copy_only=False).mean())
+        # one hash pass: the dictionary gives the ndv, its indices the runs
+        d = pc.dictionary_encode(filled)
+        st.ndv_ratio = len(d.dictionary) / sn
+        codes = d.indices.to_numpy(zero_copy_only=False)
         st.run_ratio = rle.count_runs(codes.astype(np.int64)) / sn
-        # NOTE: earlier versions also ran a 64 KB fsst-train + deflate
-        # trial here to export fsst/zlib ratios — nothing ever consumed
-        # them and choose() measures real candidate sizes anyway, so the
-        # trial was pure per-chunk overhead (~25% of selection time in the
-        # cProfile of the encode kernel). Removed; selection is unchanged.
-    else:  # floats
-        st.ndv_ratio = 1.0
     return st
-
-
-_TRIAL_VALUES = 512
-_TRIAL_BYTES = 1 << 18
-_TIE_TOLERANCE = 1.12  # prefer a faster codec within 12% of the best size
-
-# Large-blob trial (r8): blobs at or above this size get their candidates
-# measured on a CONTIGUOUS prefix of up to _TRIAL_BYTES_LARGE instead of
-# the 512-value/256KB stride sample. Rationale, measured on the corpus
-# content column: the transport zstd exploits long-range redundancy that
-# only exists in samples larger than its match window, and FSST's
-# parity-greedy parsing encodes identical substrings differently at
-# different byte parities — so on a small sample `fsst+z` looks ~5-10%
-# smaller, while on the real multi-MB chunk `plain+z` is 20-24% SMALLER
-# (p/f 0.76 at 512KB..4MB) and ~10× faster to encode. The small-blob path
-# is byte-for-byte unchanged (the pinned engine-metrics oracle rides a
-# 151KB chunk).
-_LARGE_BLOB_BYTES = 1 << 19      # 512 KiB — the measured crossover
-_TRIAL_BYTES_LARGE = 1 << 20     # 1 MiB trial prefix
-
-
-def _trial_sample(arr: pa.Array) -> pa.Array:
-    """Small deterministic stride sample for trial encodes (≤512 values)."""
-    n = len(arr)
-    if n <= _TRIAL_VALUES:
-        return arr
-    step = n // _TRIAL_VALUES
-    return arr.take(pa.array(np.arange(0, n, step, dtype=np.int64)[:_TRIAL_VALUES]))
 
 
 def _string_candidates(st: ColumnStats) -> list[str]:
@@ -137,22 +142,20 @@ def _string_candidates(st: ColumnStats) -> list[str]:
     return cands
 
 
-def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
+def choose(arr: pa.Array) -> str:
     """Pick a codec spec (see codecs.__init__ mini-language) for one chunk.
 
     Integers use an analytic cost model (exact sizes are computable from
-    range / run stats). Strings use trial encodes of a small sample — the
+    range / run stats). Strings use trial encodes of a sample — the
     measured sizes beat any analytic model for symbol-table / deflate
     interactions — with a speed-ordered tie-break.
     """
     if vec.kind_of(arr.type) == vec.KIND_LIST:
         return "list"  # element values get their own recursive selection
-    st = stats or analyze(arr)
-    if st.n == 0:
+    st = analyze(arr)
+    if st.n == 0 or st.kind == vec.KIND_BOOL:
         return "plain"
-    if st.kind in (vec.KIND_INT, vec.KIND_BOOL):
-        if st.kind == vec.KIND_BOOL:
-            return "plain"
+    if st.kind == vec.KIND_INT:
         n = st.n
         plain_sz = 8 * n
         for_sz = foref.encoded_size(n, st.value_range)
@@ -163,18 +166,11 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
         # over a CONTIGUOUS prefix (true neighbor deltas — a stride sample
         # alone inflates them by the stride factor) AND the stride sample
         # (prefix alone misses jumps later in the chunk, e.g. run edges)
-        delta_range = 0
-        seen = False
-        pieces = [vec.ints_to_numpy(arr.slice(0, min(st.n, 4096)))]
-        if st.n > 4096:  # prefix IS the whole array otherwise
-            pieces.append(vec.ints_to_numpy(_sample(arr)))
-        for piece in pieces:
-            if len(piece) > 1:
-                u = piece.view(np.uint64)
-                d = (u[1:] - u[:-1]).view(np.int64)
-                delta_range = max(delta_range, int(d.max()) - int(d.min()))
-                seen = True
-        delta_sz = 8 + foref.encoded_size(n - 1, delta_range) if seen else plain_sz + 1
+        pieces = [vec.ints_to_numpy(arr.slice(0, min(n, _SAMPLE_VALUES)))]
+        if n > _SAMPLE_VALUES:  # prefix IS the whole array otherwise
+            pieces.append(vec.ints_to_numpy(_stride(arr, _SAMPLE_VALUES)))
+        ranges = [_delta_range(p) for p in pieces if len(p) > 1]
+        delta_sz = 8 + foref.encoded_size(n - 1, max(ranges)) if ranges else plain_sz + 1
         best = min(
             (for_sz, "for"), (rle_sz, "rle"), (delta_sz, "delta"),
             (plain_sz, "plain"),
@@ -185,7 +181,7 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
         # rounded scores) scale to integers and take the FOR path; the
         # encoder stores non-round-tripping values as exceptions, so a
         # high sample ratio is a size heuristic, never a correctness bet
-        sample = _trial_sample(arr)
+        sample = _stride(arr, _TRIAL_VALUES)
         a = sample.fill_null(0.0) if sample.null_count else sample
         vals = np.ascontiguousarray(
             a.to_numpy(zero_copy_only=False),
@@ -199,30 +195,13 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
         # int64-fitting decimals (reference CDC decimal(30,0) SOURCE_SCN
         # sequences) ride the int codec suite via decint; sub-codec chosen
         # with the same analytic model on the int64 view of a prefix
-        import decimal as _d
-
-        sample = arr.slice(0, min(st.n, 4096))
-        filled = sample.fill_null(_d.Decimal(0)) if sample.null_count else sample
-        raw = np.frombuffer(
-            np.frombuffer(filled.buffers()[1], dtype=np.uint8)[
-                filled.offset * 16 : (filled.offset + len(filled)) * 16
-            ].tobytes(),
-            dtype=np.uint64,
-        )
-        if len(raw):
-            lo, hi = raw[0::2], raw[1::2].view(np.int64)
-            if (hi == -(lo >> np.uint64(63)).astype(np.int64)).all():
-                v = lo.view(np.int64)
-                vr = int(v.max()) - int(v.min())
-                for_sz = foref.encoded_size(st.n, vr)
-                if len(v) > 1:
-                    d = (lo[1:] - lo[:-1]).view(np.int64)
-                    dr = int(d.max()) - int(d.min())
-                    delta_sz = 8 + foref.encoded_size(st.n - 1, dr)
-                else:
-                    delta_sz = for_sz + 1
-                if min(for_sz, delta_sz) < 16 * st.n:
-                    return "decint:delta" if delta_sz < for_sz else "decint:for"
+        v = vec.decimals_as_int64(arr.slice(0, min(st.n, _SAMPLE_VALUES)))
+        if v is not None:
+            for_sz = foref.encoded_size(st.n, int(v.max()) - int(v.min()))
+            delta_sz = (8 + foref.encoded_size(st.n - 1, _delta_range(v))
+                        if len(v) > 1 else for_sz + 1)
+            if min(for_sz, delta_sz) < 16 * st.n:
+                return "decint:delta" if delta_sz < for_sz else "decint:for"
         # deflate trial decided at encode time via the +z fallback below
         return "plain+z"
     # very low cardinality: dict/RLE by construction (north_star: RLE/dict
@@ -230,50 +209,30 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
     # the trial encodes saves real per-chunk time.
     if st.ndv_ratio < 0.05 and st.avg_len > 0:
         return "rledict:plain+z" if st.run_ratio < 0.5 else "dict:plain+z"
-    # large blobs: measure every candidate on the same contiguous prefix
-    # (big enough for the transport's real match window) and compare the
-    # measured sizes directly — fixed payloads (symbol table, dict) are
-    # negligible at this sample size, so no extrapolation is needed.
-    # Representativeness trade-off: a contiguous prefix keeps the long
-    # cross-row matches the transport's window sees, which the stride
-    # sample (scattered rows) cannot; but on a chunk whose content shifts
-    # along its length (sorted or clustered data) the prefix can
-    # misrepresent the rest and pick a larger codec. That costs size only,
-    # never correctness: every spec decodes exactly.
-    approx_bytes = st.avg_len * st.n
-    if approx_bytes >= _LARGE_BLOB_BYTES:
-        filled_all = arr.fill_null("") if arr.null_count else arr
-        # lengths only — string_parts would copy the full blob just to
-        # find the prefix cut (same trap raw_size once had)
-        all_lengths = pc.binary_length(filled_all).to_numpy(zero_copy_only=False)
-        keep = int(np.searchsorted(np.cumsum(all_lengths), _TRIAL_BYTES_LARGE)) + 1
-        big_sample = filled_all.slice(0, max(16, keep))
-        sizes_l: list[tuple[float, str]] = []
-        trial_ctx_l: dict = {}
-        for spec in _string_candidates(st):
-            try:
-                sizes_l.append(
-                    (float(len(encode_array(big_sample, spec, trial_ctx_l, spec))), spec)
-                )
-            except Exception:
-                continue
-        if sizes_l:
-            best_l = min(s for s, _ in sizes_l)
-            for sz, spec in sizes_l:  # first (fastest) within tolerance
-                if sz <= best_l * _TIE_TOLERANCE:
-                    return spec
-            return min(sizes_l)[1]
-        return "plain"
-    # strings: trial-encode a sample under each candidate
-    sample = _trial_sample(arr)
-    lengths, blob = vec.string_parts(sample.fill_null("") if sample.null_count else sample)
-    if len(blob) > _TRIAL_BYTES:
-        # clip to the byte budget by taking a prefix of the sample
-        keep = int(np.searchsorted(np.cumsum(lengths), _TRIAL_BYTES)) + 1
-        sample = sample.slice(0, max(16, keep))
+    # One trial loop over two sample shapes, picked by the chunk's size at
+    # the measured 512 KiB crossover:
+    # - large blobs: a contiguous prefix big enough for the transport's
+    #   real match window. Fixed payloads (symbol table, dict) are
+    #   negligible at this size, so the measured sizes compare directly.
+    #   A prefix keeps the long cross-row matches that scattered rows
+    #   lose, but on a chunk whose content shifts along its length
+    #   (sorted or clustered data) it can misrepresent the rest and pick a
+    #   larger codec: a size cost only, since every spec decodes exactly.
+    # - small chunks: a byte-capped stride sample, extrapolated to the
+    #   whole chunk by a two-point fit unless it IS the whole chunk.
+    # The small sample keeps its nulls, so its trial frames carry the
+    # validity bitmap the real frame will; the large prefix is null-filled.
+    # Changing either changes choices on random nullable chunks (filling
+    # the small sample: 11 of 440; keeping the prefix's nulls: 1 of 64).
+    large = st.avg_len * st.n >= _LARGE_BLOB_BYTES
+    if large:
+        sample = _prefix(arr, _TRIAL_BYTES_LARGE)
+        sample = sample.fill_null("") if sample.null_count else sample
+    else:
+        sample = _prefix(_stride(arr, _TRIAL_VALUES), _TRIAL_BYTES)
     sn = len(sample)
     half = max(1, sn // 2)
-    exact = sn == st.n  # sample IS the chunk → measured sizes are exact
+    extrapolate = not large and sn != st.n
     sizes: list[tuple[float, str]] = []
     # per-call trial cache: the half-sample point of a symbol-table
     # candidate reuses the table trained on the full sample (its blob is a
@@ -285,24 +244,20 @@ def choose(arr: pa.Array, stats: ColumnStats | None = None) -> str:
     trial_ctx: dict = {}
     for spec in _string_candidates(st):
         try:
-            s1 = len(encode_array(sample, spec, trial_ctx, spec))
-            if exact:
-                sizes.append((float(s1), spec))
-                continue
-            # two-point fit: separates fixed payload (dict/symtab/header)
-            # from per-value cost, so extrapolation to the full chunk is fair
-            s2 = len(encode_array(sample.slice(0, half), spec, trial_ctx, spec))
-            slope = max(0.0, (s1 - s2) / max(1, sn - half))
-            sizes.append((s1 + slope * (st.n - sn), spec))
+            size = float(len(encode_array(sample, spec, trial_ctx, spec)))
+            if extrapolate:
+                # two-point fit: separates fixed payload (dict/symtab/
+                # header) from per-value cost, so extrapolation is fair
+                s2 = len(encode_array(sample.slice(0, half), spec, trial_ctx, spec))
+                size += max(0.0, (size - s2) / max(1, sn - half)) * (st.n - sn)
         except Exception:
             continue
+        sizes.append((size, spec))
     if not sizes:
         return "plain"
-    best_sz = min(s for s, _ in sizes)
-    for sz, spec in sizes:  # first (fastest) within tolerance of best
-        if sz <= best_sz * _TIE_TOLERANCE:
-            return spec
-    return min(sizes)[1]
+    best = min(s for s, _ in sizes)
+    # first (fastest) candidate within tolerance of the best
+    return next(spec for s, spec in sizes if s <= best * _TIE_TOLERANCE)
 
 
 def encode_best(
@@ -341,10 +296,10 @@ def encode_best(
     frame = encode_array(arr, chosen, ctx, ctx_key)
     if not chosen.endswith("+z") and len(frame) > 4096:
         # cheap sliced trial first; full +z wrap only if promising
-        trial = frame[: _ZLIB_TRIAL]
-        if len(_transport_compress(trial)) < _ZLIB_KEEP * len(trial):
+        trial = frame[:_Z_TRIAL_BYTES]
+        if len(_transport_compress(trial)) < _Z_KEEP * len(trial):
             z = wrap_transport(frame)
-            if len(z) < _ZLIB_KEEP * len(frame):
+            if len(z) < _Z_KEEP * len(frame):
                 chosen, frame = chosen + "+z", z
     if not chosen.startswith("plain") and len(frame) > raw_size(arr):
         plain = encode_array(arr, "plain")

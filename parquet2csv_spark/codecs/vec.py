@@ -38,14 +38,16 @@ def kind_of(typ: pa.DataType) -> str:
         return KIND_FLOAT
     if pa.types.is_decimal(typ):
         return KIND_DECIMAL
-    if (
-        pa.types.is_string(typ)
-        or pa.types.is_large_string(typ)
-        or pa.types.is_binary(typ)
-        or pa.types.is_large_binary(typ)
-    ):
+    if is_bytes_type(typ):
         return KIND_STRING
     raise NotImplementedError(f"unsupported column type for encoding: {typ}")
+
+
+def is_bytes_type(typ: pa.DataType) -> bool:
+    """string/large_string/binary/large_binary: one variable-width value of
+    bytes per row."""
+    return (pa.types.is_string(typ) or pa.types.is_large_string(typ)
+            or pa.types.is_binary(typ) or pa.types.is_large_binary(typ))
 
 
 # ------------------------------------------------------------ validity masks
@@ -174,6 +176,17 @@ def decimals_to_bytes(arr: pa.Array) -> bytes:
     buf = a.buffers()[1]
     data = np.frombuffer(buf, dtype=np.uint8)
     return data[a.offset * 16 : (a.offset + len(a)) * 16].tobytes()
+
+
+def decimals_as_int64(arr: pa.Array) -> np.ndarray | None:
+    """decimal128 -> int64 view of the unscaled values (nulls become 0), or
+    None when any value does not fit int64 (its high word is not the sign
+    extension of its low word)."""
+    raw = np.frombuffer(decimals_to_bytes(arr), dtype=np.uint64)
+    lo, hi = raw[0::2], raw[1::2].view(np.int64)
+    if not (hi == -(lo >> np.uint64(63)).astype(np.int64)).all():
+        return None
+    return lo.view(np.int64)
 
 
 def decimals_from_bytes(body: bytes, typ: pa.DataType, n: int, valid: np.ndarray | None) -> pa.Array:

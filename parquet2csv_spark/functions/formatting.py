@@ -206,6 +206,7 @@ def parquet_to_csv(spark, in_path: str, out_dir: str, single_file: bool = False)
     fmt.write.mode("overwrite").option("header", True).option("quote", "").csv(out_dir)
     if df.isEmpty():
         # Hadoop FS API (not shutil) so the delete works on any cluster FS
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        from ..plans.lineage import hadoop_fs
+
+        fs, hpath = hadoop_fs(spark, out_dir)
+        fs.delete(hpath, True)

@@ -81,16 +81,15 @@ DEFAULT_CHUNK_BYTES = 8 << 20
 # --------------------------------------------------------------- chunk core
 
 def _row_bytes(tbl: pa.Table) -> np.ndarray:
-    """Approximate logical bytes per row (drives size-capped splitting)."""
-    total = np.zeros(tbl.num_rows, dtype=np.int64)
-    for name in tbl.column_names:
-        col = tbl[name].combine_chunks()
-        typ = col.type
-        if pa.types.is_string(typ) or pa.types.is_large_string(typ) or pa.types.is_binary(typ) or pa.types.is_large_binary(typ):
-            import pyarrow.compute as pc
+    """Approximate logical bytes per row (drives size-capped splitting):
+    the bytes of string and binary columns plus 8 B per other column, the
+    rule :func:`_size_expr` applies before the shuffle."""
+    import pyarrow.compute as pc
 
-            filled = col.fill_null("") if col.null_count else col
-            total += pc.binary_length(filled.cast(pa.large_binary())).to_numpy(zero_copy_only=False).astype(np.int64)
+    total = np.zeros(tbl.num_rows, dtype=np.int64)
+    for col in tbl.columns:
+        if vec.is_bytes_type(col.type):
+            total += pc.binary_length(col).fill_null(0).to_numpy(zero_copy_only=False)
         else:
             total += 8
     return total
@@ -260,11 +259,12 @@ def encode_table(
 # ------------------------------------------------------------- grouped path
 
 def _size_expr(df: DataFrame):
-    """Logical row-size column: utf8 bytes of string cols + 8B per other."""
+    """Logical row-size column, the rule of :func:`_row_bytes`: the bytes
+    of string and binary columns plus 8 B per other column."""
     parts = []
     n_fixed = 0
     for f in df.schema.fields:
-        if f.dataType.typeName() == "string":
+        if f.dataType.typeName() in ("string", "binary"):
             parts.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
         else:
             n_fixed += 8

@@ -70,6 +70,7 @@ from ..operators.encode import (
     encode_salted,
     salt_groups,
 )
+from ..session import jvm_class
 
 
 # the schema of the ``lineage()`` view: one row per committed (run, group)
@@ -89,20 +90,20 @@ _MARKER_FIELDS = ("snapshot_id", "job_id", "run_id", "params", "committed_at", *
 
 # ----------------------------------------------------- Hadoop FileSystem io
 
-def _fs(spark: SparkSession, path: str):
+def hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path``: plain paths and URIs alike."""
-    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(path)
     return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     return fs.exists(hpath)
 
 
 def write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write ``text`` (UTF-8) to ``path``, replacing any file there."""
-    fs, hpath = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     out = fs.create(hpath, True)
     try:
         out.write(bytearray(text.encode()))
@@ -111,12 +112,10 @@ def write_text(spark: SparkSession, path: str, text: str) -> None:
 
 
 def read_text(spark: SparkSession, path: str) -> str:
-    fs, hpath = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     stream = fs.open(hpath)
     try:
-        return spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
+        return jvm_class(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -158,9 +157,9 @@ def read_markers(spark: SparkSession, out_dir: str) -> list[dict]:
     """Every commit marker under ``out_dir``, read on the driver (module
     docstring: fail-loud rule, pre-marker refusal)."""
     out_dir = out_dir.rstrip("/")
-    fs, commits = _fs(spark, f"{out_dir}/commits")
+    fs, commits = hadoop_fs(spark, f"{out_dir}/commits")
     paths = _entries(fs, commits)
-    if not paths and _entries(fs, _fs(spark, f"{out_dir}/lineage")[1]):
+    if not paths and _entries(fs, hadoop_fs(spark, f"{out_dir}/lineage")[1]):
         raise RuntimeError(
             f"{out_dir} holds a lineage/ table and no commits/ markers: it was "
             f"written by an encode that predates commit markers. Encode into a "
@@ -172,21 +171,22 @@ def read_markers(spark: SparkSession, out_dir: str) -> list[dict]:
 def generations(spark: SparkSession, out_dir: str) -> list[Row]:
     """One row per (snapshot_id, job_id, status, params) generation in
     ``out_dir``, with its latest ``committed_at``, its committed ``runs``
-    and the sums of their ``groups``/``rows``/``raw_bytes``/``enc_bytes``.
-    Read from the markers: no Spark job, O(runs) driver work."""
+    (sorted run ids, which ``EncodeJob.chunks`` takes) and the sums of their
+    ``groups``/``rows``/``raw_bytes``/``enc_bytes``. Read from the markers:
+    no Spark job, O(runs) driver work."""
     gens: dict[tuple, dict] = {}
     for m in read_markers(spark, out_dir):
         g = gens.setdefault((m["snapshot_id"], m["job_id"], m["params"]), {
             "snapshot_id": m["snapshot_id"], "job_id": m["job_id"],
             "status": "done", "params": m["params"],
-            "committed_at": m["committed_at"], "runs": 0,
+            "committed_at": m["committed_at"], "runs": [],
             **dict.fromkeys(_TOTALS, 0),
         })
         g["committed_at"] = max(g["committed_at"], m["committed_at"])
-        g["runs"] += 1
+        g["runs"].append(m["run_id"])
         for k in _TOTALS:
             g[k] += m[k]
-    return [Row(**g) for g in gens.values()]
+    return [Row(**{**g, "runs": sorted(g["runs"])}) for g in gens.values()]
 
 
 def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
@@ -281,8 +281,8 @@ class EncodeJob:
         final = f"{self.out_dir}/commits/{marker['run_id']}.json"
         tmp = f"{self.out_dir}/commits/_{marker['run_id']}.json"
         write_text(self.spark, tmp, json.dumps(marker, sort_keys=True))
-        fs, src = _fs(self.spark, tmp)
-        if not fs.rename(src, _fs(self.spark, final)[1]):
+        fs, src = hadoop_fs(self.spark, tmp)
+        if not fs.rename(src, hadoop_fs(self.spark, final)[1]):
             raise OSError(f"could not commit {final}: rename from {tmp} failed")
 
     def lineage(self) -> DataFrame:
@@ -430,7 +430,7 @@ class EncodeJob:
         else:
             # nothing to commit (every group already done): the write
             # still left a dir holding an empty parquet file
-            fs, hpath = _fs(self.spark, run_dir)
+            fs, hpath = hadoop_fs(self.spark, run_dir)
             fs.delete(hpath, True)
         total = {k: this_run[k] + sum(m[k] for m in self._own(markers)) for k in _TOTALS}
         return {

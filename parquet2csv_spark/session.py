@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
 
@@ -27,6 +28,12 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
     if phys_bytes is None:
         phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(1, min(48, phys_bytes // 2 // _GIB))}g"
+
+
+def jvm_class(spark: SparkSession, fqn: str) -> JavaClass:
+    """A handle on the JVM class ``fqn``, built locally: resolving it as
+    ``spark._jvm.a.b.C`` costs one py4j round trip per name segment."""
+    return JavaClass(fqn, spark._jvm._gateway_client)  # type: ignore[attr-defined]
 
 
 def get_spark(cpus: int | None = None, app: str = "parquet2csv_spark") -> SparkSession:

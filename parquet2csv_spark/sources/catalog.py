@@ -17,7 +17,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .schema_io import parquet_schema, read_parquet
+from ..session import jvm_class
+from .schema_io import parquet_schema
 
 # Manifest-digest format version, embedded in every snapshot id. Changing
 # what feeds the digest (e.g. the r3 move from whole-second to nanosecond
@@ -39,7 +40,7 @@ class Snapshot:
     # manifest: relpath -> (size, mtime_ns). Reading a snapshot reads EXACTLY
     # these files (Iceberg snapshot-isolation semantics over an append-only
     # directory), so an OLD snapshot stays readable after new files land.
-    files: dict[str, tuple[int, int]] | None = None
+    files: dict[str, tuple[int, int]]
 
 
 def _manifest(path: str) -> tuple[str, int, int, dict[str, tuple[int, int]]]:
@@ -84,28 +85,19 @@ class ParquetDirCatalog:
         digest, n, total, files = _manifest(table_path)
         return Snapshot(table_path, digest, n, total, files)
 
-    def read(self, snap: Snapshot, verify: bool = True) -> DataFrame:
-        if snap.files is None:  # legacy snapshot without a manifest
-            digest, _, _, _ = _manifest(snap.table_path)
-            if verify and digest != snap.snapshot_id:
+    def read(self, snap: Snapshot) -> DataFrame:
+        for rel, (size, mtime) in snap.files.items():
+            fp = snap.table_path if rel == "." else os.path.join(snap.table_path, rel)
+            try:
+                st = os.stat(fp)
+            except FileNotFoundError:
                 raise RuntimeError(
-                    f"snapshot {snap.snapshot_id} no longer matches {snap.table_path} "
-                    f"(now {digest}) — input mutated since the job was planned"
+                    f"snapshot {snap.snapshot_id}: pinned file {rel} was deleted"
+                ) from None
+            if st.st_size != size or st.st_mtime_ns != mtime:
+                raise RuntimeError(
+                    f"snapshot {snap.snapshot_id}: pinned file {rel} was mutated"
                 )
-            return read_parquet(self.spark, snap.table_path)
-        if verify:
-            for rel, (size, mtime) in snap.files.items():
-                fp = snap.table_path if rel == "." else os.path.join(snap.table_path, rel)
-                try:
-                    st = os.stat(fp)
-                except FileNotFoundError:
-                    raise RuntimeError(
-                        f"snapshot {snap.snapshot_id}: pinned file {rel} was deleted"
-                    ) from None
-                if st.st_size != size or st.st_mtime_ns != mtime:
-                    raise RuntimeError(
-                        f"snapshot {snap.snapshot_id}: pinned file {rel} was mutated"
-                    )
         data = [
             snap.table_path if rel == "." else os.path.join(snap.table_path, rel)
             for rel in snap.files
@@ -131,7 +123,7 @@ def _iceberg_on_classpath(spark: SparkSession) -> bool:
     returns a boolean: a raised ``Class.forName`` error costs a Java
     exception's conversion (0.12 s in a cold CLI-encode profile), and
     attribute access on ``_jvm`` returns a JavaPackage stub either way."""
-    return spark._jvm.org.apache.spark.util.Utils.classIsLoadable(  # type: ignore[attr-defined]
+    return jvm_class(spark, "org.apache.spark.util.Utils").classIsLoadable(
         "org.apache.iceberg.Table"
     )
 

@@ -20,8 +20,9 @@ import datetime
 import decimal
 import json
 
-from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, types as T
+
+from ..session import jvm_class
 
 # the JVM classes a footer read uses, by short name
 _FOOTER_CLASSES = (
@@ -36,11 +37,9 @@ _FOOTER_CLASSES = (
 
 
 def _class_handles(spark: SparkSession) -> dict:
-    """Handles on ``_FOOTER_CLASSES``, built locally: ``spark._jvm.a.b.C``
-    costs one py4j round trip per name segment, which is most of a footer
-    read's driver time."""
-    client = spark._jvm._gateway_client  # type: ignore[attr-defined]
-    return {fqn.rsplit(".", 1)[-1]: JavaClass(fqn, client) for fqn in _FOOTER_CLASSES}
+    """Handles on ``_FOOTER_CLASSES`` by short name (``jvm_class``: a
+    ``spark._jvm`` chain was most of a footer read's driver time)."""
+    return {fqn.rsplit(".", 1)[-1]: jvm_class(spark, fqn) for fqn in _FOOTER_CLASSES}
 
 
 def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:

@@ -203,6 +203,119 @@ def test_encode_best_never_pathological():
     assert decode_array(frame).cast(pa.string()).equals(arr)
 
 
+def test_selector_large_blob_prefers_measured_plain_z():
+    """r8 selector fix: on multi-MB text chunks the zstd transport's
+    long-range matching beats FSST preconditioning (measured p/f 0.76 at
+    512KB..4MB on the corpus), which the old 256KB stride trial could not
+    see. Pin: a large redundant blob chooses plain+z AND the chosen frame
+    is no larger than the fsst+z frame."""
+    rng = np.random.default_rng(7)
+    # source-code-like text: heavy cross-row redundancy, ~2KB per row
+    base = [
+        "def f_%d(x):\n    return x + %d  # common license header line\n"
+        % (i % 37, i % 11)
+        for i in range(64)
+    ]
+    rows = ["".join(base[rng.integers(0, 64)] for _ in range(32)) for _ in range(2048)]
+    arr = pa.array(rows, type=pa.large_string())
+    choice = selector.choose(arr)
+    assert choice == "plain+z", choice
+    # the choice is measured on a 1MB prefix with a 12% speed-preference
+    # tolerance — the full-array sizes must stay within that band
+    chosen = len(encode_array(arr, choice))
+    fsst_sz = len(encode_array(arr, "fsst+z"))
+    assert chosen <= fsst_sz * (selector._TIE_TOLERANCE + 0.05)
+
+
+def _nullable(vals, every):
+    return [None if i % every == 0 else v for i, v in enumerate(vals)]
+
+
+_WORDS = [f"tok{i:03d}_{'ab' * (i % 7)}" for i in range(300)]
+_CHOOSE_CASES = {
+    # 3000 values > the 512-value sample: two trial encodes per candidate,
+    # extrapolated to the chunk by the two-point fit
+    "small_nullable_extrapolated": (
+        lambda: pa.array(_nullable([_WORDS[(i * 7919) % 300] for i in range(3000)], 3)),
+        "dict:plain+z", 10,
+    ),
+    # ~1.4 MB of text with nulls: one trial encode per candidate on the
+    # null-filled 1 MiB prefix
+    "large_nullable_blob": (
+        lambda: pa.array(_nullable(
+            [" ".join(_WORDS[(i * j) % 300] for j in range(90)) for i in range(2000)], 5)),
+        "dict:fsst+z", 5,
+    ),
+    # 300 values: the sample is the whole chunk, its sizes are exact
+    "small_exact": (
+        lambda: pa.array([f"{_WORDS[i % 300]}/{i}" for i in range(300)]),
+        "plain+z", 3,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CHOOSE_CASES))
+def test_choose_string_sample_paths(case, monkeypatch):
+    """Each string sample shape takes its own number of trial encodes per
+    candidate and keeps its choice."""
+    build, want, want_trials = _CHOOSE_CASES[case]
+    trials = []
+    real = selector.encode_array
+    monkeypatch.setattr(selector, "encode_array", lambda *a: trials.append(a) or real(*a))
+    assert (selector.choose(build()), len(trials)) == (want, want_trials)
+
+
+# sha256 over every (name, codec, frame) of the parity corpus below; a
+# change to it is a change to the frames the engine writes
+_PARITY_SHA256 = "f39f6938cc781c46713797c857281597eee5ec2dfd05303f7318e43e38509aea"
+
+
+def _parity_chunks():
+    """A seeded 5k-row corpus plus a nullable string and two decimal
+    columns, grouped by repo, encoded as two tasks with one codec ctx each
+    (the encode_salted layout). 1 MiB chunks put the giant repo's content
+    on the large-blob side of the crossover and the rest below it."""
+    import decimal
+
+    import pyarrow.compute as pc
+
+    from parquet2csv_spark.operators.encode import encode_chunk, split_points
+    from parquet2csv_spark.sources.corpus import CorpusSpec, corpus_batch
+
+    n = 5000
+    tbl = corpus_batch(np.arange(n), CorpusSpec(5, n))
+    tbl = tbl.append_column("note", pa.array(_nullable(tbl["path"].to_pylist(), 4)))
+    tbl = tbl.append_column("scn", pa.array(
+        [decimal.Decimal(10**15 + 7 * i) for i in range(n)], pa.decimal128(30, 0)))
+    tbl = tbl.append_column("big", pa.array(
+        [decimal.Decimal(10**25 + i * i) for i in range(n)], pa.decimal128(38, 0)))
+    tbl = tbl.take(pc.sort_indices(tbl, [("repo", "ascending"), ("path", "ascending")]))
+    repos = pc.unique(tbl["repo"]).to_pylist()
+    for task in range(2):
+        ctx: dict = {}
+        for repo in repos[task::2]:
+            group = tbl.filter(pc.equal(tbl["repo"], repo))
+            for seq, (off, ln) in enumerate(split_points(group, 65536, 1 << 20)):
+                yield encode_chunk(group.slice(off, ln), "", repo, seq, None, ctx)
+
+
+def test_encode_chunk_frames_pinned():
+    """Frames are a pure function of each task's chunk sequence: pin them."""
+    import hashlib
+
+    h = hashlib.sha256()
+    decimal_codecs = set()
+    for row in _parity_chunks():
+        for c in row["cols"]:
+            h.update(f"{c['name']}\0{c['codec']}\0".encode())
+            h.update(c["frame"])
+            if c["name"] in ("scn", "big"):
+                decimal_codecs.add((c["name"], c["codec"].startswith("decint")))
+    # the int64-fitting column rides decint, the other cannot
+    assert decimal_codecs == {("scn", True), ("big", False)}
+    assert h.hexdigest() == _PARITY_SHA256
+
+
 # ----------------------------------------------------------------- lists
 
 LIST_CASES = [

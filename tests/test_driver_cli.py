@@ -15,7 +15,7 @@ import driver  # noqa: E402
 from parquet2csv_spark.operators import multiset_diff  # noqa: E402
 
 
-def test_cli_encode_decode_verify_roundtrip(spark, tmp_path, capsys):
+def test_cli_encode_decode_verify_roundtrip(spark, tmp_path, capsys, monkeypatch):
     src = str(tmp_path / "src")
     spark.createDataFrame(
         [(i, f"repo{i % 3}", f"path/{i}.py", f"c{i:06d}", f"text body {i}") for i in range(200)],
@@ -32,10 +32,18 @@ def test_cli_encode_decode_verify_roundtrip(spark, tmp_path, capsys):
     ver_line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert ver_line["bit_identical"] is True
 
-    # decode accepts the job out_dir (chunks/run=*/ + commits/ layout)
+    # decode accepts the job out_dir (chunks/run=*/ + commits/ layout) and
+    # reads its commit markers once: the generation pick hands its run ids
+    # to chunks()
+    from parquet2csv_spark.plans import lineage
+
+    reads = []
+    real_read = lineage.read_markers
+    monkeypatch.setattr(lineage, "read_markers", lambda *a: reads.append(a) or real_read(*a))
     dec = str(tmp_path / "dec")
     assert driver.main(stop_session=False, argv=["--cpus", "4", "decode", "--chunks", out,
                         "--schema-json", f"{out}/schema.json", "--out", dec]) in (0, None)
+    assert len(reads) == 1
     back = spark.read.parquet(dec)
     srcdf = spark.read.parquet(src)
     assert multiset_diff(srcdf, back).count() == 0

@@ -134,6 +134,20 @@ def test_salting_caps_group_bytes(spark, corpus):
     assert n_giant_groups > 2
 
 
+def test_salting_counts_binary_bytes(spark):
+    """Salting counts a binary column's bytes as split_points does: one
+    group of 4 MiB at a 256 KiB target gets >= 16 salted groups whether the
+    payload is binary or string (binary once counted 8 B a row, so the
+    whole group stayed one salted group and one task)."""
+    body = spark.range(256).select(
+        F.lit("g").alias("grp"), "id",
+        F.expr("cast(repeat('x', 16384) as binary)").alias("body"),
+    )
+    for df in (body, body.withColumn("body", F.col("body").cast("string"))):
+        salted = salt_groups(df, ["grp"], ["id"], chunk_bytes=256 << 10)
+        assert salted.select("_gk").distinct().count() >= 16, df.schema
+
+
 def test_verify_ignores_orphan_chunks(spark, corpus, tmp_path_factory):
     """ADVICE r1: a crashed run can leave orphan chunk files (written before
     the lineage commit). EncodeJob.chunks() must make them invisible so
@@ -419,7 +433,7 @@ def test_uncommitted_run_is_invisible_and_reencoded_exactly(spark, corpus, tmp_p
     assert visible == _groups_of_run(spark, out, first["run_id"])
     assert job.lineage().filter(F.col("run_id") == lost["run_id"]).count() == 0
     [gen] = generations(spark, out)
-    assert (gen["runs"], gen["rows"]) == (1, first["rows"])
+    assert (gen["runs"], gen["rows"]) == ([first["run_id"]], first["rows"])
 
     again = job.run(corpus)
     assert _groups_of_run(spark, out, again["run_id"]) == \

@@ -132,36 +132,6 @@ def test_cosine_topk_null_vector_rows_match_crossjoin(spark):
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
 
 
-def test_selector_large_blob_prefers_measured_plain_z():
-    """r8 selector fix: on multi-MB text chunks the zstd transport's
-    long-range matching beats FSST preconditioning (measured p/f 0.76 at
-    512KB..4MB on the corpus), which the old 256KB stride trial could not
-    see. Pin: a large redundant blob chooses plain+z AND the chosen frame
-    is no larger than the fsst+z frame; a small chunk keeps the exact
-    measured small-sample choice."""
-    import numpy as np
-    import pyarrow as pa
-
-    from parquet2csv_spark.codecs import encode_array, selector
-
-    rng = np.random.default_rng(7)
-    # source-code-like text: heavy cross-row redundancy, ~2KB per row
-    base = [
-        "def f_%d(x):\n    return x + %d  # common license header line\n"
-        % (i % 37, i % 11)
-        for i in range(64)
-    ]
-    rows = ["".join(base[rng.integers(0, 64)] for _ in range(32)) for _ in range(2048)]
-    arr = pa.array(rows, type=pa.large_string())
-    choice = selector.choose(arr)
-    assert choice == "plain+z", choice
-    # the choice is measured on a 1MB prefix with a 12% speed-preference
-    # tolerance — the full-array sizes must stay within that band
-    chosen = len(encode_array(arr, choice))
-    fsst_sz = len(encode_array(arr, "fsst+z"))
-    assert chosen <= fsst_sz * (selector._TIE_TOLERANCE + 0.05)
-
-
 def test_cosine_topk_mixed_dims_match_crossjoin(spark):
     """A pair whose dims differ gets a NULL cos in the expression form
     (zip_with pads the shorter side with nulls); the vectorized fast path
