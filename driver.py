@@ -57,8 +57,9 @@ def build_parser() -> argparse.ArgumentParser:
     dec.add_argument(
         "--stats-only", action="store_true",
         help="don't decode: print the scan_stats selectivity preview "
-             "(total vs kept chunks/rows under --filter, from zone maps + "
-             "Bloom filters only) and exit 0",
+             "(total vs kept chunks/rows under --filter, from one "
+             "aggregate over the chunk zone maps + Bloom filters) and "
+             "exit 0",
     )
     dec.add_argument(
         "--columns", default=None,
@@ -113,17 +114,17 @@ def _parse_cli_filters(specs: list[str], schema) -> list[tuple]:
     import datetime
     import decimal
 
-    _INTS = {"byte", "tinyint", "short", "smallint", "int", "integer",
-             "long", "bigint"}
+    from parquet2csv_spark.operators.decode import FILTER_OPS, INT_TYPES
+
     # types the row-exact re-apply can compare natively; anything else
     # (binary, arrays, maps, structs) is rejected at parse time so the
     # error is an argparse-style SystemExit, not a runtime cast failure
     # deep in the Spark job (ADVICE r6)
-    _FILTERABLE = _INTS | {"float", "double", "date", "timestamp",
-                           "timestamp_ntz", "string", "boolean"}
+    _FILTERABLE = INT_TYPES | {"float", "double", "date", "timestamp",
+                               "timestamp_ntz", "string", "boolean"}
 
     def conv(raw: str, t: str):
-        if t in _INTS:
+        if t in INT_TYPES:
             return int(raw)
         if t in ("float", "double"):
             return float(raw)
@@ -147,8 +148,8 @@ def _parse_cli_filters(specs: list[str], schema) -> list[tuple]:
         if len(parts) != 3:
             raise SystemExit(f"bad --filter {spec!r}: expected 'COL OP VALUE'")
         col, op, raw = parts
-        if op not in (">=", ">", "<=", "<", "==", "in"):
-            raise SystemExit(f"bad --filter op {op!r}: use >= > <= < == in")
+        if op not in FILTER_OPS:
+            raise SystemExit(f"bad --filter op {op!r}: use {' '.join(FILTER_OPS)}")
         field = next((f for f in schema.fields if f.name == col), None)
         if field is None:
             raise SystemExit(f"--filter column {col!r} not in the decode schema")

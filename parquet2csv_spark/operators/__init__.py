@@ -1,4 +1,4 @@
-from .decode import decode_table, prune_chunks_long, prune_chunks_str, scan_stats
+from .decode import decode_table, scan_stats
 from .encode import (
     CHUNKS_SCHEMA,
     chunk_metrics,
@@ -11,8 +11,6 @@ __all__ = [
     "CHUNKS_SCHEMA",
     "chunk_metrics",
     "decode_table",
-    "prune_chunks_long",
-    "prune_chunks_str",
     "scan_stats",
     "encode_grouped",
     "encode_table",

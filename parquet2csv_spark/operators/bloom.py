@@ -33,7 +33,11 @@ BloomFilter does the same job for row groups):
   membership check is a pure JVM expression (``try_element_at`` +
   ``shiftleft``/``bitwiseAND``): no Python anywhere in the pruning path,
   and ``m`` is read per chunk as ``64 × size(bloom)`` — chunks with
-  different filter sizes coexist under one query expression.
+  different filter sizes coexist under one query expression. The column
+  name enters that expression as a hex literal
+  (``cast(X'<utf-8 hex>' as string)``), which reads the same under either
+  ``spark.sql.parser.escapedStringLiterals`` setting, so no name needs
+  escaping and the check runs under both.
 """
 
 from __future__ import annotations
@@ -106,10 +110,6 @@ def query_hashes(value: str) -> tuple[int, int]:
     return int(h1[0]), int(h2[0])
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def bloom_prune_sql(col: str, values: list[str]) -> str:
     """SQL boolean over a chunks row: true iff some ``cols`` element for
     ``col`` MAY contain at least one of ``values`` — the bloom is absent
@@ -130,6 +130,6 @@ def bloom_prune_sql(col: str, values: list[str]) -> str:
             bits.append(f"(({word} & {mask}) != 0)")
         conds.append("(" + " AND ".join(bits) + ")")
     return (
-        f"exists(cols, c -> c.name = {_sql_str(col)} AND "
+        f"exists(cols, c -> c.name = cast(X'{col.encode().hex()}' as string) AND "
         f"(c.bloom IS NULL OR size(c.bloom) <= 0 OR ({' OR '.join(conds)})))"
     )

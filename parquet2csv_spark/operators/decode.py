@@ -10,6 +10,13 @@ Ordering contract (SURVEY.md §2.3-2): Spark shuffles destroy implicit
 order, so order is explicit — ``with_position=True`` appends
 ``(_group_key, _seq, _row_offset)``; sorting by those reproduces the
 grouped-encode total order exactly.
+
+Selective decode (the engine's partition-pruning analog): ``filters``
+``[(col, op, value), ...]`` become one pruning predicate over the chunks
+table, built driver-side by :func:`_keep` from the per-column zone maps
+and string Bloom filters, so chunks that provably hold no matching row are
+never decoded; each predicate is then re-applied to the decoded rows.
+:func:`scan_stats` previews the same predicate without decoding.
 """
 
 from __future__ import annotations
@@ -18,7 +25,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from ..codecs import decode_array
@@ -30,106 +37,36 @@ POSITION_FIELDS = [
 ]
 
 
-def prune_chunks_long(chunks_df: DataFrame, col: str, lo=None, hi=None) -> DataFrame:
-    """Zone-map chunk pruning on an int-like column: keep only chunks whose
-    [lo_long, hi_long] range can intersect [lo, hi]. Conservative — chunks
-    without stats are kept. This is the engine's partition-pruning analog:
-    a selective decode touches only matching chunks' frames."""
-    from pyspark.sql import functions as F
-
-    def overlap(c):
-        cond = (c["name"] == col)
-        if lo is not None:
-            cond = cond & (c["hi_long"].isNull() | (c["hi_long"] >= lo))
-        if hi is not None:
-            cond = cond & (c["lo_long"].isNull() | (c["lo_long"] <= hi))
-        return cond
-
-    return chunks_df.filter(F.exists("cols", overlap))
-
-
-def prune_chunks_str(chunks_df: DataFrame, col: str, lo: str | None = None,
-                     hi: str | None = None) -> DataFrame:
-    """Zone-map pruning on a string column (e.g. path prefix ranges)."""
-    from pyspark.sql import functions as F
-
-    def overlap(c):
-        cond = (c["name"] == col)
-        if lo is not None:
-            cond = cond & (c["hi_str"].isNull() | (c["hi_str"] >= lo))
-        if hi is not None:
-            cond = cond & (c["lo_str"].isNull() | (c["lo_str"] <= hi))
-        return cond
-
-    return chunks_df.filter(F.exists("cols", overlap))
-
-
-# above this size an `in` list falls back to the [min,max] envelope:
-# the per-value OR grows the pruning predicate linearly and a long list's
-# envelope is usually dense anyway
+# above this size an `in` list prunes on its [min, max] envelope and skips
+# the Bloom check: the per-value OR grows the pruning predicate linearly
+# and a long list's envelope is usually dense anyway
 _IN_PRUNE_MAX_VALUES = 16
 
+# the supported filter ops, each with its row-exact predicate (re-applied
+# to the decoded rows, so pruning only changes what is scanned)
+FILTER_OPS = {
+    ">=": lambda c, v: c >= v, ">": lambda c, v: c > v,
+    "<=": lambda c, v: c <= v, "<": lambda c, v: c < v,
+    "==": lambda c, v: c == v, "in": lambda c, v: c.isin(list(v)),
+}
 
-def prune_chunks_in(chunks_df: DataFrame, col: str, vals, str_stats: bool = False) -> DataFrame:
-    """Zone-map pruning for an ``in`` list: keep chunks whose [lo, hi]
-    range covers AT LEAST ONE listed value — the union of per-value
-    point-prunes. Exact for sparse lists where the single [min,max]
-    envelope would cover nearly everything and prune nothing (VERDICT r5
-    #4: ``doc_id in (5, 9_000_000)``). Conservative on missing stats."""
-    from pyspark.sql import functions as F
-
-    lo_f, hi_f = ("lo_str", "hi_str") if str_stats else ("lo_long", "hi_long")
-
-    def overlap(c):
-        any_v = None
-        for v in vals:
-            hit = (c[hi_f].isNull() | (c[hi_f] >= v)) & (
-                c[lo_f].isNull() | (c[lo_f] <= v)
-            )
-            any_v = hit if any_v is None else (any_v | hit)
-        return (c["name"] == col) & any_v
-
-    return chunks_df.filter(F.exists("cols", overlap))
+# types with exact int64 zone maps (date/timestamp stats are stored in
+# their Arrow epoch units: microseconds for timestamps, days for dates)
+INT_TYPES = {"byte", "tinyint", "short", "smallint", "int", "integer",
+             "long", "bigint"}
+_TIME_TYPES = {"timestamp", "timestamp_ntz", "date"}
+# column type → the (lo, hi) zone-map field pair it prunes on
+_ZONE_FIELDS = {
+    **dict.fromkeys(INT_TYPES | _TIME_TYPES, ("lo_long", "hi_long")),
+    "string": ("lo_str", "hi_str"),
+}
 
 
-def prune_chunks_bloom(chunks_df: DataFrame, col: str, values) -> DataFrame:
-    """Membership pruning for string ``==`` / ``in`` point lookups: keep
-    only chunks whose per-chunk Bloom filter (operators.bloom) may contain
-    at least one of ``values``. Zero false negatives by construction —
-    chunks without a filter (legacy tables, all-null chunks) are kept."""
-    from pyspark.sql import functions as F
-
-    from .bloom import bloom_prune_sql
-
-    # ADVICE r7: bloom_prune_sql interpolates the column name as a SQL
-    # string literal with backslash escaping that assumes the DEFAULT
-    # spark.sql.parser.escapedStringLiterals=false; under a legacy-
-    # escaping session a backslash-bearing name would mis-match and
-    # exists() would return false — the FALSE-NEGATIVE direction. Bloom
-    # pruning is an optimization, so under legacy escaping it is simply
-    # skipped (conservative keep; zone maps still applied upstream).
-    legacy = (
-        chunks_df.sparkSession.conf.get(
-            "spark.sql.parser.escapedStringLiterals", "false"
-        )
-        or "false"
-    ).lower() == "true"
-    if legacy:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "bloom pruning skipped: spark.sql.parser.escapedStringLiterals "
-            "is enabled and the pruning predicate assumes default escaping"
-        )
-        return chunks_df
-    return chunks_df.filter(F.expr(bloom_prune_sql(col, list(values))))
-
-
-def _has_bloom_field(chunks_df: DataFrame) -> bool:
-    """True when the chunks table carries the (r7+) bloom field — pruning
-    must not reference a missing struct field on legacy tables. Raises
-    ``ValueError`` when ``cols`` is missing or not an array of structs:
-    that is not a chunks table at all."""
+def _cols_fields(chunks_df: DataFrame) -> list[str]:
+    """Field names of the chunks table's ``cols`` struct — pruning must not
+    reference a field a legacy table lacks (pre-r7 tables have no
+    ``bloom``). Raises ``ValueError`` when ``cols`` is missing or not an
+    array of structs: that is not a chunks table at all."""
     if "cols" not in chunks_df.columns:
         raise ValueError(f"not a chunks table: no 'cols' column in {chunks_df.columns}")
     cols_t = chunks_df.schema["cols"].dataType
@@ -137,20 +74,7 @@ def _has_bloom_field(chunks_df: DataFrame) -> bool:
         raise ValueError(
             f"not a chunks table: 'cols' is {cols_t.simpleString()}, not array<struct>"
         )
-    return "bloom" in cols_t.elementType.fieldNames()
-
-
-def _arrow_schema_for(spark_schema: StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(spark_schema)
-
-
-# types with exact int64 zone maps (date/timestamp stats are stored in
-# their Arrow epoch units: microseconds for timestamps, days for dates)
-_INT_TYPES = {"byte", "tinyint", "short", "smallint", "int", "integer",
-              "long", "bigint"}
-_TIME_TYPES = {"timestamp", "timestamp_ntz", "date"}
+    return cols_t.elementType.fieldNames()
 
 
 def _epoch_long(val, simple: str) -> int:
@@ -182,66 +106,85 @@ def _epoch_long(val, simple: str) -> int:
     return calendar.timegm(val.timetuple()) * 1_000_000 + val.microsecond
 
 
-def _apply_filters(chunks_df: DataFrame, schema: StructType, filters) -> DataFrame:
-    """Route simple predicates through the zone maps before decode.
+def _keep(chunks_df: DataFrame, schema: StructType, filters) -> Column | None:
+    """The chunk-pruning predicate for :func:`decode_table`'s ``filters``,
+    or None when no filter can prune.
 
-    ``filters`` is parquet-reader style: an iterable of ``(col, op, value)``
-    with op in ``>= > <= < == in`` (``in`` takes a non-empty value list;
-    lists of ≤ 16 distinct values prune per-value — the union of point
-    prunes, exact for sparse lists — longer lists fall back to the
-    conservative ``[min, max]`` envelope). Each predicate
-    prunes chunks via the
-    matching zone-map stats (conservative: chunks without stats survive);
-    the same predicate is re-applied row-exactly on the decoded output by
-    :func:`decode_table`, so pruning only changes WHAT IS SCANNED, never
-    the result.
-    """
+    Each filter becomes a list of ``(lo, hi)`` ranges: ``>=``/``>`` give
+    ``(v, None)``, ``<=``/``<`` give ``(None, v)``, ``==`` and an ``in``
+    list of ≤ 16 distinct values give points (exact for sparse lists), a
+    longer list its ``[min, max]`` envelope. NULL values are dropped first
+    — NULL never matches a comparison or ``IN`` — so a filter with no
+    value left prunes every chunk. A chunk is kept when its zone map for
+    the column (the field pair picked by the column type; dates and
+    timestamps in :func:`_epoch_long` units) is missing or overlaps some
+    range, and, for a string point lookup, when its Bloom filter may hold
+    a value. Other types prune nothing. Conservative: pruning changes only
+    WHAT IS SCANNED, and :func:`decode_table` re-applies each predicate to
+    the decoded rows."""
+    if not filters:
+        return None
+    from functools import reduce
+    from operator import and_, or_
+
+    from pyspark.sql import functions as F
+
+    from .bloom import bloom_prune_sql
+
+    has_bloom = "bloom" in _cols_fields(chunks_df)
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    conds = []
     for col, op, val in filters:
-        field = next((f for f in schema.fields if f.name == col), None)
-        if field is None:
+        if col not in types:
             raise ValueError(f"filter column {col!r} not in decode schema")
-        if op not in (">=", ">", "<=", "<", "==", "in"):
-            # validate BEFORE the type dispatch: a bad op on a column
-            # without zone maps must raise the same clear error, not a
-            # KeyError later in the row-filter stage
+        # validate BEFORE the type dispatch: a bad op on a column without
+        # zone maps must raise the same clear error, not a KeyError later
+        # in the row-filter stage
+        if op not in FILTER_OPS:
             raise ValueError(f"unsupported filter op {op!r}")
         if op == "in" and not val:
             raise ValueError(f"'in' filter on {col!r} needs a non-empty value list")
-        simple = field.dataType.simpleString()
-        is_int = simple in _INT_TYPES
-        is_time = simple in _TIME_TYPES
-        is_str = simple == "string"
-        if not (is_int or is_time or is_str):
+        simple = types[col]
+        if simple not in _ZONE_FIELDS:
             continue  # no zone maps for this type — row filter still applies
-        conv = (lambda v: _epoch_long(v, simple)) if is_time else (lambda v: v)
-        prune = prune_chunks_str if is_str else prune_chunks_long
+        lo_f, hi_f = _ZONE_FIELDS[simple]
+        vals = [v for v in (val if op == "in" else [val]) if v is not None]
+        if simple in _TIME_TYPES:
+            vals = [_epoch_long(v, simple) for v in vals]
+        pts = sorted(set(vals))
+        if not pts:
+            conds.append(F.lit(False))
+            continue
         if op in (">=", ">"):
-            chunks_df = prune(chunks_df, col, lo=conv(val))
+            ranges = [(pts[0], None)]
         elif op in ("<=", "<"):
-            chunks_df = prune(chunks_df, col, hi=conv(val))
-        elif op == "==":
-            pval = conv(val)
-            chunks_df = prune(chunks_df, col, lo=pval, hi=pval)
-        else:  # "in": per-value union prune for small lists, else envelope
-            pvals = sorted({conv(v) for v in val})
-            if len(pvals) <= _IN_PRUNE_MAX_VALUES:
-                chunks_df = prune_chunks_in(chunks_df, col, pvals, str_stats=is_str)
-            else:
-                chunks_df = prune(chunks_df, col, lo=pvals[0], hi=pvals[-1])
-        if is_str and op in ("==", "in") and _has_bloom_field(chunks_df):
-            # string point lookups: the [lo,hi] prefix range of a chunk not
-            # sorted by this column is wide and prunes little — the Bloom
-            # membership check is what makes "fetch this one path"
-            # selective at 100 TB (VERDICT r6 #3). 'in' lists above the
-            # per-value cap skip it (the expression is linear per value,
-            # same cap as prune_chunks_in; a PARTIAL value list would
-            # create false negatives, so it is all values or none).
-            mvals = [val] if op == "==" else list(val)
-            if len(mvals) <= _IN_PRUNE_MAX_VALUES and all(
-                isinstance(v, str) for v in mvals
-            ):  # non-str values (e.g. None) skip the bloom, never crash it
-                chunks_df = prune_chunks_bloom(chunks_df, col, mvals)
-    return chunks_df
+            ranges = [(None, pts[0])]
+        elif len(pts) <= _IN_PRUNE_MAX_VALUES:
+            ranges = [(v, v) for v in pts]
+        else:
+            ranges = [(pts[0], pts[-1])]
+
+        def overlap(c):  # F.exists calls it right away: no late binding
+            def hit(lo, hi):
+                bounds = []
+                if lo is not None:
+                    bounds.append(c[hi_f].isNull() | (c[hi_f] >= lo))
+                if hi is not None:
+                    bounds.append(c[lo_f].isNull() | (c[lo_f] <= hi))
+                return reduce(and_, bounds)
+
+            return (c["name"] == col) & reduce(or_, (hit(lo, hi) for lo, hi in ranges))
+
+        cond = F.exists("cols", overlap)
+        if (simple == "string" and op in ("==", "in") and has_bloom
+                and len(pts) <= _IN_PRUNE_MAX_VALUES
+                and all(isinstance(v, str) for v in pts)):
+            # the [lo,hi] prefix range of a chunk not sorted by this column
+            # is wide: the Bloom check makes "fetch this one path" selective
+            # (VERDICT r6 #3). Non-str values skip it, never crash it.
+            cond = cond & F.expr(bloom_prune_sql(col, pts))
+        conds.append(cond)
+    return reduce(and_, conds) if conds else None
 
 
 def scan_stats(chunks_df: DataFrame, schema: StructType | str, filters) -> dict:
@@ -249,8 +192,8 @@ def scan_stats(chunks_df: DataFrame, schema: StructType | str, filters) -> dict:
     rows inside them) the given ``filters`` would leave to be scanned,
     without decoding anything. The 100-TB operational question — "is this
     predicate selective enough to run interactively?" — answered from
-    chunk metadata only (zone maps + Bloom filters), one small Spark job
-    over the chunks table.
+    chunk metadata only (zone maps + Bloom filters), one aggregate over
+    the chunks table.
 
     Returns ``{"total_chunks", "kept_chunks", "total_rows", "kept_rows"}``
     (kept_rows is the upper bound that will be decoded; the row-exact
@@ -261,15 +204,16 @@ def scan_stats(chunks_df: DataFrame, schema: StructType | str, filters) -> dict:
         from pyspark.sql.types import _parse_datatype_string
 
         schema = _parse_datatype_string(schema)
-    total = chunks_df.agg(
-        F.count(F.lit(1)).alias("c"), F.sum("n_rows").alias("r")
-    ).first()
-    kept = _apply_filters(chunks_df, schema, filters).agg(
-        F.count(F.lit(1)).alias("c"), F.sum("n_rows").alias("r")
+    keep = _keep(chunks_df, schema, filters)
+    if keep is None:
+        keep = F.lit(True)
+    r = chunks_df.agg(
+        F.count(F.lit(1)).alias("tc"), F.count_if(keep).alias("kc"),
+        F.sum("n_rows").alias("tr"), F.sum(F.when(keep, F.col("n_rows"))).alias("kr"),
     ).first()
     return {
-        "total_chunks": total["c"], "kept_chunks": kept["c"],
-        "total_rows": int(total["r"] or 0), "kept_rows": int(kept["r"] or 0),
+        "total_chunks": r["tc"], "kept_chunks": r["kc"],
+        "total_rows": int(r["tr"] or 0), "kept_rows": int(r["kr"] or 0),
     }
 
 
@@ -282,20 +226,24 @@ def decode_table(
     """Reconstruct the original table from its encoded chunks.
 
     ``filters`` — optional parquet-reader-style predicates
-    ``[(col, op, value), ...]`` with op in ``>= > <= < == in``. Exact row
-    semantics (the predicate is applied to the decoded rows), but chunks
-    whose zone maps prove no row can match are pruned BEFORE the Arrow
-    decode — a selective decode touches only matching chunks' frames
-    (the engine's partition-pruning analog; VERDICT r3 #6).
+    ``[(col, op, value), ...]`` with op in :data:`FILTER_OPS` (``in``
+    takes a non-empty value list). Exact row semantics (the predicate is
+    applied to the decoded rows), but chunks whose zone maps or Bloom
+    filters prove no row can match are pruned BEFORE the Arrow decode — a
+    selective decode touches only matching chunks' frames (the engine's
+    partition-pruning analog; VERDICT r3 #6).
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if isinstance(schema, str):
         from pyspark.sql.types import _parse_datatype_string
 
         schema = _parse_datatype_string(schema)
-    if filters:
-        chunks_df = _apply_filters(chunks_df, schema, filters)
+    keep = _keep(chunks_df, schema, filters)
+    if keep is not None:
+        chunks_df = chunks_df.filter(keep)
     out_schema = StructType([*schema.fields, *(POSITION_FIELDS if with_position else [])])
-    target = _arrow_schema_for(schema)
+    target = to_arrow_schema(schema)
     names = [f.name for f in schema.fields]
 
     def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -338,12 +286,6 @@ def decode_table(
     if filters:
         from pyspark.sql import functions as F
 
-        ops = {
-            ">=": lambda c, v: c >= v, ">": lambda c, v: c > v,
-            "<=": lambda c, v: c <= v, "<": lambda c, v: c < v,
-            "==": lambda c, v: c == v, "in": lambda c, v: c.isin(list(v)),
-        }
         for col, op, val in filters:
-            arg = list(val) if op == "in" else F.lit(val)
-            out = out.filter(ops[op](F.col(col), arg))
+            out = out.filter(FILTER_OPS[op](F.col(col), val))
     return out

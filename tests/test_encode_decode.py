@@ -173,31 +173,28 @@ def test_zone_map_pruning_and_projection_pushdown(spark):
     selective decode reads only chunks whose min/max can match; (2)
     projection pushdown — decoding a subset schema touches only those
     columns' frames."""
-    from parquet2csv_spark.operators import prune_chunks_long, prune_chunks_str
+    from parquet2csv_spark.operators import scan_stats
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     # sort so chunks have tight non-overlapping key ranges (zone maps bite)
     chunks = encode_table(li.orderBy("l_orderkey"), chunk_rows=500).cache()
-    total = chunks.count()
 
-    pruned = prune_chunks_long(chunks, "l_orderkey", lo=100, hi=120)
-    assert 0 < pruned.count() < total  # actually pruned something
-
-    dec = decode_table(pruned, li.schema).filter(
-        (F.col("l_orderkey") >= 100) & (F.col("l_orderkey") <= 120)
-    )
+    key_range = [("l_orderkey", ">=", 100), ("l_orderkey", "<=", 120)]
+    st = scan_stats(chunks, li.schema, key_range)
+    assert 0 < st["kept_chunks"] < st["total_chunks"]  # actually pruned something
+    dec = decode_table(chunks, li.schema, filters=key_range)
     expect = li.filter((F.col("l_orderkey") >= 100) & (F.col("l_orderkey") <= 120))
     assert multiset_diff(expect, dec).count() == 0
 
-    # string zone maps on a sorted string column
+    # string zone maps on a sorted string column ('<=' has no Bloom check)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     dchunks = encode_table(docs.orderBy("source"), chunk_rows=120).cache()
     srcs = sorted(r["source"] for r in docs.select("source").distinct().collect())
-    target = srcs[0]
-    spruned = prune_chunks_str(dchunks, "source", lo=target, hi=target)
-    assert spruned.count() < dchunks.count()
-    sdec = decode_table(spruned, docs.schema).filter(F.col("source") == target)
-    assert multiset_diff(docs.filter(F.col("source") == target), sdec).count() == 0
+    first = [("source", "<=", srcs[0])]
+    st = scan_stats(dchunks, docs.schema, first)
+    assert st["kept_chunks"] < st["total_chunks"]
+    sdec = decode_table(dchunks, docs.schema, filters=first)
+    assert multiset_diff(docs.filter(F.col("source") == srcs[0]), sdec).count() == 0
 
     # projection pushdown: subset schema decodes only those frames
     proj = decode_table(chunks, "l_orderkey bigint, l_quantity double")
@@ -212,7 +209,7 @@ def test_decode_table_filters_prune_chunks_and_match_rows(spark):
     through the zone maps — fewer chunks are scanned — while row semantics
     stay exact (prune is conservative; the predicate is re-applied on the
     decoded rows)."""
-    from parquet2csv_spark.operators.decode import _apply_filters
+    from parquet2csv_spark.operators import scan_stats
 
     ddl = "doc_id bigint, text string"
     df = spark.createDataFrame(
@@ -221,12 +218,9 @@ def test_decode_table_filters_prune_chunks_and_match_rows(spark):
     chunks = encode_table(df, chunk_rows=500)
     chunks.cache()
     try:
-        n_all = chunks.count()
         filters = [("doc_id", ">=", 3500)]
-        from pyspark.sql.types import _parse_datatype_string
-
-        n_kept = _apply_filters(chunks, _parse_datatype_string(ddl), filters).count()
-        assert n_kept < n_all  # pruning actually dropped chunks
+        st = scan_stats(chunks, ddl, filters)
+        assert st["kept_chunks"] < st["total_chunks"]  # pruning actually dropped chunks
         got = decode_table(chunks, ddl, filters=filters)
         want = decode_table(chunks, ddl).filter(F.col("doc_id") >= 3500)
         assert multiset_diff(want, got).count() == 0
@@ -234,11 +228,9 @@ def test_decode_table_filters_prune_chunks_and_match_rows(spark):
         # string zone maps route too
         got_s = decode_table(chunks, ddl, filters=[("text", "==", "body 7")])
         assert [r["doc_id"] for r in got_s.collect()] == [7]
-        # "in" prunes on the [min, max] envelope and row-filters exactly
-        n_in = _apply_filters(
-            chunks, _parse_datatype_string(ddl), [("doc_id", "in", [10, 12])]
-        ).count()
-        assert n_in < n_all
+        # "in" prunes per value and row-filters exactly
+        st_in = scan_stats(chunks, ddl, [("doc_id", "in", [10, 12])])
+        assert st_in["kept_chunks"] < st_in["total_chunks"]
         got_in = decode_table(chunks, ddl, filters=[("doc_id", "in", [10, 12])])
         assert sorted(r["doc_id"] for r in got_in.collect()) == [10, 12]
         import pytest
@@ -252,14 +244,13 @@ def test_decode_table_filters_prune_chunks_and_match_rows(spark):
 def test_decode_table_time_filters_prune_chunks(spark):
     """VERDICT r4 #3: date/timestamp predicates route through the zone maps
     too — the encoder stores exact int64 stats in Arrow epoch units
-    (timestamp[us] → microseconds, date32 → days), and ``_apply_filters``
-    converts natural datetime/date filter values before pruning. A
+    (timestamp[us] → microseconds, date32 → days), and the pruning
+    predicate converts natural datetime/date filter values first. A
     time-range selective decode (the canonical 100-TB access pattern) must
     scan fewer chunks while staying row-exact."""
     import datetime
 
-    from parquet2csv_spark.operators.decode import _apply_filters
-    from pyspark.sql.types import _parse_datatype_string
+    from parquet2csv_spark.operators import scan_stats
 
     base = datetime.datetime(2024, 1, 1)
     ddl = "event_id bigint, ts timestamp, d date, ds date"
@@ -279,11 +270,10 @@ def test_decode_table_time_filters_prune_chunks(spark):
     chunks = encode_table(df.orderBy("event_id").coalesce(1), chunk_rows=500)
     chunks.cache()
     try:
-        n_all = chunks.count()
         cutoff = base + datetime.timedelta(minutes=3500)
         filters = [("ts", ">=", cutoff)]
-        schema = _parse_datatype_string(ddl)
-        n_kept = _apply_filters(chunks, schema, filters).count()
+        st = scan_stats(chunks, ddl, filters)
+        n_all, n_kept = st["total_chunks"], st["kept_chunks"]
         assert n_kept < n_all  # timestamp pruning actually dropped chunks
         got = decode_table(chunks, ddl, filters=filters)
         want = decode_table(chunks, ddl).filter(F.col("ts") >= cutoff)
@@ -291,8 +281,7 @@ def test_decode_table_time_filters_prune_chunks(spark):
         assert got.count() == 500
         # tz-aware datetimes convert through .timestamp() to the same epoch
         aware = cutoff.replace(tzinfo=datetime.timezone.utc)
-        n_kept_aware = _apply_filters(chunks, schema, [("ts", ">=", aware)]).count()
-        assert n_kept_aware == n_kept
+        assert scan_stats(chunks, ddl, [("ts", ">=", aware)])["kept_chunks"] == n_kept
         # date columns prune on epoch-day units
         dcut = (base + datetime.timedelta(days=38)).date()
         got_d = decode_table(chunks, ddl, filters=[("d", ">=", dcut)])
@@ -303,8 +292,7 @@ def test_decode_table_time_filters_prune_chunks(spark):
         assert one.count() == want_d.filter(F.col("d") == F.lit(dcut)).count()
         # a date-sorted column prunes too
         scut = (base + datetime.timedelta(days=30)).date()
-        n_kept_s = _apply_filters(chunks, schema, [("ds", ">=", scut)]).count()
-        assert n_kept_s < n_all
+        assert scan_stats(chunks, ddl, [("ds", ">=", scut)])["kept_chunks"] < n_all
         got_s = decode_table(chunks, ddl, filters=[("ds", ">=", scut)])
         assert got_s.count() == 1000
         assert multiset_diff(df.filter(F.col("ds") >= F.lit(scut)), got_s).count() == 0
@@ -422,20 +410,16 @@ def test_in_filter_prunes_per_value_for_sparse_lists(spark):
     chunks that can hold those values, where the old [min,max] envelope
     covered every chunk and pruned nothing. Longer lists fall back to the
     envelope; row results are identical either way."""
-    from parquet2csv_spark.operators.decode import _apply_filters
-    from pyspark.sql.types import _parse_datatype_string
+    from parquet2csv_spark.operators import scan_stats
 
     ddl = "doc_id bigint, text string"
-    schema = _parse_datatype_string(ddl)
     df = spark.createDataFrame([(i, f"body {i}") for i in range(4000)], ddl)
     chunks = encode_table(df.orderBy("doc_id").coalesce(1), chunk_rows=500)
     chunks.cache()
     try:
-        n_all = chunks.count()
-        assert n_all == 8
+        st = scan_stats(chunks, ddl, [("doc_id", "in", [5, 3900])])
         # sparse list: first and last chunk only — the envelope keeps all 8
-        n_sparse = _apply_filters(chunks, schema, [("doc_id", "in", [5, 3900])]).count()
-        assert n_sparse == 2
+        assert (st["total_chunks"], st["kept_chunks"]) == (8, 2)
         got = decode_table(chunks, ddl, filters=[("doc_id", "in", [5, 3900])])
         assert sorted(r["doc_id"] for r in got.collect()) == [5, 3900]
         # >16 distinct values: envelope fallback, still row-exact
@@ -453,7 +437,7 @@ def test_selective_decode_events_gate_prunes(spark):
     the total, and the decoded rows equal the plain parquet range scan."""
     import datetime
 
-    from parquet2csv_spark.operators.decode import _apply_filters
+    from parquet2csv_spark.operators import scan_stats
 
     src = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     chunks = encode_table(src.orderBy("ts"), chunk_rows=2048)
@@ -462,9 +446,8 @@ def test_selective_decode_events_gate_prunes(spark):
         lo = datetime.datetime(2024, 1, 10)
         hi = datetime.datetime(2024, 1, 15)
         filters = [("ts", ">=", lo), ("ts", "<", hi)]
-        n_all = chunks.count()
-        n_kept = _apply_filters(chunks, src.schema, filters).count()
-        assert 0 < n_kept < n_all, (n_kept, n_all)
+        st = scan_stats(chunks, src.schema, filters)
+        assert 0 < st["kept_chunks"] < st["total_chunks"], st
         got = decode_table(chunks, src.schema, filters=filters)
         want = src.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") < F.lit(hi)))
         assert multiset_diff(want, got.select(*src.columns)).count() == 0
@@ -497,9 +480,7 @@ def test_bloom_membership_pruning_point_lookup(spark):
     are NOT sorted by — the prefix [lo,hi] zone maps barely prune, the
     per-chunk Bloom membership filter prunes almost everything, and the
     result stays identical (Bloom filters have zero false negatives)."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    from parquet2csv_spark.operators.decode import _apply_filters
+    from parquet2csv_spark.operators import scan_stats
 
     ddl = "path string, v bigint"
     rows = [(f"src/{(i * 2654435761) % 100000:05x}/F{i}.java", i)
@@ -507,19 +488,16 @@ def test_bloom_membership_pruning_point_lookup(spark):
     df = spark.createDataFrame(rows, ddl).coalesce(4)
     chunks = encode_table(df, chunk_rows=500).cache()  # unsorted in `path`
     try:
-        n_all = chunks.count()
-        schema = _parse_datatype_string(ddl)
         target = rows[4321][0]
-        kept = _apply_filters(chunks, schema, [("path", "==", target)]).count()
+        st = scan_stats(chunks, ddl, [("path", "==", target)])
+        n_all = st["total_chunks"]
         # the value lives in exactly one chunk; bloom fp ~0.2% at this ndv
-        assert kept < n_all / 4, (kept, n_all)
+        assert st["kept_chunks"] < n_all / 4, st
         got = decode_table(chunks, ddl, filters=[("path", "==", target)])
         assert [r["v"] for r in got.collect()] == [4321]
         # absent value: bloom prunes everything (or nearly), zero rows out
-        kept_abs = _apply_filters(
-            chunks, schema, [("path", "==", "no/such/path.txt")]
-        ).count()
-        assert kept_abs < n_all / 4
+        st_abs = scan_stats(chunks, ddl, [("path", "==", "no/such/path.txt")])
+        assert st_abs["kept_chunks"] < n_all / 4
         # 'in' routes through the bloom too — union over values
         vals = [rows[17][0], rows[7777][0]]
         got_in = decode_table(chunks, ddl, filters=[("path", "in", vals)])
@@ -548,29 +526,29 @@ def test_bloom_pruning_skips_legacy_tables_without_bloom_field(spark):
     assert [r["v"] for r in got.collect()] == [42]
 
 
-def test_has_bloom_field_checks_the_cols_schema(spark):
+def test_cols_fields_checks_the_cols_schema(spark):
     """A current chunks table has the bloom field and a legacy (pre-r7)
     one has not; a table whose ``cols`` is missing or not an array of
     structs is not a chunks table, and the check says so instead of
     silently skipping Bloom pruning."""
-    from parquet2csv_spark.operators.decode import _has_bloom_field
+    from parquet2csv_spark.operators.decode import _cols_fields
 
     chunks = encode_table(spark.createDataFrame([("a", 1)], "path string, v bigint"))
-    assert _has_bloom_field(chunks)
+    assert "bloom" in _cols_fields(chunks)
     legacy = chunks.withColumn(
         "cols", F.expr("transform(cols, c -> struct(c.name as name, c.frame as frame))")
     )
-    assert not _has_bloom_field(legacy)
+    assert _cols_fields(legacy) == ["name", "frame"]
     with pytest.raises(ValueError, match="no 'cols' column"):
-        _has_bloom_field(chunks.drop("cols"))
+        _cols_fields(chunks.drop("cols"))
     with pytest.raises(ValueError, match="'cols' is array<string>"):
-        _has_bloom_field(chunks.withColumn("cols", F.expr("transform(cols, c -> c.name)")))
+        _cols_fields(chunks.withColumn("cols", F.expr("transform(cols, c -> c.name)")))
 
 
 def test_scan_stats_selectivity_preview(spark):
     """r7: ``scan_stats`` answers "how selective is this predicate" from
-    chunk metadata only — kept counts match what ``_apply_filters`` keeps,
-    and the row-exact decode result is bounded by kept_rows."""
+    chunk metadata only, and the row-exact decode result is bounded by
+    kept_rows."""
     from parquet2csv_spark.operators import scan_stats
 
     ddl = "doc_id bigint, text string"
@@ -587,6 +565,174 @@ def test_scan_stats_selectivity_preview(spark):
         st2 = scan_stats(chunks, ddl, [("text", "==", "body 7")])
         assert st2["kept_chunks"] < st2["total_chunks"]
     finally:
+        chunks.unpersist()
+
+
+def test_scan_stats_runs_one_aggregate(spark, tmp_path):
+    """``scan_stats`` counts total and kept chunks and rows in one
+    aggregate over the chunks table: at most two jobs (the aggregate's
+    map stage and its result under AQE)."""
+    from parquet2csv_spark.operators import scan_stats
+
+    ddl = "doc_id bigint, text string"
+    path = str(tmp_path / "chunks")
+    df = spark.createDataFrame([(i, f"body {i}") for i in range(4000)], ddl).coalesce(2)
+    encode_table(df, chunk_rows=500).write.parquet(path)
+    chunks = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-scan-stats-jobs", "scan_stats")
+    try:
+        st = scan_stats(chunks, ddl, [("doc_id", ">=", 3500),
+                                      ("text", "in", ["body 7", "body 3999"])])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("test-scan-stats-jobs")
+    assert len(jobs) <= 2, sorted(jobs)
+    assert st == {"total_chunks": 8, "kept_chunks": 1, "total_rows": 4000, "kept_rows": 500}
+
+
+def _plain_filter(filters):
+    """The plain Spark predicate for decode filter triples."""
+    import operator
+
+    cmp = {">=": operator.ge, ">": operator.gt, "<=": operator.le,
+           "<": operator.lt, "==": operator.eq}
+    cond = F.lit(True)
+    for col, op, val in filters:
+        c = F.col(col)
+        cond = cond & (c.isin(list(val)) if op == "in" else cmp[op](c, F.lit(val)))
+    return cond
+
+
+def _rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_in_lists_holding_null_match_plain_spark(spark):
+    """NULL never matches a comparison or ``IN``: an ``in`` list holding
+    None prunes on its other values and returns what plain Spark returns,
+    and a filter with no non-null value prunes every chunk."""
+    import datetime
+
+    from parquet2csv_spark.operators import scan_stats
+
+    base = datetime.datetime(2024, 1, 1)
+    ddl = "s string, t timestamp, v bigint"
+    # the null row shares the first chunk: an all-null chunk has no zone
+    # map and is always kept
+    df = spark.createDataFrame(
+        [(None, None, None)]
+        + [(f"k{i:05d}", base + datetime.timedelta(minutes=i), i) for i in range(1000)],
+        ddl,
+    )
+    chunks = encode_table(df.coalesce(1), chunk_rows=200).cache()
+    try:
+        for flt, want in [
+            (("s", "in", ["k00000", None]), [0]),
+            (("t", "in", [base + datetime.timedelta(minutes=7), None]), [7]),
+            (("v", "in", [None, 512]), [512]),
+        ]:
+            got = decode_table(chunks, ddl, filters=[flt])
+            assert sorted(r["v"] for r in got.collect()) == want, flt
+            assert _rows(got) == _rows(df.filter(_plain_filter([flt]))), flt
+            assert scan_stats(chunks, ddl, [flt])["kept_chunks"] == 1, flt
+        for flt in [("v", "in", [None]), ("s", "==", None), ("t", ">=", None)]:
+            assert scan_stats(chunks, ddl, [flt])["kept_chunks"] == 0, flt
+            assert decode_table(chunks, ddl, filters=[flt]).count() == 0, flt
+    finally:
+        chunks.unpersist()
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_bloom_pruning_under_either_string_escaping(spark, escaped):
+    """The Bloom check names the column with a hex literal, which reads
+    the same under both ``spark.sql.parser.escapedStringLiterals``
+    settings: for a name holding a backslash, quotes and a non-ASCII
+    letter it keeps exactly the one chunk with the looked-up value."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from parquet2csv_spark.operators import scan_stats
+
+    name = "we\\ird'na\"me é"
+    schema = StructType([StructField(name, StringType()), StructField("v", LongType())])
+    # values scattered over the chunks, so the zone maps keep every chunk
+    rows = [(f"v{(i * 7919) % 1000:04d}", i) for i in range(1000)]
+    chunks = encode_table(
+        spark.createDataFrame(rows, schema).coalesce(1), chunk_rows=100
+    ).cache()
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        flt = [(name, "==", rows[123][0])]
+        st = scan_stats(chunks, schema, flt)
+        assert (st["total_chunks"], st["kept_chunks"]) == (10, 1), st
+        got = decode_table(chunks, schema, filters=flt).collect()
+        assert [r["v"] for r in got] == [123]
+    finally:
+        spark.conf.set(key, prev)
+        chunks.unpersist()
+
+
+def test_pruning_keeps_every_matching_chunk_on_random_filters(spark):
+    """Seeded property check over a nullable int/string/date/timestamp
+    table (sorted and unsorted columns, short and long strings): for
+    random filter lists of every op, ``decode_table`` equals the plain
+    Spark filter of the source, and no chunk holding a matching row is
+    pruned."""
+    import datetime
+    import random
+
+    from parquet2csv_spark.operators.decode import _keep
+
+    rng = random.Random(1301)
+    base = datetime.datetime(2024, 1, 1)
+    ddl = "i bigint, s string, d date, t timestamp"
+
+    def null_or(v):
+        return None if rng.random() < 0.1 else v
+
+    rows = []
+    for n in range(1200):
+        h = (n * 7919) % 1200
+        # the last third is long strings: those chunks carry no Bloom filter
+        s = f"k{h:04d}" if n < 800 else "L" * 140 + str(h)
+        rows.append((
+            null_or(n), null_or(s),
+            null_or((base + datetime.timedelta(days=n // 40)).date()),
+            null_or(base + datetime.timedelta(minutes=h, microseconds=n)),
+        ))
+    src = spark.createDataFrame(rows, ddl)
+    chunks = encode_table(src.coalesce(1), chunk_rows=100).cache()
+    full = decode_table(chunks, ddl, with_position=True).cache()
+    absent = {"i": 10**9, "s": "zz", "d": datetime.date(1999, 1, 1),
+              "t": datetime.datetime(1999, 1, 1)}
+
+    def value(j):
+        return absent[src.columns[j]] if rng.random() < 0.1 else rng.choice(rows)[j]
+
+    try:
+        for _ in range(24):
+            filters = []
+            for _ in range(rng.randint(1, 2)):
+                j = rng.randrange(4)
+                op = rng.choice([">=", ">", "<=", "<", "==", "in"])
+                val = ([value(j) for _ in range(rng.choice([1, 2, 5, 16, 17, 30]))]
+                       if op == "in" else value(j))
+                filters.append((src.columns[j], op, val))
+            pred = _plain_filter(filters)
+            got = decode_table(chunks, ddl, filters=filters)
+            assert _rows(got) == _rows(src.filter(pred)), filters
+            must = {r["_seq"] for r in full.filter(pred).select("_seq").distinct().collect()}
+            keep = _keep(chunks, src.schema, filters)
+            kept = chunks if keep is None else chunks.filter(keep)
+            assert must <= {r["seq"] for r in kept.select("seq").collect()}, filters
+    finally:
+        full.unpersist()
         chunks.unpersist()
 
 
