@@ -70,13 +70,12 @@ T_ZSTD = 16
 FRAME_VERSION = 2  # writer generation; decode accepts 1 (zlib era) and 2
 
 _U32 = struct.Struct("<I")
-_ZLIB_LEVEL = 6
 
 # zstd transport codecs (pyarrow ships libzstd). The level is transport-
 # internal — decode reads the zstd frame regardless — so it is tunable
 # without a format change (only the byte-pinned metrics oracle constants
-# move). Level 1 for big bodies mirrors the old _zlib_level big-body fast
-# path and beats zlib-1 on BOTH axes there (~28% smaller on the corpus
+# move). Level 1 for big bodies mirrors the v1 writer's big-body zlib-1
+# fast path and beats zlib-1 on BOTH axes there (~28% smaller on the corpus
 # content column); level 3 for small bodies: ~13% worse than deflate-6 on
 # a small fsst body, but small bodies are the non-content columns (~5% of
 # corpus bytes ⇒ ~+0.7% total) and level 9 cost a measured ~8% of encode
@@ -208,12 +207,6 @@ def _dec_dict(tag: int, body: bytes, n: int) -> pa.Array:
 
 
 # ------------------------------------------------------------------- frames
-
-def _zlib_level(size: int) -> int:
-    """Deflate effort by body size: big bodies get the fast level (the
-    ratio loss after dict/fsst preconditioning is ~2-5%, the speedup ~4×)."""
-    return 1 if size > (1 << 18) else _ZLIB_LEVEL
-
 
 def encode_array(arr: pa.Array, spec: str,
                  ctx: dict | None = None, ctx_key: str | None = None) -> bytes:
@@ -402,19 +395,6 @@ def wrap_transport(frame: bytes) -> bytes:
     raw = frame[off:]
     body = bytes((tag,)) + _U32.pack(len(raw)) + _transport_compress(raw)
     return frame[:1] + bytes((T_ZSTD,)) + frame[2:off] + body
-
-
-def wrap_zlib(frame: bytes, level: int | None = None) -> bytes:
-    """v1-era zlib wrap, kept so tests can synthesize legacy frames and any
-    external caller of the old name keeps working (decode accepts both)."""
-    tag = frame[1]
-    if tag in (T_ZLIB, T_ZSTD):
-        return frame
-    off = _body_offset(frame)
-    if level is None:
-        level = _zlib_level(len(frame) - off)
-    body = bytes((tag,)) + zlib.compress(frame[off:], level)
-    return frame[:1] + bytes((T_ZLIB,)) + frame[2:off] + body
 
 
 def raw_size(arr: pa.Array) -> int:

@@ -5,7 +5,7 @@ from .encode import (
     encode_grouped,
     encode_table,
 )
-from .verify import is_bit_identical, multiset_diff, sha256_check
+from .verify import multiset_diff, sha256_check
 
 __all__ = [
     "CHUNKS_SCHEMA",
@@ -14,7 +14,6 @@ __all__ = [
     "scan_stats",
     "encode_grouped",
     "encode_table",
-    "is_bit_identical",
     "multiset_diff",
     "sha256_check",
 ]

@@ -66,7 +66,6 @@ CHUNKS_ARROW = pa.schema(
         ("n_rows", pa.int64()),
         ("raw_bytes", pa.int64()),
         ("enc_bytes", pa.int64()),
-        ("wall_ms", pa.int64()),
         ("cols", pa.list_(COL_STRUCT)),
     ]
 )
@@ -151,10 +150,9 @@ def _zone_map(arr: pa.Array) -> dict:
 def encode_chunk(tbl: pa.Table, chunk_id: str, group_key: str, seq: int,
                  specs: dict[str, str] | None = None,
                  ctx: dict | None = None) -> dict:
-    """Encode one row-chunk into a single chunks-table row (plain dict)."""
-    import time as _time
-
-    t_start = _time.perf_counter()
+    """Encode one row-chunk into a single chunks-table row (plain dict): a
+    pure function of its arguments and ``ctx``, so chunk files written
+    from the same input are byte-identical."""
     cols = []
     t_raw = t_enc = 0
     for name in tbl.column_names:
@@ -182,7 +180,6 @@ def encode_chunk(tbl: pa.Table, chunk_id: str, group_key: str, seq: int,
         "n_rows": tbl.num_rows,
         "raw_bytes": t_raw,
         "enc_bytes": t_enc,
-        "wall_ms": int((_time.perf_counter() - t_start) * 1000),
         "cols": cols,
     }
 
@@ -279,15 +276,14 @@ def salt_groups(
     group_cols: list[str],
     order_cols: list[str],
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    group_factor: int = 1,
 ) -> DataFrame:
     """Stage 1 of the grouped encode: append the salted group key ``_gk``.
 
     1. Aggregate per-group logical bytes (small: one row per group).
-    2. ``nsalts = ceil(bytes / (group_factor × chunk_bytes))`` — a giant
-       repo holding 40% of the corpus becomes many salted groups, each
-       ~``group_factor`` chunks, BEFORE any shuffle (explicit salting +
-       size-capped splitting, not AQE backstop — SURVEY.md §4.2).
+    2. ``nsalts = ceil(bytes / chunk_bytes)`` — a giant repo holding 40%
+       of the corpus becomes many salted groups, each ~one chunk, BEFORE
+       any shuffle (explicit salting + size-capped splitting, not AQE
+       backstop — SURVEY.md §4.2).
     3. Broadcast-join the salt counts, salt on ``xxhash64(order cols)``.
 
     Exposed separately so plans.lineage can anti-join completed group keys
@@ -297,18 +293,17 @@ def salt_groups(
     the source (map-side combinable, one output row per group — cheap in
     shuffle, not in scan). This is deliberate: sampled sizes would weaken
     the skew guarantee that every salted group lands under
-    ``group_factor × chunk_bytes``. On a production lakehouse the
+    ``chunk_bytes``. On a production lakehouse the
     per-group bytes can come from table column statistics (e.g. Iceberg
     manifests) instead of a scan; the aggregate here is the
     source-agnostic fallback.
     """
-    target = group_factor * chunk_bytes
     sizes = (
         df.groupBy(*[F.col(c).alias(f"_s_{c}") for c in group_cols])
         .agg(F.sum(_size_expr(df)).alias("_gbytes"))
         .withColumn(
             "_nsalts",
-            F.greatest(F.lit(1), F.ceil(F.col("_gbytes") / F.lit(target))).cast("int"),
+            F.greatest(F.lit(1), F.ceil(F.col("_gbytes") / F.lit(chunk_bytes))).cast("int"),
         )
         .drop("_gbytes")
     )
@@ -350,7 +345,7 @@ def encode_salted(
     the balance it buys: on a 4-core box (cold sessions, 25k-row corpus,
     96 salted groups; CLI encodes and noop-sink encodes) the main job took
     3.2-3.9 s at 4 tasks, 3.4-4.3 s at 8 and 4.5-6.1 s at 16. Salting caps
-    every group at ~``group_factor × chunk_bytes``, which bounds how uneven
+    every group at ~``chunk_bytes``, which bounds how uneven
     the tasks can be. The remaining trade: at high core counts with few
     groups, several salt-capped groups can hash into one task and set the
     stage's tail."""
@@ -397,17 +392,16 @@ def encode_grouped(
     order_cols: list[str],
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    group_factor: int = 1,
 ) -> DataFrame:
     """Skew-safe deterministic grouped encode (the north_rule path):
     :func:`salt_groups` → :func:`encode_salted`."""
-    salted = salt_groups(df, group_cols, order_cols, chunk_bytes, group_factor)
+    salted = salt_groups(df, group_cols, order_cols, chunk_bytes)
     return encode_salted(salted, order_cols, chunk_rows, chunk_bytes)
 
 
 def chunk_metrics(chunks_df: DataFrame) -> DataFrame:
     """Per-column codec/ratio metrics — the auditable view of selector
-    decisions (feeds the lineage table and BENCH reporting)."""
+    decisions (feeds the metrics query and perfbench's codec layers)."""
     c = F.explode("cols").alias("c")
     return (
         chunks_df.select("chunk_id", "group_key", "seq", "n_rows", c)

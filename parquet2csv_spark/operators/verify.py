@@ -55,7 +55,3 @@ def sha256_check(
     )
     return joined.select(status.alias("status")).groupBy("status").agg(F.count("*").alias("n"))
 
-
-def is_bit_identical(src: DataFrame, dec: DataFrame) -> bool:
-    """Driver-side boolean gate (actions the plan — test/CI use only)."""
-    return multiset_diff(src, dec).limit(1).count() == 0

@@ -14,6 +14,12 @@ Layout under ``out_dir``:
                                    and the run's totals (groups, rows,
                                    raw_bytes, enc_bytes)
 
+The marker is the only record of a run. Chunk rows hold no clock reading
+or run identity, so a run's chunk files are a pure function of the groups
+it encodes and its task-slot count: two fresh encodes of one input write
+byte-identical chunk rows. Per-group figures are aggregates of
+``chunks()``, whose ``run`` column names the marker to join.
+
 Crash-consistency model (no transactional catalog needed in the sandbox;
 Iceberg's atomic append is the production drop-in):
   1. chunk files for a run are written under ``chunks/run=<run_id>/``;
@@ -29,8 +35,8 @@ Iceberg's atomic append is the production drop-in):
      resume contract (verified in tests).
 
 Everything a command decides before its data job comes from the markers,
-read on the driver: O(runs) small files, no Spark job. The resume checks
-(digest migration, params mismatch) and ``generations()`` run on them. The
+read on the driver: O(runs) small files, no Spark job. The resume check
+(params mismatch) and ``generations()`` run on them. The
 done groups are the ``group_key`` column of the committed runs' chunk
 files, read lazily inside the chunk write's anti-join; with no committed
 run they are an empty local relation, which the optimizer's empty-relation
@@ -55,13 +61,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..operators.encode import (
     CHUNKS_SCHEMA,
@@ -73,15 +73,6 @@ from ..operators.encode import (
 from ..session import jvm_class
 
 
-# the schema of the ``lineage()`` view: one row per committed (run, group)
-LINEAGE_SCHEMA = StructType([StructField(name, t) for name, t in (
-    ("snapshot_id", StringType()), ("job_id", StringType()),
-    ("run_id", StringType()), ("group_key", StringType()),
-    ("n_chunks", LongType()), ("n_rows", LongType()),
-    ("raw_bytes", LongType()), ("enc_bytes", LongType()),
-    ("wall_ms", LongType()), ("codecs", StringType()), ("status", StringType()),
-    ("committed_at", TimestampType()), ("params", StringType()),
-)])
 # a committed run's chunk rows with their ``run`` partition column
 _RUN_CHUNKS_SCHEMA = StructType([*CHUNKS_SCHEMA.fields, StructField("run", StringType())])
 _TOTALS = ("groups", "rows", "raw_bytes", "enc_bytes")
@@ -208,7 +199,9 @@ class EncodeJob:
 
     A run is committed once its marker is in place; it is written after
     the run's chunk files, so a run without one (a crash in between) is an
-    orphan that no reader sees and the next run re-encodes.
+    orphan that no reader sees and the next run re-encodes. The markers are
+    the whole run record: ``runs()``/``generations()`` read them, and
+    ``chunks()`` returns the committed chunk rows with their ``run``.
     """
 
     def __init__(
@@ -221,7 +214,6 @@ class EncodeJob:
         order_cols: list[str] | None = None,
         chunk_rows: int = DEFAULT_CHUNK_ROWS,
         chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-        group_factor: int = 1,
     ):
         self.spark = spark
         self.out_dir = out_dir.rstrip("/")
@@ -231,21 +223,22 @@ class EncodeJob:
         self.order_cols = order_cols or ["path", "commit"]
         self.chunk_rows = chunk_rows
         self.chunk_bytes = chunk_bytes
-        self.group_factor = group_factor
         # the salting/chunking parameters ARE part of the resume identity:
-        # a different group_factor/chunk_bytes produces different salted
-        # group keys, so resuming with changed params would re-encode
-        # everything under NEW keys while chunks() still returns the OLD
-        # committed groups too — duplicate rows. run() refuses the mismatch.
+        # a different chunk_bytes produces different salted group keys, so
+        # resuming with changed params would re-encode everything under NEW
+        # keys while chunks() still returns the OLD committed groups too —
+        # duplicate rows. run() refuses the mismatch.
         # ord=nl records the within-group null-ordering convention
         # (asc_nulls_last, matching the r2-era pyarrow sort_indices default).
         # r3 briefly shipped Spark's default NULLS FIRST; folding the
         # convention into params means a resume against an r3-era dir is
         # refused like any other param mismatch instead of silently
         # producing differently-ordered chunks under the same gk:seq ids.
+        # gf=1 is the salt-target multiplier every run has used; it stays
+        # in the string so markers committed with it still match.
         self.params = (
             f"gc={','.join(self.group_cols)};oc={','.join(self.order_cols)};"
-            f"cr={chunk_rows};cb={chunk_bytes};gf={group_factor};ord=nl"
+            f"cr={chunk_rows};cb={chunk_bytes};gf=1;ord=nl"
         )
 
     # ------------------------------------------------------------- commits
@@ -267,7 +260,8 @@ class EncodeJob:
         The explicit schema types ``run`` as a string: without it Spark's
         partition TYPE INFERENCE parses the run=<12-hex> dir name, and an
         all-digit hex id (~1 in 280 runs, e.g. run=012345678901) becomes a
-        Long whose string form drops the leading zero (review finding r4)."""
+        Long whose string form drops the leading zero (review finding r4).
+        It also drops the per-chunk encode time that earlier writers added."""
         base = f"{self.out_dir}/chunks"
         return (
             self.spark.read.schema(_RUN_CHUNKS_SCHEMA)
@@ -285,46 +279,6 @@ class EncodeJob:
         if not fs.rename(src, hadoop_fs(self.spark, final)[1]):
             raise OSError(f"could not commit {final}: rename from {tmp} failed")
 
-    def lineage(self) -> DataFrame:
-        """A LINEAGE_SCHEMA view of every committed run in ``out_dir``: one row
-        per (run, group), aggregated from the chunk metadata (each column's
-        codec tag, never the frames) plus the run's marker fields."""
-        markers = read_markers(self.spark, self.out_dir)
-        if not markers:
-            return _empty(self.spark, LINEAGE_SCHEMA)
-        by_run = F.create_map(*[
-            v for m in markers for v in (
-                F.lit(m["run_id"]),
-                F.struct(
-                    F.lit(m["snapshot_id"]).alias("snapshot_id"),
-                    F.lit(m["job_id"]).alias("job_id"),
-                    F.lit(m["committed_at"].isoformat()).cast("timestamp")
-                    .alias("committed_at"),
-                    F.lit(m["params"]).alias("params"),
-                ),
-            )
-        ])
-        codecs = F.array_sort(F.array_distinct(F.flatten(F.collect_list("cols.codec"))))
-        return (
-            self._read_runs([m["run_id"] for m in markers])
-            .groupBy("run", "group_key")
-            .agg(
-                F.count("*").alias("n_chunks"),
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.sum("wall_ms").alias("wall_ms"),
-                F.array_join(codecs, ",").alias("codecs"),
-            )
-            .withColumn("_m", by_run[F.col("run")])
-            .select(
-                "_m.snapshot_id", "_m.job_id", F.col("run").alias("run_id"),
-                "group_key", "n_chunks", "n_rows", "raw_bytes", "enc_bytes",
-                "wall_ms", "codecs", F.lit("done").alias("status"),
-                "_m.committed_at", "_m.params",
-            )
-        )
-
     def done_groups(self, markers: list[dict] | None = None) -> DataFrame:
         """Group keys (as ``_gk``) this (snapshot, job) has committed: the
         ``group_key`` column of its committed runs' chunk files. ``markers``
@@ -339,36 +293,9 @@ class EncodeJob:
     # --------------------------------------------------------------- running
 
     def _check_resume(self, markers: list[dict]) -> None:
-        """Evaluate every resume check on the markers, in order.
-
-        1. Digest migration. The catalog embeds a version in every snapshot
-           id (catalog.py DIGEST_VERSION). When the current id carries the
-           current version but this job_id has runs committed under ids
-           that don't, those runs were committed under an older digest
-           format: the SAME unchanged input now hashes to a DIFFERENT id,
-           so a silent resume would see zero done groups and re-encode
-           every group into this out_dir — a second generation under
-           identical group keys. Hand-assigned snapshot ids skip the check.
-        2. Params mismatch: a different group_factor/chunk_bytes salts into
-           different group keys (see ``__init__``).
-        """
-        from ..sources.catalog import DIGEST_VERSION
-
-        prefix = f"{DIGEST_VERSION}-"
-        if self.snapshot_id.startswith(prefix):
-            stale = sorted(
-                m["snapshot_id"] for m in markers
-                if m["job_id"] == self.job_id and not m["snapshot_id"].startswith(prefix)
-            )
-            if stale:
-                raise RuntimeError(
-                    f"commits for job_id={self.job_id!r} contain snapshot ids in a "
-                    f"pre-{DIGEST_VERSION} manifest-digest format (e.g. "
-                    f"{stale[0]!r}); the digest inputs have changed "
-                    f"since, so resume state for this out_dir cannot be trusted — "
-                    f"encode into a new out_dir (or new job_id), or decode the old "
-                    f"generation with the tooling that wrote it"
-                )
+        """Refuse a resume whose salting/chunking params differ from this
+        (snapshot, job)'s committed runs': a different chunk_bytes salts
+        into different group keys (see ``__init__``)."""
         mismatched = sorted(
             m["params"] for m in self._own(markers) if m["params"] != self.params
         )
@@ -400,10 +327,7 @@ class EncodeJob:
         t0 = time.time()
         markers = read_markers(self.spark, self.out_dir)
         self._check_resume(markers)
-        salted = salt_groups(
-            df, self.group_cols, self.order_cols, self.chunk_bytes,
-            self.group_factor,
-        )
+        salted = salt_groups(df, self.group_cols, self.order_cols, self.chunk_bytes)
         pending = salted.join(self.done_groups(markers), on="_gk", how="left_anti")
         if only_groups_like is not None:
             pending = pending.filter(F.col("_gk").contains(only_groups_like))

@@ -22,12 +22,11 @@ from .schema_io import parquet_schema
 
 # Manifest-digest format version, embedded in every snapshot id. Changing
 # what feeds the digest (e.g. the r3 move from whole-second to nanosecond
-# mtimes) silently changes ids for UNCHANGED directories, which would make
-# pre-upgrade commits unreachable: a resume would compute a fresh
-# snapshot_id, find zero done groups, and re-encode everything into the
-# same out_dir — the multi-generation layout the decode path then has to
-# disambiguate. Versioning the id lets EncodeJob.run() detect the format
-# mismatch and refuse with a migration message instead (plans/lineage.py).
+# mtimes) changes the ids of UNCHANGED directories; the version prefix keeps
+# ids of different formats from ever being equal. Every commit marker
+# postdates "m2", and an id of another format is just another generation:
+# a resume under a new id re-encodes into a new generation, and decode
+# picks one generation (driver.py), never a splice of two.
 DIGEST_VERSION = "m2"
 
 

@@ -50,6 +50,10 @@ from pyspark.sql import DataFrame, SparkSession
 # local[32]: k=32 → 1.6-6.3 s (unstable), k=16 → 1.37-1.40 s,
 # k=8 → 1.74-1.89 s.
 _MAX_SLICES_PER_FILE = 16
+# rows per pyarrow batch of a slice read: one default encode chunk
+# (operators.encode.DEFAULT_CHUNK_ROWS), so the encode kernel flushes a
+# full chunk per batch at the default size
+_BATCH_ROWS = 65536
 
 
 def _file_rows(path: str) -> int:
@@ -101,7 +105,7 @@ def _slice_assignments(
     ]
 
 
-def _read_slices(slices, names, target, batch_rows) -> Iterator[pa.RecordBatch]:
+def _read_slices(slices, names, target) -> Iterator[pa.RecordBatch]:
     import pyarrow.parquet as pq
 
     for fpath, start, want in slices:
@@ -112,7 +116,7 @@ def _read_slices(slices, names, target, batch_rows) -> Iterator[pa.RecordBatch]:
         # be decompressed anyway (no page index), but the iterator stops
         # as soon as the slice is exhausted
         for rb in pf.iter_batches(
-            batch_size=batch_rows, columns=names, use_threads=False
+            batch_size=_BATCH_ROWS, columns=names, use_threads=False
         ):
             lo = max(start, pos)
             hi = min(end, pos + rb.num_rows)
@@ -137,7 +141,6 @@ def parallel_scan_encode(
     chunk_rows: int,
     chunk_bytes: int | None = None,
     n_slices: int | None = None,
-    batch_rows: int = 65536,
 ) -> DataFrame:
     """Fused read+encode over row-range slices: each task reads its slice
     with pyarrow and runs the ungrouped encode kernel on it IN THE SAME
@@ -170,7 +173,7 @@ def parallel_scan_encode(
         for b in batches:
             slices = [assignments[i] for i in b.column(0).to_pylist()]
             yield from encode_batches(
-                _read_slices(slices, names, target, batch_rows),
+                _read_slices(slices, names, target),
                 chunk_rows,
                 chunk_bytes,
             )

@@ -325,13 +325,37 @@ def test_uncommitted_run_is_invisible_to_decode_and_verify(spark, tmp_path, caps
     capsys.readouterr()
 
 
+def test_hand_id_and_catalog_id_runs_of_one_job_both_commit(spark, tmp_path, capsys):
+    """A run under a hand-assigned snapshot id and a later CLI run under
+    the catalog's id, both with the default job_id, are two generations of
+    one out_dir: both commit, and a CLI decode picks the later one."""
+    from parquet2csv_spark.plans.lineage import EncodeJob, generations
+
+    src = str(tmp_path / "src")
+    _write_src(spark, src)
+    srcdf = spark.read.parquet(src)
+    out = str(tmp_path / "enc")
+    hand = EncodeJob(spark, out, snapshot_id="0123456789abcdef")
+    assert hand.run(srcdf.limit(7))["rows"] == 7
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "encode", "--input", src, "--out", out]) == 0
+    catalog_id = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["snapshot_id"]
+    assert sorted(g["snapshot_id"] for g in generations(spark, out)) == \
+        sorted(["0123456789abcdef", catalog_id])
+    dec = str(tmp_path / "dec")
+    assert driver.main(stop_session=False, argv=[
+        "--cpus", "4", "decode", "--chunks", out, "--schema-json", f"{out}/schema.json",
+        "--out", dec]) == 0
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["snapshot_id"] == catalog_id
+    assert multiset_diff(srcdf, spark.read.parquet(dec)).count() == 0
+
+
 def test_pre_marker_out_dir_is_refused_by_encode_decode_verify(spark, tmp_path, capsys):
     """An out_dir written before commit markers (a lineage/ parquet table,
     no commits/) cannot prove which runs are committed: encode, decode and
     verify all raise a migration error instead of reading it as empty."""
     import pytest
-
-    from parquet2csv_spark.plans.lineage import LINEAGE_SCHEMA
 
     src = str(tmp_path / "src")
     _write_src(spark, src)
@@ -344,7 +368,10 @@ def test_pre_marker_out_dir_is_refused_by_encode_decode_verify(spark, tmp_path, 
     shutil.rmtree(os.path.join(out, "commits"))
     spark.createDataFrame(
         [("s", "encode", "r", "g", 1, 1, 1, 1, 1, "plain", "done", None, None)],
-        LINEAGE_SCHEMA,
+        "snapshot_id string, job_id string, run_id string, group_key string, "
+        "n_chunks bigint, n_rows bigint, raw_bytes bigint, enc_bytes bigint, "
+        "wall_ms bigint, codecs string, status string, committed_at timestamp, "
+        "params string",
     ).write.parquet(os.path.join(out, "lineage"))
     for argv in (
         ["encode", "--input", src, "--out", out],

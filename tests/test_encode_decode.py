@@ -773,7 +773,8 @@ def test_bloom_multibyte_prefix_agreement_no_false_negative():
 
 
 # the chunks layout as the hand-written DDL that described it before the
-# Spark schema was derived from CHUNKS_ARROW
+# Spark schema was derived from CHUNKS_ARROW (and before the per-chunk
+# ``wall_ms`` encode time left the chunk rows)
 _LEGACY_CHUNKS_DDL = (
     "chunk_id string, group_key string, seq bigint, n_rows bigint, "
     "raw_bytes bigint, enc_bytes bigint, wall_ms bigint, "
@@ -786,21 +787,22 @@ _LEGACY_CHUNKS_DDL = (
 
 def test_derived_chunks_schema_equals_the_legacy_ddl_and_reads_its_dirs(spark, tmp_path):
     """CHUNKS_SCHEMA, derived from CHUNKS_ARROW, is the layout the DDL
-    declared; a chunks dir written under the DDL reads back with it and
-    decodes to the source."""
+    declared minus ``wall_ms``; a chunks dir written under the DDL reads
+    back with it and decodes to the source."""
     from pyspark.sql.types import StructType
 
     from parquet2csv_spark.operators.encode import CHUNKS_SCHEMA
 
     legacy = StructType.fromDDL(_LEGACY_CHUNKS_DDL)
-    assert CHUNKS_SCHEMA == legacy
+    assert CHUNKS_SCHEMA == StructType([f for f in legacy.fields if f.name != "wall_ms"])
     src = spark.createDataFrame(
         [(i, f"s{i % 7}", None if i % 5 else 1.5 * i) for i in range(300)],
         "id long, s string, x double",
     )
     old_dir = str(tmp_path / "legacy_chunks")
-    rows = encode_table(src, chunk_rows=64).collect()
+    rows = [{**r.asDict(), "wall_ms": 1} for r in encode_table(src, chunk_rows=64).collect()]
     spark.createDataFrame(rows, legacy).write.parquet(old_dir)
+    assert spark.read.parquet(old_dir).schema.fieldNames() == legacy.fieldNames()
     back = spark.read.schema(CHUNKS_SCHEMA).parquet(old_dir)
     assert back.count() == len(rows)
     assert multiset_diff(src, decode_table(back, src.schema)).count() == 0

@@ -21,17 +21,13 @@ N_ROWS = 6000
 _SUMMARY = ("groups_done", "rows", "raw_bytes", "enc_bytes")
 
 
-def _summary_from_lineage(job):
-    """The run summary's totals as a post-commit lineage re-read of this
-    (snapshot, job)'s done rows computes them."""
-    row = (
-        job.lineage()
-        .filter((F.col("snapshot_id") == job.snapshot_id)
-                & (F.col("job_id") == job.job_id) & (F.col("status") == "done"))
-        .agg(F.count("*").alias("groups_done"), F.sum("n_rows").alias("rows"),
-             F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"))
-        .first()
-    )
+def _summary_from_chunks(job):
+    """The run summary's totals as an aggregate of this (snapshot, job)'s
+    committed chunks computes them."""
+    row = job.chunks().agg(
+        F.count_distinct("group_key").alias("groups_done"), F.sum("n_rows").alias("rows"),
+        F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"),
+    ).first()
     return row.asDict()
 
 
@@ -77,17 +73,14 @@ def test_resume_encodes_only_missing_groups(spark, corpus, tmp_path_factory):
     # simulated crash: first run commits only groups whose key contains '3'
     r1 = job.run(corpus, only_groups_like="3")
     assert 0 < r1["groups_done"] and r1["rows"] < N_ROWS
-    assert _totals(r1) == _summary_from_lineage(job)
+    assert _totals(r1) == _summary_from_chunks(job)
 
     # second run completes the rest; first-run groups must NOT be re-encoded
     r2 = job.run(corpus)
-    assert _totals(r2) == _summary_from_lineage(job)
+    assert _totals(r2) == _summary_from_chunks(job)
     assert r2["rows"] == N_ROWS and r2["groups_done"] > r1["groups_done"]
-    lin = job.lineage()
-    assert lin.filter(F.col("run_id") == r2["run_id"]).join(
-        lin.filter(F.col("run_id") == r1["run_id"]).select("group_key"),
-        on="group_key",
-    ).count() == 0
+    assert job.runs() == sorted([r1["run_id"], r2["run_id"]])
+    assert not _groups_of_run(spark, out, r1["run_id"]) & _groups_of_run(spark, out, r2["run_id"])
 
     # decode from committed chunks = bit-identical corpus
     dec = decode_table(job.chunks(), CORPUS_DDL)
@@ -96,28 +89,36 @@ def test_resume_encodes_only_missing_groups(spark, corpus, tmp_path_factory):
     # a third run is a no-op (fully committed)
     done_before = job.done_groups().count()
     r3 = job.run(corpus)
-    assert job.lineage().filter(F.col("run_id") == r3["run_id"]).count() == 0
+    assert r3["run_id"] not in job.runs()
     assert job.done_groups().count() == done_before
 
 
 def test_lineage_records_metrics(spark, corpus, tmp_path_factory):
+    """A run's record is its marker (totals, params, commit time); the
+    per-group figures are aggregates of its committed chunks."""
     out = str(tmp_path_factory.mktemp("job2"))
     job = EncodeJob(spark, out, snapshot_id="snapA", chunk_rows=2048)
-    job.run(corpus)
-    lin = job.lineage()
-    row = lin.orderBy(F.desc("raw_bytes")).first()
-    assert row["status"] == "done"
+    summary = job.run(corpus)
+    [gen] = generations(spark, out)
+    assert (gen["snapshot_id"], gen["job_id"], gen["runs"]) == ("snapA", "encode", [summary["run_id"]])
+    assert gen["params"] == job.params and gen["committed_at"] is not None
+    assert gen["rows"] == N_ROWS and gen["groups"] == summary["groups_done"]
+    row = (
+        job.chunks().groupBy("run", "group_key")
+        .agg(F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"),
+             F.array_distinct(F.flatten(F.collect_list("cols.codec"))).alias("codecs"))
+        .orderBy(F.desc("raw_bytes")).first()
+    )
+    assert row["run"] == summary["run_id"]
     assert row["raw_bytes"] > 0 and row["enc_bytes"] > 0
-    assert row["wall_ms"] >= 0
-    assert row["codecs"]  # codec tags recorded per group
-    assert row["committed_at"] is not None
+    assert row["codecs"]  # codec tags recorded per column of every chunk
 
 
 def test_salting_caps_group_bytes(spark, corpus):
     """One repo holds >35% of rows; post-salting no group may exceed
     the target group size by more than one max-row overshoot."""
     chunk_bytes = 1 << 20
-    salted = salt_groups(corpus, ["repo"], ["path", "commit"], chunk_bytes=chunk_bytes, group_factor=1)
+    salted = salt_groups(corpus, ["repo"], ["path", "commit"], chunk_bytes=chunk_bytes)
     sizes = (
         salted.groupBy("_gk")
         .agg(F.sum(F.coalesce(F.octet_length("content"), F.lit(0)) + 64).alias("gbytes"))
@@ -180,13 +181,12 @@ def test_resume_refuses_changed_salting_params(spark, corpus, tmp_path_factory):
     refuse instead."""
     out = str(tmp_path_factory.mktemp("params_job"))
     EncodeJob(spark, out, snapshot_id="s1", chunk_rows=1024, chunk_bytes=1 << 20).run(corpus)
-    clashing = EncodeJob(spark, out, snapshot_id="s1", chunk_rows=1024,
-                         chunk_bytes=1 << 20, group_factor=2)
+    clashing = EncodeJob(spark, out, snapshot_id="s1", chunk_rows=1024, chunk_bytes=1 << 19)
     with pytest.raises(RuntimeError, match="params"):
         clashing.run(corpus)
     # a different job_id is fine
     EncodeJob(spark, out, snapshot_id="s1", job_id="other", chunk_rows=1024,
-              chunk_bytes=1 << 20, group_factor=2).run(corpus)
+              chunk_bytes=1 << 19).run(corpus)
 
 
 def test_chunks_dedupe_never_shuffles_frame_payloads(spark, corpus, tmp_path_factory):
@@ -243,24 +243,6 @@ def test_double_committed_group_resolves_to_single_run(spark, corpus, tmp_path_f
     assert got2.groupBy("chunk_id").count().filter("count > 1").count() == 0
     assert got2.select("run").distinct().count() == 1
     assert multiset_diff(corpus, decode_table(got2, CORPUS_DDL)).count() == 0
-
-
-def test_digest_format_migration_refused(spark, corpus, tmp_path_factory):
-    """ADVICE r3: lineage committed under an older manifest-digest format
-    must not silently reset resume state (the same unchanged input hashes
-    to a new id → zero done groups → full re-encode into the same out_dir).
-    run() detects the version mismatch and refuses."""
-    out = str(tmp_path_factory.mktemp("digest_job"))
-    old = EncodeJob(spark, out, snapshot_id="0123456789abcdef",  # pre-versioned id
-                    chunk_rows=1024, chunk_bytes=1 << 20)
-    old.run(corpus)
-    new = EncodeJob(spark, out, snapshot_id="m2-0123456789abcdef",
-                    chunk_rows=1024, chunk_bytes=1 << 20)
-    with pytest.raises(RuntimeError, match="manifest-digest"):
-        new.run(corpus)
-    # a fresh job_id under the new format is allowed
-    EncodeJob(spark, out, snapshot_id="m2-0123456789abcdef", job_id="fresh",
-              chunk_rows=1024, chunk_bytes=1 << 20).run(corpus)
 
 
 def test_chunks_survive_numeric_looking_run_ids(spark, corpus, tmp_path_factory):
@@ -353,13 +335,13 @@ def test_missing_lineage_reads_empty_without_tasks(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("no_lineage"))
     job = EncodeJob(spark, out, snapshot_id="snapE")
     with _job_group(spark, "test-missing-lineage") as jobs:
-        rows = job.lineage().collect()
-        gens = job.lineage().groupBy("snapshot_id", "job_id").count().collect()
+        rows = job.chunks().collect()
+        gens = generations(spark, out)
         done = job.done_groups().collect()
     assert rows == [] and gens == [] and done == []
     assert sum(n for _, _, n, _ in jobs) == 0, jobs
-    assert job.lineage().rdd.getNumPartitions() == 0
-    assert job.lineage().count() == 0
+    assert job.chunks().rdd.getNumPartitions() == 0
+    assert job.chunks().count() == 0
 
 
 def test_lineage_with_only_temporary_dir_resumes_empty(spark, corpus, tmp_path_factory):
@@ -413,8 +395,7 @@ def test_corrupt_marker_raises_naming_the_file(spark, corpus, tmp_path_factory):
     with pytest.raises(ValueError, match="0badc0ffee00.json"):
         job.run(corpus)
     assert not os.path.exists(os.path.join(out, "chunks"))
-    for read in (job.runs, job.chunks, job.lineage,
-                 lambda: generations(spark, out)):
+    for read in (job.runs, job.chunks, lambda: generations(spark, out)):
         with pytest.raises(ValueError, match="0badc0ffee00.json"):
             read()
 
@@ -431,7 +412,7 @@ def test_uncommitted_run_is_invisible_and_reencoded_exactly(spark, corpus, tmp_p
     assert job.runs() == [first["run_id"]]
     visible = {r["group_key"] for r in job.chunks().select("group_key").collect()}
     assert visible == _groups_of_run(spark, out, first["run_id"])
-    assert job.lineage().filter(F.col("run_id") == lost["run_id"]).count() == 0
+    assert {r["run"] for r in job.chunks().select("run").distinct().collect()} == {first["run_id"]}
     [gen] = generations(spark, out)
     assert (gen["runs"], gen["rows"]) == ([first["run_id"]], first["rows"])
 
@@ -490,12 +471,12 @@ def test_run_summary_counts_only_its_own_job(spark, tmp_path_factory):
     a = EncodeJob(spark, out, snapshot_id="snapJ", job_id="a", chunk_rows=256)
     ra = a.run(src)
     assert ra["rows"] == 400
-    assert _totals(ra) == _summary_from_lineage(a)
+    assert _totals(ra) == _summary_from_chunks(a)
     one = src.orderBy("path", "commit").limit(1)
     b = EncodeJob(spark, out, snapshot_id="snapJ", job_id="b", chunk_rows=256)
     rb = b.run(one)
     assert (rb["groups_done"], rb["rows"]) == (1, 1)
-    assert _totals(rb) == _summary_from_lineage(b)
+    assert _totals(rb) == _summary_from_chunks(b)
 
 
 def test_run_on_a_finished_out_dir_reports_the_committed_totals(spark, tmp_path_factory):
@@ -509,55 +490,49 @@ def test_run_on_a_finished_out_dir_reports_the_committed_totals(spark, tmp_path_
     again = job.run(src)
     assert _totals(again) == _totals(first)
     assert first["rows"] == 300 and again["run_id"] != first["run_id"]
-    assert job.lineage().filter(F.col("run_id") == again["run_id"]).count() == 0
+    assert job.runs() == [first["run_id"]]
 
 
-def test_commit_aggregate_matches_the_stats_codecs_join(spark, tmp_path_factory):
-    """The lineage view's one ``groupBy(run, group_key)`` over the committed
-    chunk metadata yields the rows the earlier two aggregates and their join
-    wrote, on an input whose groups pick different codec sets; its scan
-    reads each column's codec tag and never the frames."""
-    from parquet2csv_spark.operators.encode import CHUNKS_SCHEMA
+def _run_rows(spark, out, run_id):
+    """Every column of a run's chunk files, as written, ordered by chunk id."""
+    return spark.read.parquet(os.path.join(out, "chunks", f"run={run_id}")) \
+        .orderBy("chunk_id").collect()
 
-    # codec choices are cached per column and 4x row-count band, so the
-    # groups differ in size as well as in content (short distinct texts,
-    # word salad, all-null strings)
-    words = ("lorem", "ipsum", "dolor", "sit", "amet", "consectetur")
 
-    def text(g, i):
-        if g == 1:
-            return " ".join(words[(i * 7 + k * k) % 6] for k in range(30))
-        return None if g == 2 else f"text {i} {'x' * (i % 37)}"
+def test_two_encodes_of_one_input_write_identical_chunk_rows(spark, corpus, tmp_path_factory):
+    """Chunk files are a pure function of the input and the slot count: two
+    fresh runs into two out_dirs write equal chunk rows in every column (no
+    per-chunk clock), so stored bytes repeat exactly."""
+    runs = []
+    for name in ("det_a", "det_b"):
+        out = str(tmp_path_factory.mktemp(name))
+        job = EncodeJob(spark, out, snapshot_id="snapD", chunk_rows=1024, chunk_bytes=1 << 20)
+        runs.append(_run_rows(spark, out, job.run(corpus)["run_id"]))
+    a, b = runs
+    assert len(a) > 1 and a[0].__fields__ == b[0].__fields__
+    assert a == b
 
-    rows = [(i, f"r{g}", f"p{i:05d}", 7 if g == 0 else i * 1009, text(g, i))
-            for g, n in enumerate((700, 150, 30)) for i in range(n)]
-    src = spark.createDataFrame(rows, "id long, repo string, path string, n long, s string")
-    out = str(tmp_path_factory.mktemp("commit_agg"))
-    job = EncodeJob(spark, out, snapshot_id="snapM", order_cols=["path"])
-    run_id = job.run(src)["run_id"]
 
-    written = spark.read.schema(CHUNKS_SCHEMA).parquet(f"{out}/chunks/run={run_id}")
-    stats = written.groupBy("group_key").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.sum("wall_ms").alias("wall_ms"),
-    )
-    codecs = (
-        written.select("group_key", F.explode("cols").alias("c"))
-        .groupBy("group_key")
-        .agg(F.concat_ws(",", F.sort_array(F.collect_set("c.codec"))).alias("codecs"))
-    )
-    cols = ["group_key", "n_chunks", "n_rows", "raw_bytes", "enc_bytes", "wall_ms", "codecs"]
-    want = sorted(stats.join(codecs, on="group_key").select(*cols).collect())
-    got = sorted(job.lineage().select(*cols).collect())
-    assert got == want
-    assert len({r["codecs"] for r in got}) > 1, got
+def test_chunk_files_with_the_legacy_wall_ms_column_resume_and_decode(spark, corpus, tmp_path_factory):
+    """An out_dir whose committed chunk files carry the ``wall_ms`` column
+    that earlier encodes wrote is fully committed to a later run (a no-op
+    with the same totals) and decodes to its source, both as an out_dir and
+    as a raw chunks dir."""
+    out = str(tmp_path_factory.mktemp("legacy_wall_ms"))
+    job = EncodeJob(spark, out, snapshot_id="snapL", chunk_rows=1024, chunk_bytes=1 << 20)
+    first = job.run(corpus)
+    run_dir = os.path.join(out, "chunks", f"run={first['run_id']}")
+    new_cols = spark.read.parquet(run_dir).columns
+    legacy = spark.read.parquet(run_dir).withColumn("wall_ms", F.lit(3).cast("bigint")) \
+        .select(*new_cols[:-1], "wall_ms", new_cols[-1])
+    legacy.write.parquet(run_dir + ".legacy")
+    shutil.rmtree(run_dir)
+    os.rename(run_dir + ".legacy", run_dir)
+    assert "wall_ms" in spark.read.parquet(run_dir).columns
 
-    view = job.lineage()
-    plan = view._sc._jvm.PythonSQLUtils.explainString(
-        view._jdf.queryExecution(), "formatted"
-    )
-    read = [line for line in plan.splitlines() if "ReadSchema" in line]
-    assert len(read) == 1 and "codec" in read[0] and "frame" not in read[0], read
+    again = job.run(corpus)
+    assert _totals(again) == _totals(first)
+    assert job.runs() == [first["run_id"]]
+    assert multiset_diff(corpus, decode_table(job.chunks(), CORPUS_DDL)).count() == 0
+    raw = spark.read.parquet(run_dir)
+    assert multiset_diff(corpus, decode_table(raw, CORPUS_DDL)).count() == 0
